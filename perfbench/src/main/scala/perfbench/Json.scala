@@ -1,0 +1,29 @@
+package perfbench
+
+/** Minimal JSON writer for the harness's result and span files: maps,
+  * sequences, strings, booleans, numbers and null. Doubles print with
+  * all their digits; non-finite doubles print as null. */
+object Json {
+  def str(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+}
