@@ -14,18 +14,14 @@ import org.apache.spark.sql.functions._
   *  - empty tokens (consecutive spaces, digit-only, punctuation-only) are
   *    dropped (`maprdeuce.cpp:242`).
   *
-  * All three steps are stock Catalyst expressions (`Split`, `RegExpReplace`,
-  * `Lower`, `Filter`) — they stay inside whole-stage codegen, the filter and
-  * projection push toward the scan, and nothing here is a UDF.
+  * The tokenizer runs as one native Catalyst expression,
+  * `normalized_tokens` (graft.plans.NormalizedTokens): one byte pass inside
+  * whole-stage codegen, not a UDF. A word count over [[words]] (group by
+  * `word`, count) is rewritten by the optimizer rule
+  * graft.plans.FuseTokenCount into one map-side operator, TokenCountsExec,
+  * that runs the same byte loop and counts as it goes.
   */
 object TextPipeline {
-
-  /** Normalize one token column: strip non-letters, lowercase. */
-  def normalize(tok: Column): Column =
-    lower(regexp_replace(tok, "[^a-zA-Z]", ""))
-
-  /** Split a text column on the literal single space (regex-safe as-is). */
-  def tokens(text: Column): Column = split(text, " ", -1)
 
   /** One row per normalized non-empty word of `textCol`.
     * Output: single column `word`. Other input columns are dropped unless

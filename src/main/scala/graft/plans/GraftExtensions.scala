@@ -26,11 +26,22 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   *    see TopKMin);
   *  - `hll_det(BIGINT) -> ARRAY<INT>` (deterministic HyperLogLog
   *    registers over 32-bit hashes — fixed 256-byte state, oracle-
-  *    verifiable estimate, see HllDet).
+  *    verifiable estimate, see HllDet);
+  *  - `nfc(STRING) -> STRING` (Unicode NFC, see NfcNormalize);
+  *  - `normalized_tokens(STRING) -> ARRAY<STRING>` (the reference
+  *    tokenizer in one byte pass, see NormalizedTokens);
+  *  - `h32(STRING) -> BIGINT` and `h60(STRING) -> BIGINT` (portable
+  *    md5-prefix hashes, see H32);
+  *  - the optimizer rule [[FuseTokenCount]] and the planner strategy
+  *    [[TokenCountsStrategy]]: word count over `normalized_tokens` runs
+  *    as one map-side operator, TokenCountsExec.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.registrations.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => FuseTokenCount)
+    ext.injectPlannerStrategy(_ => TokenCountsStrategy)
+  }
 }
 
 object GraftExtensions {
@@ -73,12 +84,21 @@ object GraftExtensions {
       arity("normalized_tokens", 1)(c => NormalizedTokens(c(0)))),
     (FunctionIdentifier("h32"), H32.info,
       arity("h32", 1)(c => H32(c(0)))),
+    (FunctionIdentifier("h60"), H60.info,
+      arity("h60", 1)(c => H60(c(0)))),
   )
 
-  /** Install the same functions on an already-built session (for hosts
-    * that didn't pass `spark.sql.extensions` at build time). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Install the same functions, rule and strategy on an already-built
+    * session (for hosts that didn't pass `spark.sql.extensions` at build
+    * time). Idempotent: a second call adds nothing. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
     registrations.foreach { case (name, info, builder) =>
       org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, info, builder)
     }
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    if (!exp.extraOptimizations.contains(FuseTokenCount))
+      exp.extraOptimizations = exp.extraOptimizations :+ FuseTokenCount
+    if (!exp.extraStrategies.contains(TokenCountsStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ TokenCountsStrategy
+  }
 }

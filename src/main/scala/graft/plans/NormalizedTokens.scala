@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the reference tokenizer
@@ -33,7 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order lambdas per row and compiles a regex state machine per
   * token; tokenization is the dominant per-task cost of the text tier
   * (~60 queries read it, most more than once). The kernel is one
-  * allocation-bounded byte scan inside whole-stage codegen. The DuckDB
+  * allocation-bounded byte scan inside whole-stage codegen; the loop
+  * itself is [[NormalizedTokens.scan]], shared with the fused word-count
+  * operator TokenCountsExec. The DuckDB
   * oracle keeps its own spelling (TextPipeline.duckToks), so the
   * byte-equivalence argument above is re-proven by the 288-query hash
   * gate on every verify run.
@@ -52,40 +55,86 @@ case class NormalizedTokens(child: Expression) extends UnaryExpression {
         s"$prettyName requires STRING, got ${other.simpleString}")
     }
 
-  override def nullSafeEval(input: Any): Any =
-    NormalizedTokens.toks(input.asInstanceOf[UTF8String])
+  // one builder per expression instance: its token buffer is reused
+  // across rows (interpreted path); codegen keeps its own as class state
+  @transient private lazy val builder = new TokenArrayBuilder
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NormalizedTokens.toks($c)")
+  override def nullSafeEval(input: Any): Any =
+    builder.toks(input.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val b = ctx.addMutableState(classOf[TokenArrayBuilder].getName, "tokArray",
+      v => s"$v = new ${classOf[TokenArrayBuilder].getName}();")
+    defineCodeGen(ctx, ev, c => s"$b.toks($c)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): NormalizedTokens =
     copy(child = newChild)
 }
 
-object NormalizedTokens {
-  /** One pass over the UTF-8 bytes; token buffer reused, bytes copied
-    * out per surviving token. */
+/** Receiver of the tokens [[NormalizedTokens.scan]] finds. The token
+  * buffer belongs to the sink and is reused across tokens and rows; it
+  * grows only when a token is longer than any seen before. */
+abstract class TokenSink {
+  private[plans] var buf: Array[Byte] = new Array[Byte](32)
+
+  /** One non-empty normalized token, held in `buf(0 until len)` and valid
+    * only until this call returns. */
+  def token(buf: Array[Byte], len: Int): Unit
+}
+
+/** The array form: one `ARRAY<STRING>` per row, one allocation per token. */
+final class TokenArrayBuilder extends TokenSink {
+  private val out = new java.util.ArrayList[UTF8String]()
+
+  def token(buf: Array[Byte], len: Int): Unit =
+    out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len)))
+
   def toks(s: UTF8String): ArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    val out = new java.util.ArrayList[UTF8String]()
-    val buf = new Array[Byte](n)
+    out.clear()
+    NormalizedTokens.scan(s, this)
+    new GenericArrayData(out.toArray(new Array[UTF8String](out.size)))
+  }
+}
+
+object NormalizedTokens {
+  /** Byte -> its normalized letter (`[A-Z]` lowered, `[a-z]` kept), or 0
+    * for a byte the normalization deletes. */
+  private val Letter: Array[Byte] = Array.tabulate[Byte](256) { b =>
+    if (b >= 'a' && b <= 'z') b.toByte
+    else if (b >= 'A' && b <= 'Z') (b + 32).toByte
+    else 0
+  }
+
+  /** THE tokenizer loop (SURVEY.md §2.3), shared by the array kernel and
+    * the fused word-count operator (TokenCountsExec): one pass over the
+    * UTF-8 bytes in place (no copy of the line), handing each non-empty
+    * normalized token to `sink`. */
+  def scan(s: UTF8String, sink: TokenSink): Unit = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var buf = sink.buf
     var bl = 0
     var i = 0
-    while (i <= n) {
-      if (i == n || bytes(i) == 0x20) {
-        if (bl > 0) {
-          out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, bl)))
-          bl = 0
-        }
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (b == 0x20) {
+        if (bl > 0) { sink.token(buf, bl); bl = 0 }
       } else {
-        val b = bytes(i)
-        if (b >= 'a' && b <= 'z') { buf(bl) = b; bl += 1 }
-        else if (b >= 'A' && b <= 'Z') { buf(bl) = (b + 32).toByte; bl += 1 }
+        val c = Letter(b & 0xff)
+        if (c != 0) {
+          if (bl == buf.length) {
+            buf = java.util.Arrays.copyOf(buf, bl * 2)
+            sink.buf = buf
+          }
+          buf(bl) = c
+          bl += 1
+        }
       }
       i += 1
     }
-    new GenericArrayData(out.toArray(new Array[UTF8String](out.size)))
+    if (bl > 0) sink.token(buf, bl)
   }
 
   val info: ExpressionInfo =

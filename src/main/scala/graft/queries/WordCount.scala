@@ -14,14 +14,18 @@ import graft.io.Tables
   * the same input (FIXTURES.md §B note).
   *
   * Physical plan this lowers to (verified via `.explain("formatted")`):
-  * parquet scan (only `text` read) → Project/Generate(Explode)/Filter →
+  * parquet scan (only `text` read) → TokenCountsExec →
   * HashAggregate(Partial) → Exchange hashpartitioning(word) →
   * HashAggregate(Final) → Exchange rangepartitioning(word) → Sort. The
-  * partial aggregate IS the reference's "middle reduce" combiner
-  * (`maprdeuce.cpp:706-711`); the range-partitioned sort IS its cascade
-  * external merge (`maprdeuce.cpp:334-426`) — both built in, both spill-safe
-  * at 100 TB (UnsafeExternalSorter), and the map-side combine means shuffle
-  * volume is O(distinct words per partition), not O(tokens).
+  * reference's "middle reduce" combiner (`maprdeuce.cpp:706-711`) lives in
+  * TokenCountsExec: the optimizer rule graft.plans.FuseTokenCount replaces
+  * the explode-then-count pair with one map-side operator that tokenizes
+  * each line in place and emits one `(word, partial count)` row per
+  * distinct word; the partial aggregate above it only sums those partials.
+  * The range-partitioned sort IS the reference's cascade external merge
+  * (`maprdeuce.cpp:334-426`), spill-safe at 100 TB (UnsafeExternalSorter),
+  * and the map-side combine means shuffle volume is O(distinct words per
+  * partition), not O(tokens).
   */
 object WordCount {
 

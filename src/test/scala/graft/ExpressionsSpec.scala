@@ -316,6 +316,8 @@ class ExpressionsSpec extends SparkSpec {
     GraftExtensions.install(spark)
     assert(spark.sql("SELECT h32('abc') AS h").collect()(0).getLong(0) ==
       java.lang.Long.parseLong("900150983cd24fb0".take(8), 16))
+    assert(spark.sql("SELECT h60('abc') AS h").collect()(0).getLong(0) ==
+      java.lang.Long.parseLong("900150983cd24fb0".take(15), 16))
   }
 
   test("kernels are null-safe (null input -> null output)") {

@@ -10,21 +10,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  // One session for the whole test JVM — suites share it.
-  lazy val session: SparkSession = {
-    // same locale contract as GraftSession.local (q_unicode_tokens
-    // lowercases non-ASCII text; default-locale lower() would diverge
-    // from the oracle on tr/az/lt hosts)
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.io.Tables.EventsNanosConf._1, graft.io.Tables.EventsNanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // One session for the whole test JVM — suites share it. It is the
+  // shipped session (GraftSession.local), so the tests run under the same
+  // configuration, functions, optimizer rule and planner strategy as
+  // Verify / Bench / Smoke.
+  lazy val session: SparkSession = GraftSession.local(4, "graft-test")
 }
