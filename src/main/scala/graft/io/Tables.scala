@@ -1,8 +1,11 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
+/** Loaders for the generated parquet fixtures (TESTDATA.md), and
+  * the write/read pair for the scratch artifacts the queries persist
+  * between stages (index stores, sketch stores, snapshot generations).
   *
   * One accessor per table; every query takes `sfDir` (the per-scale-factor
   * directory) so the same plan runs at sf0.001 (smoke), sf0.01 (oracle) and
@@ -13,32 +16,53 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cache here (caller decides) and never collect.
   */
 object Tables {
-  /** Per-path inferred-schema cache (r14 optimization, guide §1.2 "don't
-    * compute things you throw away"): a bare `spark.read.parquet(path)`
-    * re-infers the schema from parquet footers on EVERY call — driver-side
-    * work a catalog-backed production deployment never repays per query.
-    * The schema of a fixture path is immutable for the life of a JVM (the
-    * driver regenerates testdata only between invocations), so infer once
-    * per path and replay it via `.schema(...)`, which skips footer
-    * inference entirely. This caches METADATA only — every query still
-    * scans the parquet data itself; results are bit-identical.
+  /** Per-path schema cache (r14 optimization, guide §1.2 "don't compute
+    * things you throw away"): a bare `spark.read.parquet(path)` infers the
+    * schema from parquet footers on EVERY call — one Spark job
+    * (`mergeSchemasInParallel`) a catalog-backed deployment never repays
+    * per query. [[read]] replays a cached schema via `.schema(...)`, which
+    * skips footer inference entirely. This caches METADATA only — every
+    * query still scans the parquet data itself; results are
+    * bit-identical.
     *
-    * Keyed on (path, root mtime) — r15, ADVICE: an in-JVM rewrite of the
-    * same path with a different schema (fixture-mirror rebuilds, bench
-    * tools regenerating a parquet dir) must not be served the stale
-    * schema. Directory mtime changes on any file add/replace inside it;
-    * the stat is a single driver-side syscall per load, ~10³× cheaper
-    * than the footer inference it guards. */
+    * Two writers fill it: a miss in [[read]] infers once (fixtures, and
+    * paths another process wrote), and [[write]] records the schema of
+    * the frame it just wrote, so an artifact the library persists is never
+    * inferred at all — the format is known, like the reference's fixed
+    * intermediate files. Replay is exact: Spark makes a file schema
+    * nullable on read whether it was given or inferred (TablesSpec pins
+    * `==`).
+    *
+    * One entry per path, valued (root mtime, schema): an in-JVM rewrite of
+    * the same path with a different schema (fixture-mirror rebuilds, bench
+    * tools regenerating a parquet dir) must not be served the stale schema,
+    * and a path rewritten on every call (q_merge_compact's snapshots) must
+    * not grow the map. Directory mtime changes on any file add/replace
+    * inside it; a differing mtime re-infers and replaces the entry. The
+    * stat is a single driver-side syscall per read, ~10³× cheaper than the
+    * footer inference it guards. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val mtime = new java.io.File(path).lastModified()
-    val sch = schemaCache.computeIfAbsent((path, mtime),
-      { case (p, _) => spark.read.parquet(p).schema })
+  private def mtime(path: String): Long = new java.io.File(path).lastModified()
+
+  /** Parquet at `path` with its cached schema (see [[schemaCache]]). */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val m = mtime(path)
+    val (_, sch) = schemaCache.compute(path, (p, hit) =>
+      if (hit != null && hit._1 == m) hit else (m, spark.read.parquet(p).schema))
     spark.read.schema(sch).parquet(path)
   }
+
+  /** Writes `df` to `path` as unpartitioned parquet (overwrite) and
+    * records its schema, so a later [[read]] starts no inference job. */
+  def write(df: DataFrame, path: String): Unit = {
+    df.write.mode("overwrite").parquet(path)
+    schemaCache.put(path, (mtime(path), df.schema))
+  }
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -169,16 +169,35 @@ object Analytics {
       .filter(col("o_totalprice") > HighValue)
       .select(col("o_orderkey"))
 
+  /** Pre-aggregate Bloom cells of a 1-column `k` key relation: one
+    * (idx, bits) row per key and hash, `bits` holding that hash's single
+    * bit of word `idx` — the bit geometry [[bloomBits]] and
+    * [[bloomMerge]] share. */
+  private def bloomCells(keys: DataFrame): DataFrame =
+    keys.select(explode(bloomHashes(col("k"))).as("h"))
+      .select((col("h") / 64).cast("long").as("idx"),
+        expr("shiftleft(1L, cast(h % 64 as int))").as("bits"))
+
+  /** OR-fold of (idx, bits) rows to one word per idx. */
+  private def bloomFold(cells: DataFrame): DataFrame =
+    cells.groupBy("idx").agg(bit_or(col("bits")).as("bits"))
+
   /** (idx, bits) Bloom-filter rows of a 1-column `k` key relation —
     * ≤ M/64 = 1024 longs, built by a bit_or aggregate: mergeable,
     * partition-order-free, tiny. ONE spelling for the in-plan filter
     * and the persisted store ([[bloomStoreDir]]), so the bit geometry
     * cannot drift between them. */
   private[graft] def bloomBits(keys: DataFrame): DataFrame =
-    keys.select(explode(bloomHashes(col("k"))).as("h"))
-      .select((col("h") / 64).cast("long").as("idx"),
-        expr("shiftleft(1L, cast(h % 64 as int))").as("bitv"))
-      .groupBy("idx").agg(bit_or(col("bitv")).as("bits"))
+    bloomFold(bloomCells(keys))
+
+  /** Stored (idx, bits) words OR-merged with the cells of a delta `k`
+    * key relation in ONE bit_or fold — bit-identical to folding the
+    * delta first and merging after, since OR is associative, but one
+    * shuffle instead of two. */
+  private[graft] def bloomMerge(
+      stored: DataFrame, deltaKeys: DataFrame): DataFrame =
+    bloomFold(stored.select(col("idx"), col("bits"))
+      .unionByName(bloomCells(deltaKeys)))
 
   /** Distinct probe keys surviving a broadcast (idx, bits) Bloom filter
     * (true matches + false positives; never drops a member). */
@@ -232,10 +251,9 @@ object Analytics {
   private[graft] def bloomStoreDir(s: SparkSession, dir: String): String =
     bloomStoreRoots.computeIfAbsent(dir, { d =>
       val root = Ingest.scratchDir("bloomstore", d)
-      bloomBits(highValueKeys(s, d)
+      Tables.write(bloomBits(highValueKeys(s, d)
           .filter(pmod(col("o_orderkey"), lit(4)) =!= 3)
-          .select(col("o_orderkey").as("k")))
-        .write.mode("overwrite").parquet(s"$root/bits_hist.parquet")
+          .select(col("o_orderkey").as("k"))), s"$root/bits_hist.parquet")
       root
     })
 
@@ -261,17 +279,17 @@ object Analytics {
     * false negatives.
     *
     * Scale stance (100 TB): the delta build scans only the arriving
-    * batch and collapses map-side to ≤1024 (idx, bits) rows; the merge
-    * is a 1024-row aggregate; the probe stays a broadcast of 8 KB of
-    * bits against the fact table — no shuffle of the probe side ever. */
+    * batch; its pre-aggregate cells and the ≤1024 stored words go
+    * through ONE bit_or fold ([[bloomMerge]]), whose partial aggregate
+    * collapses each side map-side to ≤1024 rows before the single
+    * shuffle; the probe stays a broadcast of 8 KB of bits against the
+    * fact table — no shuffle of the probe side ever. */
   def qBloomIncremental(s: SparkSession, dir: String): DataFrame = {
     val root = bloomStoreDir(s, dir)
-    val stored = s.read.parquet(s"$root/bits_hist.parquet")
-    val delta = bloomBits(highValueKeys(s, dir)
-      .filter(pmod(col("o_orderkey"), lit(4)) === 3)
-      .select(col("o_orderkey").as("k")))
-    val merged = stored.unionByName(delta)
-      .groupBy("idx").agg(bit_or(col("bits")).as("bits"))
+    val merged = bloomMerge(Tables.read(s, s"$root/bits_hist.parquet"),
+      highValueKeys(s, dir)
+        .filter(pmod(col("o_orderkey"), lit(4)) === 3)
+        .select(col("o_orderkey").as("k")))
     bloomSemiAgg(s, dir, bloomCandidatesFrom(s, dir, merged))
   }
 
@@ -716,9 +734,9 @@ object Analytics {
       val ev = Tables.events(s, d)
         .select(col("ts"), col("user_id"), to_date(col("ts")).as("day"))
       val anchor = ev.agg(date_add(min(col("day")), 21).as("cut"))
-      graft.streaming.Windows.hllDayRegisters(
-          ev.crossJoin(broadcast(anchor)).filter(col("day") < col("cut")))
-        .write.mode("overwrite").parquet(s"$root/day_registers.parquet")
+      Tables.write(graft.streaming.Windows.hllDayRegisters(
+          ev.crossJoin(broadcast(anchor)).filter(col("day") < col("cut"))),
+        s"$root/day_registers.parquet")
       root
     })
 
@@ -738,10 +756,10 @@ object Analytics {
   private[graft] def hllErasedStoreDir(s: SparkSession, dir: String): String =
     hllErasedStoreRoots.computeIfAbsent(dir, { d =>
       val root = Ingest.scratchDir("hllregerase", d)
-      graft.streaming.Windows.hllDayRegisters(
+      Tables.write(graft.streaming.Windows.hllDayRegisters(
           Tables.events(s, d).select(col("ts"), col("user_id"))
-            .filter(!erasedUser(col("user_id"))))
-        .write.mode("overwrite").parquet(s"$root/day_registers.parquet")
+            .filter(!erasedUser(col("user_id")))),
+        s"$root/day_registers.parquet")
       root
     })
 
@@ -778,7 +796,7 @@ object Analytics {
     * store-only cost; nothing here ever needs the erased users again. */
   def qHllStoreErase(s: SparkSession, dir: String): DataFrame = {
     val root = hllErasedStoreDir(s, dir)
-    rollingHllEstimate(s.read.parquet(s"$root/day_registers.parquet"))
+    rollingHllEstimate(Tables.read(s, s"$root/day_registers.parquet"))
       .orderBy("day")
   }
 
@@ -806,7 +824,7 @@ object Analytics {
     * THE reason to keep sketch state instead of distinct user sets. */
   def qHllIncremental(s: SparkSession, dir: String): DataFrame = {
     val root = hllRegisterStoreDir(s, dir)
-    val stored = s.read.parquet(s"$root/day_registers.parquet")
+    val stored = Tables.read(s, s"$root/day_registers.parquet")
     val ev = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), to_date(col("ts")).as("day"))
     val anchor = ev.agg(date_add(min(col("day")), 21).as("cut"))
@@ -847,7 +865,7 @@ object Analytics {
     * event scan, no per-user state; cost is independent of event
     * history like every store-backed rung. */
   def qHllOverlap(s: SparkSession, dir: String): DataFrame =
-    hllOverlapFrom(s.read.parquet(
+    hllOverlapFrom(Tables.read(s,
       s"${hllRegisterStoreDir(s, dir)}/day_registers.parquet"))
 
   /** Core of [[qHllOverlap]] over any (day, regs) register table —
@@ -1023,10 +1041,10 @@ object Analytics {
     cmsStoreRoots.computeIfAbsent(dir, { d =>
       val root = Ingest.scratchDir("cmsstore", d)
       val docs = Tables.documents(s, d)
-      cmsSketch(cmsKeyCounts(docs.filter(pmod(col("doc_id"), lit(4)) =!= 3)))
-        .write.mode("overwrite").parquet(s"$root/sketch_hist.parquet")
-      cmsSketch(cmsKeyCounts(docs))
-        .write.mode("overwrite").parquet(s"$root/sketch_full.parquet")
+      Tables.write(
+        cmsSketch(cmsKeyCounts(docs.filter(pmod(col("doc_id"), lit(4)) =!= 3))),
+        s"$root/sketch_hist.parquet")
+      Tables.write(cmsSketch(cmsKeyCounts(docs)), s"$root/sketch_full.parquet")
       root
     })
 
@@ -1041,7 +1059,7 @@ object Analytics {
     * re-scanning history. */
   def qCmsIncremental(s: SparkSession, dir: String): DataFrame = {
     val root = cmsStoreDir(s, dir)
-    val stored = s.read.parquet(s"$root/sketch_hist.parquet")
+    val stored = Tables.read(s, s"$root/sketch_hist.parquet")
     val docs = Tables.documents(s, dir)
     val delta = cmsSketch(
       cmsKeyCounts(docs.filter(pmod(col("doc_id"), lit(4)) === 3)))
@@ -1082,7 +1100,7 @@ object Analytics {
     * production erase path. */
   def qCmsErase(s: SparkSession, dir: String): DataFrame = {
     val root = cmsStoreDir(s, dir)
-    val full = s.read.parquet(s"$root/sketch_full.parquet")
+    val full = Tables.read(s, s"$root/sketch_full.parquet")
     val docs = Tables.documents(s, dir)
     val negated = cmsSketch(
         cmsKeyCounts(docs.filter(cmsErasedDoc(col("doc_id")))))

@@ -898,10 +898,10 @@ object Dedup {
     * control, so build and rebuild cannot drift. */
   private[graft] def writeDedupIndex(s: SparkSession, d: String,
       keep: Column, root: String): Unit = {
-    TextAnalysis.winnowFps(s, d).filter(keep)
-      .write.mode("overwrite").parquet(s"$root/postings.parquet")
-    hashedStore(shingled(s, d).filter(keep))
-      .write.mode("overwrite").parquet(s"$root/shingles.parquet")
+    Tables.write(TextAnalysis.winnowFps(s, d).filter(keep),
+      s"$root/postings.parquet")
+    Tables.write(hashedStore(shingled(s, d).filter(keep)),
+      s"$root/shingles.parquet")
   }
 
   private[graft] def dedupIndexDir(s: SparkSession, dir: String): String =
@@ -948,8 +948,8 @@ object Dedup {
   private[graft] def probeDedupIndex(s: SparkSession, dir: String,
       root: String, live: Column = lit(true),
       batch: Column = col("doc_id") % 2 === 1): DataFrame = {
-    val idxFps = s.read.parquet(s"$root/postings.parquet")
-    val idxSs = s.read.parquet(s"$root/shingles.parquet")
+    val idxFps = Tables.read(s, s"$root/postings.parquet")
+    val idxSs = Tables.read(s, s"$root/shingles.parquet")
     val batchFps = TextAnalysis.winnowFps(s, dir)
       .filter(batch && live)
       // 3 consumers: vs-index join + both batch-internal sides
@@ -1011,12 +1011,10 @@ object Dedup {
     dedupErasedRoots.computeIfAbsent(dir, { d =>
       val src = dedupIndexDir(s, d)
       val root = Ingest.scratchDir("dedupindexerase", d)
-      s.read.parquet(s"$src/postings.parquet")
-        .filter(!erasedDoc(col("doc_id")))
-        .write.mode("overwrite").parquet(s"$root/postings.parquet")
-      s.read.parquet(s"$src/shingles.parquet")
-        .filter(!erasedDoc(col("doc_id")))
-        .write.mode("overwrite").parquet(s"$root/shingles.parquet")
+      Tables.write(Tables.read(s, s"$src/postings.parquet")
+        .filter(!erasedDoc(col("doc_id"))), s"$root/postings.parquet")
+      Tables.write(Tables.read(s, s"$src/shingles.parquet")
+        .filter(!erasedDoc(col("doc_id"))), s"$root/shingles.parquet")
       root
     })
 
@@ -1088,10 +1086,10 @@ object Dedup {
     * generation's parquet so the gates check the physical tables. */
   private def artifactSummary(s: SparkSession, root: String,
       keep: Column): DataFrame = {
-    val fps = s.read.parquet(s"$root/postings.parquet").filter(keep)
+    val fps = Tables.read(s, s"$root/postings.parquet").filter(keep)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_fps"))
-    val ss = s.read.parquet(s"$root/shingles.parquet").filter(keep)
+    val ss = Tables.read(s, s"$root/shingles.parquet").filter(keep)
       .select(col("doc_id"), col("n").as("n_shingles"))
     fps.join(ss, "doc_id")
       .select(col("doc_id"), col("n_fps"), col("n_shingles"))
@@ -1111,12 +1109,11 @@ object Dedup {
       val src = dedupIndexDir(s, d)
       val root = Ingest.scratchDir("dedupindexadd", d)
       val dups = dedupDupIds(s, d)
-      s.read.parquet(s"$src/postings.parquet")
-        .unionByName(acceptedBatchPostings(s, d, dups))
-        .write.mode("overwrite").parquet(s"$root/postings.parquet")
-      s.read.parquet(s"$src/shingles.parquet")
-        .unionByName(acceptedBatchStore(s, d, dups))
-        .write.mode("overwrite").parquet(s"$root/shingles.parquet")
+      Tables.write(Tables.read(s, s"$src/postings.parquet")
+        .unionByName(acceptedBatchPostings(s, d, dups)),
+        s"$root/postings.parquet")
+      Tables.write(Tables.read(s, s"$src/shingles.parquet")
+        .unionByName(acceptedBatchStore(s, d, dups)), s"$root/shingles.parquet")
       root
     })
 
@@ -1167,22 +1164,19 @@ object Dedup {
       val root = Ingest.scratchDir("dedupindexcompact", d)
       val gen0 = dedupIndexDir(s, d)
       val dups = dedupDupIds(s, d)
-      acceptedBatchPostings(s, d, dups)
-        .write.mode("overwrite").parquet(s"$root/delta_postings.parquet")
-      acceptedBatchStore(s, d, dups)
-        .write.mode("overwrite").parquet(s"$root/delta_shingles.parquet")
-      Tables.documents(s, d).select(col("doc_id"))
-        .filter(erasedDoc(col("doc_id")))
-        .write.mode("overwrite").parquet(s"$root/tombstones.parquet")
-      val tomb = s.read.parquet(s"$root/tombstones.parquet")
-      s.read.parquet(s"$gen0/postings.parquet")
-        .unionByName(s.read.parquet(s"$root/delta_postings.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/gen1/postings.parquet")
-      s.read.parquet(s"$gen0/shingles.parquet")
-        .unionByName(s.read.parquet(s"$root/delta_shingles.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/gen1/shingles.parquet")
+      Tables.write(acceptedBatchPostings(s, d, dups),
+        s"$root/delta_postings.parquet")
+      Tables.write(acceptedBatchStore(s, d, dups),
+        s"$root/delta_shingles.parquet")
+      Tables.write(Tables.documents(s, d).select(col("doc_id"))
+        .filter(erasedDoc(col("doc_id"))), s"$root/tombstones.parquet")
+      val tomb = Tables.read(s, s"$root/tombstones.parquet")
+      Tables.write(Tables.read(s, s"$gen0/postings.parquet")
+        .unionByName(Tables.read(s, s"$root/delta_postings.parquet"))
+        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/postings.parquet")
+      Tables.write(Tables.read(s, s"$gen0/shingles.parquet")
+        .unionByName(Tables.read(s, s"$root/delta_shingles.parquet"))
+        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/shingles.parquet")
       s"$root/gen1"
     })
 
@@ -1241,31 +1235,28 @@ object Dedup {
       val gen0 = dedupIndexDir(s, d)
       val batch1 = col("doc_id") % 4 === 1
       val dups1 = dupIdsOf(probeDedupIndex(s, d, gen0, batch = batch1))
-      acceptedBatchPostings(s, d, dups1, batch1)
-        .write.mode("overwrite").parquet(s"$root/delta1_postings.parquet")
-      acceptedBatchStore(s, d, dups1, batch1)
-        .write.mode("overwrite").parquet(s"$root/delta1_shingles.parquet")
-      Tables.documents(s, d).select(col("doc_id"))
-        .filter(erasedDoc(col("doc_id")))
-        .write.mode("overwrite").parquet(s"$root/tombstones.parquet")
-      val tomb = s.read.parquet(s"$root/tombstones.parquet")
-      s.read.parquet(s"$gen0/postings.parquet")
-        .unionByName(s.read.parquet(s"$root/delta1_postings.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/gen1/postings.parquet")
-      s.read.parquet(s"$gen0/shingles.parquet")
-        .unionByName(s.read.parquet(s"$root/delta1_shingles.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/gen1/shingles.parquet")
+      Tables.write(acceptedBatchPostings(s, d, dups1, batch1),
+        s"$root/delta1_postings.parquet")
+      Tables.write(acceptedBatchStore(s, d, dups1, batch1),
+        s"$root/delta1_shingles.parquet")
+      Tables.write(Tables.documents(s, d).select(col("doc_id"))
+        .filter(erasedDoc(col("doc_id"))), s"$root/tombstones.parquet")
+      val tomb = Tables.read(s, s"$root/tombstones.parquet")
+      Tables.write(Tables.read(s, s"$gen0/postings.parquet")
+        .unionByName(Tables.read(s, s"$root/delta1_postings.parquet"))
+        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/postings.parquet")
+      Tables.write(Tables.read(s, s"$gen0/shingles.parquet")
+        .unionByName(Tables.read(s, s"$root/delta1_shingles.parquet"))
+        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/shingles.parquet")
       val batch2 = (col("doc_id") % 4 === 3 && !erasedDoc(col("doc_id"))) ||
         reAddedDoc(col("doc_id"))
       val dups2 = dupIdsOf(probeDedupIndex(s, d, s"$root/gen1", batch = batch2))
-      s.read.parquet(s"$root/gen1/postings.parquet")
-        .unionByName(acceptedBatchPostings(s, d, dups2, batch2))
-        .write.mode("overwrite").parquet(s"$root/gen2/postings.parquet")
-      s.read.parquet(s"$root/gen1/shingles.parquet")
-        .unionByName(acceptedBatchStore(s, d, dups2, batch2))
-        .write.mode("overwrite").parquet(s"$root/gen2/shingles.parquet")
+      Tables.write(Tables.read(s, s"$root/gen1/postings.parquet")
+        .unionByName(acceptedBatchPostings(s, d, dups2, batch2)),
+        s"$root/gen2/postings.parquet")
+      Tables.write(Tables.read(s, s"$root/gen1/shingles.parquet")
+        .unionByName(acceptedBatchStore(s, d, dups2, batch2)),
+        s"$root/gen2/shingles.parquet")
       s"$root/gen2"
     })
 
@@ -1625,10 +1616,11 @@ object Dedup {
   private[graft] def substrIndexDir(s: SparkSession, dir: String): String =
     substrIndexRoots.computeIfAbsent(dir, { d =>
       val root = Ingest.scratchDir("substrix", d)
-      substringKeys(Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
-          SubstrL50)
-        .groupBy(col("k"), col("doc_id")).agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(s"$root/keys.parquet")
+      Tables.write(
+        substringKeys(Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
+            SubstrL50)
+          .groupBy(col("k"), col("doc_id")).agg(count(lit(1)).as("cnt")),
+        s"$root/keys.parquet")
       root
     })
 
@@ -1644,9 +1636,8 @@ object Dedup {
   private[graft] def substrErasedIndexDir(s: SparkSession, dir: String): String =
     substrErasedRoots.computeIfAbsent(dir, { d =>
       val root = Ingest.scratchDir("substrixerase", d)
-      s.read.parquet(s"${substrIndexDir(s, d)}/keys.parquet")
-        .filter(!erasedDoc(col("doc_id")))
-        .write.mode("overwrite").parquet(s"$root/keys.parquet")
+      Tables.write(Tables.read(s, s"${substrIndexDir(s, d)}/keys.parquet")
+        .filter(!erasedDoc(col("doc_id"))), s"$root/keys.parquet")
       root
     })
 
@@ -1697,7 +1688,7 @@ object Dedup {
   private def substrProbe(s: SparkSession, dir: String, idxRoot: String,
       keep: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val idx = s.read.parquet(s"$idxRoot/keys.parquet")
+    val idx = Tables.read(s, s"$idxRoot/keys.parquet")
       .groupBy(col("k")).agg(sum(col("cnt")).as("idx_occ"))
     // substringKeys already lineage-cuts its result — no second cut
     val batch = substringKeys(

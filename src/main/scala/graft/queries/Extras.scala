@@ -297,14 +297,12 @@ object Extras {
         .select(col("o_orderkey"), col("o_totalprice").as("x"))
       val hist = o.filter(pmod(col("o_orderkey"), lit(4)) =!= 3).select(col("x"))
       val histGeom = hist.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      histGeom.write.mode("overwrite").parquet(s"$root/geom_hist.parquet")
-      qsHist(hist, histGeom)
-        .write.mode("overwrite").parquet(s"$root/hist_hist.parquet")
+      Tables.write(histGeom, s"$root/geom_hist.parquet")
+      Tables.write(qsHist(hist, histGeom), s"$root/hist_hist.parquet")
       val full = o.select(col("x"))
       val fullGeom = full.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      fullGeom.write.mode("overwrite").parquet(s"$root/geom_full.parquet")
-      qsHist(full, fullGeom)
-        .write.mode("overwrite").parquet(s"$root/hist_full.parquet")
+      Tables.write(fullGeom, s"$root/geom_full.parquet")
+      Tables.write(qsHist(full, fullGeom), s"$root/hist_full.parquet")
       root
     })
 
@@ -327,8 +325,8 @@ object Extras {
     * independent of history size. */
   def qQsketchIncremental(s: SparkSession, dir: String): DataFrame = {
     val root = qsStoreDir(s, dir)
-    val geom = s.read.parquet(s"$root/geom_hist.parquet")
-    val stored = s.read.parquet(s"$root/hist_hist.parquet")
+    val geom = Tables.read(s, s"$root/geom_hist.parquet")
+    val stored = Tables.read(s, s"$root/hist_hist.parquet")
     val delta = qsHist(Tables.orders(s, dir)
       .filter(pmod(col("o_orderkey"), lit(4)) === 3)
       .select(col("o_totalprice").as("x")), geom)
@@ -361,8 +359,8 @@ object Extras {
     * ERASED data. */
   def qQsketchErase(s: SparkSession, dir: String): DataFrame = {
     val root = qsStoreDir(s, dir)
-    val geom = s.read.parquet(s"$root/geom_full.parquet")
-    val full = s.read.parquet(s"$root/hist_full.parquet")
+    val geom = Tables.read(s, s"$root/geom_full.parquet")
+    val full = Tables.read(s, s"$root/hist_full.parquet")
     val negated = qsHist(Tables.orders(s, dir)
       .filter(Ingest.erasureSubject(col("o_orderkey")))
       .select(col("o_totalprice").as("x")), geom)

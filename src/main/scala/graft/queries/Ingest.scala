@@ -698,8 +698,10 @@ object Ingest {
     *
     * Scale stance (100 TB): each phase is one user-keyed partial-agg
     * shuffle; the merge join is key-cardinality (two compacted snapshots,
-    * never raw log rows); the cut boundary is a 1-row broadcast, and the
-    * log is scanned once per half plus once for the boundary — never
+    * never raw log rows). The cut boundary is collected ONCE per call as
+    * a driver scalar (one min/max job over the log; NULL on an empty log,
+    * which empties both halves) and enters both halves as a literal, so
+    * the log is scanned once for the boundary plus once per half — never
     * materialized. A lakehouse MERGE additionally prunes untouched FILES
     * via delta-key min/max stats; the per-key rule is this one. */
   def qMergeUpsert(s: SparkSession, dir: String): DataFrame = {
@@ -707,18 +709,17 @@ object Ingest {
     val e = graft.io.Tables.events(s, dir)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"), col("event_type"), col("value"))
-    val cutDf = e.agg(
-      expr("min(us) + (max(us) - min(us)) div 2").as("cut_us"))
-    val withCut = e.crossJoin(broadcast(cutDf))
-    latestOf(withCut.filter(col("us") <= col("cut_us")))
-      .write.mode("overwrite").parquet(s"$root/snap_v0.parquet")
-    val cur = s.read.parquet(s"$root/snap_v0.parquet")
+    val cut = lit(e.agg(expr("min(us) + (max(us) - min(us)) div 2"))
+      .head().get(0)).cast("long")
+    Tables.write(latestOf(e.filter(col("us") <= cut)),
+      s"$root/snap_v0.parquet")
+    val cur = Tables.read(s, s"$root/snap_v0.parquet")
       .select(col("user_id"), struct(col("event_id"), col("us"),
         col("event_type"), col("value")).as("rb"))
-    val delta = latestOf(withCut.filter(col("us") > col("cut_us")))
+    val delta = latestOf(e.filter(col("us") > cut))
       .select(col("user_id"), struct(col("event_id"), col("us"),
         col("event_type"), col("value")).as("rd"))
-    cur.join(delta, Seq("user_id"), "full_outer")
+    Tables.write(cur.join(delta, Seq("user_id"), "full_outer")
       .select(col("user_id"),
         when(col("rd").isNull, col("rb"))
           .when(col("rb").isNull, col("rd"))
@@ -727,9 +728,8 @@ object Ingest {
           .otherwise(col("rb")).as("r"))
       .select(col("user_id"), col("r.event_id").as("event_id"),
         col("r.us").as("us"), col("r.event_type").as("event_type"),
-        col("r.value").as("value"))
-      .write.mode("overwrite").parquet(s"$root/snap_v1.parquet")
-    s.read.parquet(s"$root/snap_v1.parquet")
+        col("r.value").as("value")), s"$root/snap_v1.parquet")
+    Tables.read(s, s"$root/snap_v1.parquet")
       .select(col("user_id"), col("event_id"), col("us"),
         col("event_type"), col("value"))
       .orderBy("user_id")

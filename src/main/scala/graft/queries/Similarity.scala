@@ -843,9 +843,9 @@ object Similarity {
       val inv = ix.codes.join(
         kmeansAssign(ix.e, coarse)
           .select(col("vec_id"), col("cell").as("ivf_cell")), "vec_id")
-      coarse.write.mode("overwrite").parquet(s"$root/ivf_centroids.parquet")
-      ix.cb.write.mode("overwrite").parquet(s"$root/pq_codebook.parquet")
-      inv.write.mode("overwrite").parquet(s"$root/pq_codes.parquet")
+      Tables.write(coarse, s"$root/ivf_centroids.parquet")
+      Tables.write(ix.cb, s"$root/pq_codebook.parquet")
+      Tables.write(inv, s"$root/pq_codes.parquet")
       root
     })
 
@@ -879,9 +879,9 @@ object Similarity {
   private[graft] def probeAnnIndex(s: SparkSession, dir: String,
       root: String, live: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val coarse = s.read.parquet(s"$root/ivf_centroids.parquet")
-    val cb = s.read.parquet(s"$root/pq_codebook.parquet")
-    val inv = s.read.parquet(s"$root/pq_codes.parquet")
+    val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
+    val cb = Tables.read(s, s"$root/pq_codebook.parquet")
+    val inv = Tables.read(s, s"$root/pq_codes.parquet")
     val raw = vecs(s, dir).select(col("vec_id"), col("v")).filter(live)
     // normalize the QUERY vectors only (the corpus normalization is baked
     // into the index) — the expression is bit-identical to the build's
@@ -954,8 +954,8 @@ object Similarity {
   private def encodeRows(s: SparkSession, dir: String,
       keep: Column): DataFrame = {
     val root = persistedIndexDir(s, dir)
-    val cb = s.read.parquet(s"$root/pq_codebook.parquet")
-    val coarse = s.read.parquet(s"$root/ivf_centroids.parquet")
+    val cb = Tables.read(s, s"$root/pq_codebook.parquet")
+    val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
     val raw = vecs(s, dir).select(col("vec_id"), col("v")).filter(keep)
     val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
       lit(0.0), (acc, x) => acc + x))
@@ -994,13 +994,12 @@ object Similarity {
     erasedIndexRoots.computeIfAbsent(dir, { d =>
       val src = persistedIndexDir(s, d)
       val root = Ingest.scratchDir("annindexerase", d)
-      s.read.parquet(s"$src/ivf_centroids.parquet")
-        .write.mode("overwrite").parquet(s"$root/ivf_centroids.parquet")
-      s.read.parquet(s"$src/pq_codebook.parquet")
-        .write.mode("overwrite").parquet(s"$root/pq_codebook.parquet")
-      s.read.parquet(s"$src/pq_codes.parquet")
-        .filter(!erasedVec(col("vec_id")))
-        .write.mode("overwrite").parquet(s"$root/pq_codes.parquet")
+      Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
+        s"$root/ivf_centroids.parquet")
+      Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
+        s"$root/pq_codebook.parquet")
+      Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
+        .filter(!erasedVec(col("vec_id"))), s"$root/pq_codes.parquet")
       root
     })
 
@@ -1047,26 +1046,25 @@ object Similarity {
     compactRoots.computeIfAbsent(dir, { d =>
       val src = persistedIndexDir(s, d)
       val root = Ingest.scratchDir("annindexcompact", d)
-      s.read.parquet(s"$src/pq_codes.parquet")
-        .filter(col("vec_id") % 2 === 0)
-        .write.mode("overwrite").parquet(s"$root/gen0/pq_codes.parquet")
-      encodeRows(s, d, col("vec_id") % 4 === 1)
-        .write.mode("overwrite").parquet(s"$root/delta1.parquet")
-      encodeRows(s, d, col("vec_id") % 4 === 3)
-        .write.mode("overwrite").parquet(s"$root/delta2.parquet")
-      vecs(s, d).select(col("vec_id")).filter(erasedVec(col("vec_id")))
-        .write.mode("overwrite").parquet(s"$root/tombstones.parquet")
+      Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
+        .filter(col("vec_id") % 2 === 0), s"$root/gen0/pq_codes.parquet")
+      Tables.write(encodeRows(s, d, col("vec_id") % 4 === 1),
+        s"$root/delta1.parquet")
+      Tables.write(encodeRows(s, d, col("vec_id") % 4 === 3),
+        s"$root/delta2.parquet")
+      Tables.write(
+        vecs(s, d).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
+        s"$root/tombstones.parquet")
       // the compaction job: one narrow union + one anti-join on vec_id
-      val tomb = s.read.parquet(s"$root/tombstones.parquet")
-      s.read.parquet(s"$root/gen0/pq_codes.parquet")
-        .unionByName(s.read.parquet(s"$root/delta1.parquet"))
-        .unionByName(s.read.parquet(s"$root/delta2.parquet"))
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/gen1/pq_codes.parquet")
-      s.read.parquet(s"$src/ivf_centroids.parquet")
-        .write.mode("overwrite").parquet(s"$root/gen1/ivf_centroids.parquet")
-      s.read.parquet(s"$src/pq_codebook.parquet")
-        .write.mode("overwrite").parquet(s"$root/gen1/pq_codebook.parquet")
+      val tomb = Tables.read(s, s"$root/tombstones.parquet")
+      Tables.write(Tables.read(s, s"$root/gen0/pq_codes.parquet")
+        .unionByName(Tables.read(s, s"$root/delta1.parquet"))
+        .unionByName(Tables.read(s, s"$root/delta2.parquet"))
+        .join(tomb, Seq("vec_id"), "left_anti"), s"$root/gen1/pq_codes.parquet")
+      Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
+        s"$root/gen1/ivf_centroids.parquet")
+      Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
+        s"$root/gen1/pq_codebook.parquet")
       s"$root/gen1"
     })
 
@@ -1125,29 +1123,27 @@ object Similarity {
     lifecycleRoots.computeIfAbsent(dir, { d =>
       val src = persistedIndexDir(s, d)
       val root = Ingest.scratchDir("annindexlifecycle", d)
-      s.read.parquet(s"$src/pq_codes.parquet")
-        .filter(col("vec_id") % 2 === 0)
-        .write.mode("overwrite").parquet(s"$root/gen0/pq_codes.parquet")
-      encodeRows(s, d, col("vec_id") % 4 === 1)
-        .write.mode("overwrite").parquet(s"$root/delta1.parquet")
-      vecs(s, d).select(col("vec_id")).filter(erasedVec(col("vec_id")))
-        .write.mode("overwrite").parquet(s"$root/tombstones.parquet")
-      val tomb = s.read.parquet(s"$root/tombstones.parquet")
-      s.read.parquet(s"$root/gen0/pq_codes.parquet")
-        .unionByName(s.read.parquet(s"$root/delta1.parquet"))
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/gen1/pq_codes.parquet")
-      encodeRows(s, d,
+      Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
+        .filter(col("vec_id") % 2 === 0), s"$root/gen0/pq_codes.parquet")
+      Tables.write(encodeRows(s, d, col("vec_id") % 4 === 1),
+        s"$root/delta1.parquet")
+      Tables.write(
+        vecs(s, d).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
+        s"$root/tombstones.parquet")
+      val tomb = Tables.read(s, s"$root/tombstones.parquet")
+      Tables.write(Tables.read(s, s"$root/gen0/pq_codes.parquet")
+        .unionByName(Tables.read(s, s"$root/delta1.parquet"))
+        .join(tomb, Seq("vec_id"), "left_anti"), s"$root/gen1/pq_codes.parquet")
+      Tables.write(encodeRows(s, d,
           (col("vec_id") % 4 === 3 && !erasedVec(col("vec_id"))) ||
-            reAddedVec(col("vec_id")))
-        .write.mode("overwrite").parquet(s"$root/delta2.parquet")
-      s.read.parquet(s"$root/gen1/pq_codes.parquet")
-        .unionByName(s.read.parquet(s"$root/delta2.parquet"))
-        .write.mode("overwrite").parquet(s"$root/gen2/pq_codes.parquet")
-      s.read.parquet(s"$src/ivf_centroids.parquet")
-        .write.mode("overwrite").parquet(s"$root/gen2/ivf_centroids.parquet")
-      s.read.parquet(s"$src/pq_codebook.parquet")
-        .write.mode("overwrite").parquet(s"$root/gen2/pq_codebook.parquet")
+            reAddedVec(col("vec_id"))), s"$root/delta2.parquet")
+      Tables.write(Tables.read(s, s"$root/gen1/pq_codes.parquet")
+        .unionByName(Tables.read(s, s"$root/delta2.parquet")),
+        s"$root/gen2/pq_codes.parquet")
+      Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
+        s"$root/gen2/ivf_centroids.parquet")
+      Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
+        s"$root/gen2/pq_codebook.parquet")
       s"$root/gen2"
     })
 
@@ -1212,7 +1208,7 @@ object Similarity {
   private def buildResidualIndex(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
     val root = persistedIndexDir(s, dir)
-    val coarse = s.read.parquet(s"$root/ivf_centroids.parquet")
+    val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
     val raw = vecs(s, dir).select(col("vec_id"), col("v"))
     val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
       lit(0.0), (acc, x) => acc + x))
@@ -1291,9 +1287,9 @@ object Similarity {
     residualIndexRoots.computeIfAbsent(dir, { d =>
       val root = Ingest.scratchDir("annindexres", d)
       val (coarse, rcb, codes) = buildResidualIndex(s, d)
-      coarse.write.mode("overwrite").parquet(s"$root/ivf_centroids.parquet")
-      rcb.write.mode("overwrite").parquet(s"$root/pq_codebook.parquet")
-      codes.write.mode("overwrite").parquet(s"$root/pq_codes.parquet")
+      Tables.write(coarse, s"$root/ivf_centroids.parquet")
+      Tables.write(rcb, s"$root/pq_codebook.parquet")
+      Tables.write(codes, s"$root/pq_codes.parquet")
       root
     })
 
@@ -1309,9 +1305,9 @@ object Similarity {
   def qAnnResidualPersisted(s: SparkSession, dir: String): DataFrame = {
     val root = residualIndexDir(s, dir)
     probeResidual(s, dir,
-      s.read.parquet(s"$root/ivf_centroids.parquet"),
-      s.read.parquet(s"$root/pq_codebook.parquet"),
-      s.read.parquet(s"$root/pq_codes.parquet"))
+      Tables.read(s, s"$root/ivf_centroids.parquet"),
+      Tables.read(s, s"$root/pq_codebook.parquet"),
+      Tables.read(s, s"$root/pq_codes.parquet"))
   }
 
   /** The three static relations of the STREAMING ANN probe: the
@@ -1324,10 +1320,10 @@ object Similarity {
   private[graft] def annStreamParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
     val root = persistedIndexDir(s, dir)
-    val coarse = s.read.parquet(s"$root/ivf_centroids.parquet")
+    val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
     val raw = vecs(s, dir).select(col("vec_id"), col("v"))
     val index = raw.join(
-      s.read.parquet(s"$root/pq_codes.parquet")
+      Tables.read(s, s"$root/pq_codes.parquet")
         .select(col("vec_id"), col("ivf_cell")), "vec_id")
     val queries = raw.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"))

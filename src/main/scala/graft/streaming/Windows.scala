@@ -524,8 +524,8 @@ object Windows {
     val s = docs.sparkSession
     import s.implicits._
     val T = graft.queries.Dedup.JaccardT
-    val idxFps = s.read.parquet(s"$indexRoot/postings.parquet")
-    val idxSs = s.read.parquet(s"$indexRoot/shingles.parquet")
+    val idxFps = graft.io.Tables.read(s, s"$indexRoot/postings.parquet")
+    val idxSs = graft.io.Tables.read(s, s"$indexRoot/shingles.parquet")
     val posted = docs
       .select(col("doc_id"), col("lang"),
         graft.core.TextPipeline.normalizedTokens(col("text")).as("w"))

@@ -325,15 +325,16 @@ class AnalyticsSpec extends SparkSpec {
       keys.filter(pmod(col("o_orderkey"), lit(4)) =!= 3)
         .select(col("o_orderkey").as("k"))))
     assert(stored == wantHist, "store != historical-wave bloom bits")
-    // (b) monoid merge: store ∨ delta == full build, bit for bit
-    val delta = bits(Analytics.bloomBits(
-      keys.filter(pmod(col("o_orderkey"), lit(4)) === 3)
-        .select(col("o_orderkey").as("k"))))
-    assert(delta.nonEmpty, "delta wave empty: merge untested")
-    val merged = (stored.keySet ++ delta.keySet).map(k =>
-      k -> (stored.getOrElse(k, 0L) | delta.getOrElse(k, 0L))).toMap
+    // (b) monoid merge: the query's own one-pass fold of store ∨ delta
+    // cells == full build, bit for bit
+    val deltaKeys = keys.filter(pmod(col("o_orderkey"), lit(4)) === 3)
+      .select(col("o_orderkey").as("k"))
+    assert(!deltaKeys.isEmpty, "delta wave empty: merge untested")
+    val merged = bits(Analytics.bloomMerge(
+      spark.read.parquet(s"$root/bits_hist.parquet"), deltaKeys))
     val full = bits(Analytics.bloomBits(keys.select(col("o_orderkey").as("k"))))
-    assert(merged == full, "store | delta != full-build bits")
+    assert(merged == full, "bloomMerge(store, delta) != full-build bits")
+    assert(merged != stored, "delta added no bit: merge untested")
     // (c) non-invertibility witness: two DIFFERENT keys colliding on a
     // bit cell, so clearing one key's bits would clear the other's — a
     // false negative, the one failure a Bloom filter must never
