@@ -702,10 +702,10 @@ object Dedup {
     * Same answer as [[qNgramJaccard]] (same oracle SQL; equality also
     * pinned in DedupSimilaritySpec). On the driver fixture (df ≤ 14 — no
     * hot shingles) the count plan is faster (1.1 s vs 4.0 s at sf0.1);
-    * the crossover is MEASURED on the boilerplate-header corpus of
-    * `graft.tools.HotShingleBench` (5 trigrams with df = nDocs, the
-    * C4-style shape): at 4,000 docs the postings plan pays Σ df² ≈ 5·N²
-    * join rows and takes 14.0 s, this plan 1.7 s — an 8× win that grows
+    * the crossover is MEASURED on a boilerplate-header corpus
+    * (SURVEY.md §8.8; 5 trigrams with df = nDocs, the C4-style shape):
+    * at 4,000 docs the postings plan pays Σ df² ≈ 5·N² join rows and
+    * takes 14.0 s, this plan 1.7 s — an 8× win that grows
     * quadratically with corpus size. Hot shingles stop hurting candidate
     * generation entirely: a shingle shared by all docs has maximal df,
     * ranks at the END of the rarest-first order, and provably drops out

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Prints the AQE FINAL plan for the named queries — the plan that actually
@@ -16,15 +15,7 @@ object AqePlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.io.Tables.EventsNanosConf._1, graft.io.Tables.EventsNanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.GraftSession.local(8, "graft-aqe-plan")
 
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

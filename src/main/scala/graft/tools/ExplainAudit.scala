@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Physical-plan audit over every SparkEntry query — the evidence trail
@@ -20,16 +19,8 @@ object ExplainAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // optional extra args: audit only these query names (fast iteration)
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // final plan visible at explain time
-      .config(graft.io.Tables.EventsNanosConf._1, graft.io.Tables.EventsNanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark) // SQL names for the native kernels
+    val spark = graft.GraftSession.local(8, "graft-explain-audit")
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // final plan visible at explain time
 
     println("# PLANS - physical-plan audit (generated by graft.tools.ExplainAudit)")
     println()

@@ -40,14 +40,38 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(count == prefix, "prefix filtering must change the plan, never the answer")
   }
 
+  /** Hot-shingle corpus as `<dir>/documents.parquet`: a shared 7-word
+    * header, then a letters-only tail unique to the document; every 10th
+    * doc clones its predecessor's tail but for the last 2 words (jaccard
+    * ≈ 0.8), all other pairs share only the header (jaccard 5/55). */
+  private def writeHotShingleCorpus(nDocs: Int, dir: String): String = {
+    import spark.implicits._
+    def b26(i: Int): String = {
+      var n = i; val sb = new StringBuilder
+      do { sb.append(('a' + n % 26).toChar); n /= 26 } while (n > 0)
+      sb.result()
+    }
+    def tail(doc: Int): IndexedSeq[String] =
+      (0 until 25).map(k => s"q${b26(doc)}z${b26(k)}")
+    val rows = (0 until nDocs).map { i =>
+      val t =
+        if (i % 10 == 9) tail(i - 1).dropRight(2) ++ Seq(s"r${b26(i)}za", s"r${b26(i)}zb")
+        else tail(i)
+      val text = "the quick brown fox jumps over lazy " + t.mkString(" ")
+      (i.toLong, text, "en", "hotshingle", text.length.toLong)
+    }
+    rows.toDF("doc_id", "text", "lang", "source", "n_chars").repartition(8)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("hot-shingle corpus: prefix plan drops boilerplate trigrams yet stays answer-exact") {
     // the corpus class the prefix plan exists for: 5 trigrams with
     // df = nDocs (boilerplate header) that the rarest-first ranking pushes
-    // beyond every prefix. Measured at 4000 docs via
-    // graft.tools.HotShingleBench: postings 14.0 s vs prefix 1.7 s — this
-    // pins the completeness half (identical answers) and the drop-out
-    // mechanism itself on a 400-doc corpus
-    val dir = graft.tools.HotShingleBench.write(spark, 400,
+    // beyond every prefix. Measured at 4000 docs (SURVEY.md §8.8): postings
+    // 14.0 s vs prefix 1.7 s — this pins the completeness half (identical
+    // answers) and the drop-out mechanism itself on a 400-doc corpus
+    val dir = writeHotShingleCorpus(400,
       java.nio.file.Files.createTempDirectory("hotshingle").toString)
     val viaCount = Dedup.qNgramJaccard(spark, dir).collect().map(_.toString).toSeq
     val viaPrefix = Dedup.qNgramJaccardPrefix(spark, dir).collect().map(_.toString).toSeq

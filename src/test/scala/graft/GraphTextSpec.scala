@@ -799,8 +799,8 @@ class GraphTextSpec extends SparkSpec {
   test("vocab coverage: bounded TakeOrdered selection == the global rank window, and the bound is in the plan") {
     // the respelling may only change the PLAN (per-partition top-16 merge
     // instead of a single-partition sort of the whole vocabulary) — never
-    // the answer; VocabRankBench re-proves this at the sf1 decade and on
-    // the 10x-vocabulary open-vocab control
+    // the answer; measured equal at the sf1 decade and on the
+    // 10x-vocabulary open-vocab control too (SURVEY.md §8.12, §8.13)
     for (d <- Seq(sf, "/root/testdata/sf0.01")) {
       val bounded = TextAnalysis.qVocabCoverage(spark, d)
       assert(bounded.collect().map(_.toString).toSeq ==

@@ -4,9 +4,12 @@
 Usage: python3 tools/bench_diff.py <old_bench.json> <new_bench.json> [threshold]
 
 Both files are BENCH_DETAIL.json / BENCH_r{N}.json shaped (the full Bench
-summary line: "queries" medians, "min" mins, "failed", "errors"). Prints
-the common-subset totals, every query whose median regressed by more than
-<threshold>x (default 1.5), and the biggest improvements. A regression
+summary line: "queries" medians, "min" mins, "failed", "errors", and
+"layers" records). Prints the common-subset totals, every query whose
+median regressed by more than <threshold>x (default 1.5), and the biggest
+improvements. When both files carry "layers", each query whose median
+moved by more than 10% also gets a line naming the layer field with the
+largest relative change (construct_s, exec_s, jobs, shuffle_* ...). A regression
 whose MIN also regressed is flagged REAL (plan growth); a high median over
 a stable min is bench noise (GC / suite contention) — the min rule from
 the Bench scaladoc, applied mechanically.
@@ -70,6 +73,12 @@ def load(path):
             "TRUNCATED mid-object: scraped name:number pairs — section "
             "unknown, treat ratios as indicative only")
     raise SystemExit(f"no parseable bench JSON with 'queries' in {path}")
+
+
+def relative_change(old, new):
+    if old:
+        return abs(new - old) / abs(old)
+    return float("inf") if new else 0.0
 
 
 def main():
@@ -157,6 +166,19 @@ def main():
         print("\nbiggest improvements:")
         for r, k in improved:
             print(f"{k:28s} {oq[k]:7.2f} -> {nq[k]:7.2f} ({r:.2f}x)")
+
+    # which layer moved: for every median that moved by more than 10%,
+    # the layer field with the largest relative change
+    ol, nl = old.get("layers", {}), new.get("layers", {})
+    movers = sorted(((max(r, 1 / r), r, k) for r, k in rows
+                     if abs(r - 1) > 0.10 and k in ol and k in nl), reverse=True)
+    if movers:
+        print("\nlayer behind each median that moved > 10%:")
+        for _, r, k in movers:
+            field = max((f for f in ol[k] if f in nl[k]),
+                        key=lambda f: relative_change(ol[k][f], nl[k][f]))
+            print(f"{k:28s} {oq[k]:7.2f} -> {nq[k]:7.2f} ({r:.2f}x)  "
+                  f"{field} {ol[k][field]:g} -> {nl[k][field]:g}")
 
     sys.exit(1 if bad else 0)
 
