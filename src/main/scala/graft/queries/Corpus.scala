@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.TextPipeline
+import graft.core.{Lineage, TextPipeline}
 import graft.io.Tables
 
 /** Corpus-preparation tier: the whole-corpus operations a training-data
@@ -275,7 +275,8 @@ object Corpus {
       // materialize the hashed-shingle table once so tokenize + shingle +
       // hash runs one pass, not one per branch (a real pipeline persists
       // this table anyway; it is the dedup/contamination index)
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: 1.15/1.90 s
+      .transform(Lineage.cut)
     val testSh = f.filter(col("b") >= 90)
       .select(explode(col("hs")).as("h")).distinct()
     f.filter(col("b") < 80)
@@ -331,17 +332,14 @@ object Corpus {
     * aggregate (the only corpus scan), then a ~|sources|-row table and a
     * 1-row broadcast total — the recipe itself costs nothing at 100 TB. */
   def qDomainMix(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint the ~|sources|-row aggregate: it feeds BOTH the
-    // total and the final projection, and the two agg subtrees otherwise
-    // don't exchange-reuse — the plan audit showed the corpus scanned
-    // TWICE for a 20-row recipe without this
     val counted = Tables.documents(s, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(toks)).cast("long").as("n_tokens"))
       .withColumn("wq", round(sqrt(col("n_tokens").cast("double")) * 1e6)
         .cast("long"))
-      .localCheckpoint(true)
+      // cuts on/off: sf0.1 0.50/0.48 s, sf1 0.66/1.03 s (sf1 won 3/3)
+      .transform(Lineage.cut) // 2 consumers: the total + the final projection
     val tot = counted.agg(sum(col("wq")).as("sum_wq"))
     counted.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -423,6 +421,8 @@ object Corpus {
         .filter(col("p.rhs").isNotNull) // zip_with pads the sliced side
         .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
         .agg(sum(col("n")).as("pair_count"))
+      // the cut also pins the top-1 row that both the merge below and the
+      // round's output read, so they cannot see two evaluations of limit
       val best = pairs
         .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
         .limit(1).localCheckpoint(true)
@@ -491,7 +491,8 @@ object Corpus {
   private[graft] def packSequences(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val grouped = d.withColumn("g", expr(s"doc_id div $PackGroup"))
-      .localCheckpoint() // 2 consumers: block sums + within-block scan
+      // sf0.1 median, cuts on/off: 0.72/0.85 s
+      .transform(Lineage.cut) // 2 consumers: block sums + within-block scan
     val carry = grouped.groupBy(col("g")).agg(sum(col("len")).as("gl"))
       .withColumn("carry_in",
         coalesce(sum(col("gl")).over(Window.orderBy(col("g"))
@@ -537,9 +538,8 @@ object Corpus {
       .groupBy("lang").agg(sum(col("ntok")).as("n_tokens")))
 
   /** Core of [[qQuotaAlloc]] over any (lang, n_tokens) relation. */
-  private[graft] def quotaAlloc(m0: DataFrame): DataFrame = {
+  private[graft] def quotaAlloc(m: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val m = m0.localCheckpoint() // 2 consumers: totals + the allocation
     val tot = m.agg(sum(col("n_tokens")).as("mm"))
     val based = m.crossJoin(broadcast(tot))
       .withColumn("base", expr(s"$QuotaSlots * n_tokens div mm"))
@@ -584,8 +584,8 @@ object Corpus {
     * exposed for ExtrasSpec's closed forms (known set intersections;
     * disjoint sources absent from the pair list). */
   private[graft] def sourceOverlap(el: DataFrame): DataFrame = {
-    val sh = el.distinct()
-      .localCheckpoint() // 2 consumers: sizes + postings
+    // cuts on/off: sf0.1 2.70/1.95 s, sf1 6.61/8.05 s (sf1 won 3/3)
+    val sh = el.distinct().transform(Lineage.cut) // 2 consumers: sizes + postings
     val sz = sh.groupBy("source").agg(count(lit(1)).as("n"))
     val inter = sh.groupBy(col("h"))
       .agg(collect_set(col("source")).as("srcs"))
@@ -659,20 +659,17 @@ object Corpus {
         // text) so the contamination number matches what the dedup
         // tier would actually remove
         md5(concat_ws(" ", toks)).as("sig"))
-      .localCheckpoint() // 2 consumers: the stats agg + the histogram
     val stats = per.agg(count(lit(1)).as("n"), sum(col("nt")).as("toks"),
         sum(col("n_chars")).as("chars"),
         countDistinct(col("lang")).as("nl"),
         countDistinct(col("source")).as("ns"),
         countDistinct(col("sig")).as("nd"))
-      .localCheckpoint() // 1 row; consumed by 6 metric rows + percentiles
     val vocab = TextPipeline.words(Tables.documents(s, dir), "text")
       .agg(countDistinct(col("word")).as("v"))
     val cum = per.groupBy(col("nt")).agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(
         Window.orderBy(col("nt")).rowsBetween(Window.unboundedPreceding,
           Window.currentRow)))
-      .localCheckpoint() // distinct-length cardinality; 2 percentile cuts
     def pct(num: Int, den: Int, name: String): DataFrame =
       cum.crossJoin(broadcast(stats))
         .filter(col("cum") * den >= col("n") * num)
@@ -926,7 +923,8 @@ object Corpus {
     // exact-fingerprint survivors of the quality-gated corpus; cut: the
     // relation feeds the winnow postings, the shingle fetch, AND the
     // final anti-join chain
-    val exact = graft.core.Lineage.cut(
+    // sf0.1 median, cuts on/off: 7.85/9.57 s (all q_corpus_pipeline_full cuts)
+    val exact = Lineage.cut(
       cleaned.crossJoin(broadcast(bounds))
         .filter(col("nt") >= col("p10") && col("nt") <= col("p90"))
         .withColumn("fp", md5(concat_ws(" ", col("w"))))
@@ -964,7 +962,8 @@ object Corpus {
       .filter(col("doc_id") =!= col("rep_id")).select(col("doc_id"))
     // decontamination over the fuzzy survivors; cut: test slice + train
     // probe + final pass-through all read it
-    val fuzzy = graft.core.Lineage.cut(
+    // sf0.1 median, cuts on/off: 7.85/9.57 s (all q_corpus_pipeline_full cuts)
+    val fuzzy = Lineage.cut(
       exact.join(losers, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("nt"),
           pipelineSplit(col("doc_id")).as("split"),

@@ -2,7 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.TextPipeline
+import graft.core.{Lineage, TextPipeline}
+import graft.core.TextPipeline.{duckH32, duckShingles, h32, shinglesOf}
+import graft.functions.VectorFunctions.h60
 import graft.io.Tables
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -51,24 +53,12 @@ object Dedup {
   private val hashB: IndexedSeq[Long] =
     (1 to NumHashes).map(i => (40503L * i * 2654435761L) % P)
 
-  /** 32-bit base hash (TextPipeline.h32) and its oracle spelling. */
-  private def h32(c: Column): Column = TextPipeline.h32(c)
-  private def duckH32(e: String): String = TextPipeline.duckH32(e)
-
   // ---- shared token/shingle projections ------------------------------------
 
   /** Normalized token array (reference tokenizer semantics, TextPipeline). */
   private val toks: Column = TextPipeline.normalizedTokens(col("text"))
 
   private val duckToks = TextPipeline.duckToks
-
-  /** Distinct 3-word shingles of the token array (empty if < 3 tokens);
-    * zip_with-over-slices formulation and the inlining rationale live in
-    * TextPipeline (shared with the repetition scorer). */
-  private def shinglesOf(w: Column): Column = TextPipeline.shinglesOf(w)
-
-  /** DuckDB spelling of the same shingle set over a token-list column `w`. */
-  private def duckShingles(w: String): String = TextPipeline.duckShingles(w)
 
   /** MinHash signature array (NumHashes entries) over a PRE-HASHED shingle
     * array (`hashShingles`): each slot is an affine mix + min over the
@@ -188,9 +178,8 @@ object Dedup {
     * are max_by aggregates (O(1) state), never a window over the
     * anchor's candidate list; the oracle keeps the window spelling. */
   def qTrainingPairs(s: SparkSession, dir: String): DataFrame = {
-    // the symmetric closure reads the candidate relation twice —
-    // lineage-cut so signatures/bands/bucket-join run once
-    val c = graft.core.Lineage.cut(minhashCandsM(s, dir))
+    // cuts on/off: sf0.1 2.27/2.41 s, sf1 7.12/10.09 s (sf1 won 3/3)
+    val c = Lineage.cut(minhashCandsM(s, dir)) // read twice by the symmetric closure
     val sym = c.select(col("a_id").as("anchor"), col("b_id").as("partner"),
         col("m"))
       .unionAll(c.select(col("b_id").as("anchor"), col("a_id").as("partner"),
@@ -273,11 +262,8 @@ object Dedup {
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
         graft.functions.VectorFunctions.shinglePosting(col("w"), 3))
-      .select(col("doc_id"), TextPipeline.h32(col("shingle")).as("h"))
+      .select(col("doc_id"), h32(col("shingle")).as("h"))
       .distinct()
-      // 3 consumers: sizes + both join sides (Lineage.cut = localCheckpoint
-      // unless the plan audit disables it to see the sample predicate)
-      .transform(graft.core.Lineage.cut)
     val sizes = shd.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = shd.join(sizes, "doc_id")
       .select(col("h"), col("doc_id").as("a_id"), col("n").as("a_n"))
@@ -296,7 +282,6 @@ object Dedup {
           slice(col("sig"), col("band_id") * RowsPerBand + 1,
             lit(RowsPerBand)),
           x => x.cast("string")))).as("band_key"))
-      .transform(graft.core.Lineage.cut) // 2 consumers: both bucket-join sides
     val cand = bands.select(col("band_id"), col("band_key"),
         col("doc_id").as("a_id"))
       .join(bands.select(col("band_id"), col("band_key"),
@@ -358,11 +343,8 @@ object Dedup {
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
         graft.functions.VectorFunctions.shinglePosting(col("w"), 3))
-      .select(col("doc_id"), TextPipeline.h32(col("shingle")).as("h"))
+      .select(col("doc_id"), h32(col("shingle")).as("h"))
       .distinct()
-      // 3 consumers: sizes + both join sides (Lineage.cut = localCheckpoint
-      // unless the plan audit disables it to see the sample predicate)
-      .transform(graft.core.Lineage.cut)
     val sizes = shd.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = shd.join(sizes, "doc_id")
       .select(col("h"), col("doc_id").as("a_id"), col("n").as("a_n"))
@@ -382,7 +364,6 @@ object Dedup {
           slice(col("sig"), col("band_id") * RowsPerBand + 1,
             lit(RowsPerBand)),
           x => x.cast("string")))).as("band_key"))
-      .transform(graft.core.Lineage.cut) // 2 consumers: both bucket-join sides
     val cand = bands.select(col("band_id"), col("band_key"),
         col("doc_id").as("a_id"))
       .join(bands.select(col("band_id"), col("band_key"),
@@ -866,8 +847,12 @@ object Dedup {
   private val dedupIndexRoots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** 60-bit portable shingle hash for the persisted verification store
-    * (15 hex chars of md5 → BIGINT): the store keeps 8-byte hashes, not
+  /** Sorted distinct 60-bit hashes of a shingle array — the ONE store
+    * spelling shared by the batch index build ([[hashedStore]]) and the
+    * streaming probe's per-row store (Windows.dedupIndexProbeStream), so
+    * batch and online verification cannot drift.
+    *
+    * `h60` (15 hex chars of md5 → BIGINT): the store keeps 8-byte hashes, not
     * shingle strings — measured at the sf1 decade, a STRING store read
     * twice per probe costs 2× the in-plan recompute (sorted shingle
     * arrays are ~8× the text), while the hashed store is the production
@@ -875,15 +860,8 @@ object Dedup {
     * compared pair (~10² shingles each) a ~1e-14 event, so hash-space
     * intersection counts equal string-space counts in practice; the
     * string-space oracle re-checks that on every verify run. */
-  private def sh60(c: Column): Column =
-    graft.functions.VectorFunctions.h60(c) // fused (r15): graft.plans.H60
-
-  /** Sorted distinct 60-bit hashes of a shingle array — the ONE store
-    * spelling shared by the batch index build ([[hashedStore]]) and the
-    * streaming probe's per-row store (Windows.dedupIndexProbeStream), so
-    * batch and online verification cannot drift. */
   private[graft] def storeHash(sh: Column): Column =
-    array_sort(array_distinct(transform(sh, x => sh60(x))))
+    array_sort(array_distinct(transform(sh, x => h60(x))))
 
   /** Hashed verification store rows (doc_id, n, hs) from a [[shingled]]
     * relation — shared by the index build and the batch side of
@@ -953,11 +931,13 @@ object Dedup {
     val batchFps = TextAnalysis.winnowFps(s, dir)
       .filter(batch && live)
       // 3 consumers: vs-index join + both batch-internal sides
-      .transform(graft.core.Lineage.cut)
+      // sf0.1 median, cuts on/off: q_dedup_index_compact 5.03/7.67 s (+4 more)
+      .transform(Lineage.cut)
     val batchSs = hashedStore(shingled(s, dir)
         .filter(batch && live))
       // 2 consumers (both verification-join sides via the union store)
-      .transform(graft.core.Lineage.cut)
+      // sf0.1 median, cuts on/off: q_dedup_index_compact 5.03/7.67 s (+4 more)
+      .transform(Lineage.cut)
     val candIdx = batchFps
       .select(col("lang"), col("fingerprint"), col("doc_id").as("new_id"))
       .join(idxFps.select(col("lang"), col("fingerprint"),
@@ -1058,7 +1038,8 @@ object Dedup {
     * without the cut the whole probe's candidate/verify stage would
     * re-execute per artifact write. */
   private def dupIdsOf(probe: DataFrame): DataFrame =
-    graft.core.Lineage.cut(probe
+    // sf0.1 median, cuts on/off: q_dedup_index_compact 5.03/7.67 s (+2 more)
+    Lineage.cut(probe
       .select(col("new_id").as("doc_id")).distinct())
 
   private def dedupDupIds(s: SparkSession, d: String): DataFrame =
@@ -1294,10 +1275,8 @@ object Dedup {
     * (doc_id, n_tokens) pairs once. Nothing here touches text after the
     * token count, and no stage is proportional to corpus × clusters. */
   def qDedupSurvivors(s: SparkSession, dir: String): DataFrame = {
-    // cut (r14): consumed by the members join AND the final anti-join —
-    // without it each consumer re-scanned and re-tokenized the corpus
-    val counted = graft.core.Lineage.cut(Tables.documents(s, dir)
-      .select(col("doc_id"), size(toks).as("n_tokens")))
+    val counted = Tables.documents(s, dir)
+      .select(col("doc_id"), size(toks).as("n_tokens"))
     val pairs = qDedupMinhash(s, dir)
       .select(col("a_id").as("src"), col("b_id").as("dst"))
     val clusters = components(pairs)
@@ -1395,7 +1374,7 @@ object Dedup {
       .select(col("doc_id"), col("lang"), toks.as("w"))
       .filter(size(col("w")) >= SpanK)
       .select(col("lang"), col("doc_id"),
-        posexplode(transform(filter(grams, _.isNotNull), x => TextPipeline.h32(x)))
+        posexplode(transform(filter(grams, _.isNotNull), x => h32(x)))
           .as(Seq("pos", "gram")))
       .repartition(col("lang"), col("gram"))
     // df per (lang, gram): co-partitioned with g — no extra exchange for
@@ -1436,14 +1415,6 @@ object Dedup {
     * ⌈log₂ L⌉-shuffle claim measured where a 100 TB pipeline actually
     * sets the knob, not asserted from L = 12. */
   private[graft] val SubstrL50 = 50
-
-  /** 60-bit position key (15 hex chars of md5 → BIGINT) — the [[sh60]]
-    * collision contract applied to the doubling chain: within any one
-    * corpus-level gram population (~10⁵ here, ~10¹¹ even at 100 TB) a
-    * 60-bit collision between DIFFERENT substrings is ≪ 1 per corpus,
-    * and the string-space oracle re-checks on every verify run. */
-  private def h60(c: Column): Column =
-    graft.functions.VectorFunctions.h60(c) // fused (r15): graft.plans.H60
 
   /** Corpus-wide duplicated-SUBSTRING spans — the suffix-array rung of
     * the dedup ladder (Lee et al. ACL'22 find all ≥50-token duplicated
@@ -1571,7 +1542,12 @@ object Dedup {
     * paths drift. */
   private def substringKeys(docs: DataFrame, L: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // width-1 keys: one narrow (doc_id, pos, key) row per token
+    // width-1 keys: one narrow (doc_id, pos, key) row per token. Keys are
+    // 60-bit `h60` — the [[storeHash]] collision contract applied to the
+    // doubling chain: within any one corpus-level gram population (~10⁵
+    // here, ~10¹¹ even at 100 TB) a 60-bit collision between DIFFERENT
+    // substrings is ≪ 1 per corpus, and the string-space oracle
+    // re-checks on every verify run.
     val base = docs
       .select(col("doc_id"), posexplode(toks).as(Seq("pos", "w")))
       .select(col("doc_id"), col("pos"), h60(col("w")).as("k"))
@@ -1597,7 +1573,8 @@ object Dedup {
     val p = Integer.highestOneBit(L)
     val offsets = Iterator.iterate(1)(_ * 2).takeWhile(_ < p).toSeq
     val kp = offsets.foldLeft(base)(widen)
-    graft.core.Lineage.cut(if (p == L) kp else widen(kp, L - p))
+    // sf0.1 median, cuts on/off: q_dedup_cut 2.80/4.20 s (4 more substring queries win)
+    Lineage.cut(if (p == L) kp else widen(kp, L - p))
   }
 
   /** Persisted substring-key index roots for [[qSubstrIncremental]]. */
@@ -1762,14 +1739,8 @@ object Dedup {
       when(isEvalDoc(id), lit("eval")).otherwise(lit("train"))
     // the SAME candidate relation + operating point as q_dedup_minhash
     // (shared minhashCandsM), minus its presentation sort — the
-    // classifier aggregates anyway. Lineage-cut (r14, guide §2.4): BOTH
-    // aggregates below consume this relation, and exchange reuse only
-    // deduplicated the band-join broadcast — the probe-side signature
-    // pipeline (tokenize, 32-hash sigs, band explode, agreement filter)
-    // executed once per consumer. The cut materializes the tiny verified
-    // pair set once (pair-cardinality ≪ corpus), so the doc-side scan +
-    // signature work runs exactly once.
-    val cls = graft.core.Lineage.cut(minhashCandsM(s, dir)
+    // classifier aggregates anyway.
+    val cls = minhashCandsM(s, dir)
       .filter(col("m") >= 16)
       .select(col("a_id"), col("b_id"),
         bucket(col("a_id")).as("ab"), bucket(col("b_id")).as("bb"))
@@ -1777,7 +1748,7 @@ object Dedup {
         when(col("ab") === col("bb"),
           when(col("ab") === "eval", lit("eval_eval"))
             .otherwise(lit("train_train")))
-          .otherwise(lit("leak")).as("pair_class")))
+          .otherwise(lit("leak")).as("pair_class"))
     val pairsPer = cls.groupBy(col("pair_class"))
       .agg(count(lit(1)).as("n_pairs"))
     val docsPer = cls
@@ -1905,7 +1876,7 @@ object Dedup {
     s"""toks AS (SELECT doc_id, lang, $duckToks AS w FROM documents),
        |g AS (SELECT doc_id, lang,
        |        list_transform(${TextPipeline.duckTrigrams("w")},
-       |          t -> ${TextPipeline.duckH32("t")}) AS hs
+       |          t -> ${duckH32("t")}) AS hs
        |      FROM toks),
        |f AS (SELECT doc_id, lang, unnest(list_distinct(
        |        list_transform(range(1, greatest(len(hs) - $wm1, 1) + 1),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 import graft.io.Tables
 
 /** M8 — iterative graph analytics: PageRank over the supplier↔customer
@@ -54,15 +55,17 @@ object Graph {
     // materialize the edge list ONCE, hash-partitioned on the join key —
     // without this every unrolled iteration re-derives the whole
     // lineitem⨝orders⨝distinct pipeline (the dominant cost: 6.3 s → this
-    // is the star-contraction localCheckpoint discipline, Dedup.scala).
+    // is the star-contraction checkpoint discipline, Dedup.scala).
     // At cluster scale this is the persisted/checkpointed edge table every
     // Pregel-style system keeps between supersteps.
-    val e = edges(s, dir).repartition(col("src")).localCheckpoint()
+    // sf0.1 median, cuts on/off: 8.99/13.93 s (both cuts)
+    val e = edges(s, dir).repartition(col("src")).transform(Lineage.cut)
     // deg is referenced by every unrolled iteration (plus n and r0) —
     // without materialization each reference re-shuffles the whole edge
     // list for the same node-cardinality aggregate
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: 8.99/13.93 s (both cuts)
+      .transform(Lineage.cut)
     val n = deg.agg(count(lit(1)).as("n_nodes"))
     val r0 = deg.crossJoin(broadcast(n))
       .select(col("src").as("node"), col("deg"), col("n_nodes"),
@@ -128,9 +131,11 @@ object Graph {
     val e = pairs.select(col("a").as("src"), col("b").as("dst"), col("n"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst"), col("n")))
       .groupBy("src", "dst").agg(sum(col("n")).as("w"))
-      .repartition(col("src")).localCheckpoint()
+      // sf0.1 median, cuts on/off: 1.71/2.24 s (both cuts)
+      .repartition(col("src")).transform(Lineage.cut)
     val wt = e.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: 1.71/2.24 s (both cuts)
+      .transform(Lineage.cut)
     val n = wt.agg(count(lit(1)).as("n_nodes"))
     val r0 = wt.crossJoin(broadcast(n))
       .select(col("src").as("node"), col("wtot"), col("n_nodes"),
@@ -174,7 +179,8 @@ object Graph {
     * (a, b) — never a cross product; the final count is a partial-agg
     * shuffle on node id. */
   def qTriangles(s: SparkSession, dir: String): DataFrame =
-    triangleCounts(coOrderEdges(s, dir))
+    // sf0.1 median, cuts on/off: 10.96/21.98 s (all q_triangles cuts)
+    triangleCounts(Lineage.cut(coOrderEdges(s, dir)))
       .orderBy(col("n_triangles").desc, col("part").asc)
       .limit(20)
 
@@ -220,16 +226,12 @@ object Graph {
     * list: per-node triangle participation counts. Exposed for the
     * randomized brute-force property test in PropertiesSpec;
     * `broadcastRows` is injectable so GraphTextSpec can pin BOTH gate
-    * branches (hinted broadcast under it, bare join above it). */
-  private[graft] def triangleCounts(edgesIn: DataFrame,
+    * branches (hinted broadcast under it, bare join above it). Callers
+    * hand `e` in already cut: it feeds the degree, both orientation
+    * joins and the closing probe, plus the count gate below. */
+  private[graft] def triangleCounts(e: DataFrame,
       broadcastRows: Long = BroadcastEdgeRows,
-      alreadyCut: Boolean = false,
       degIn: Option[DataFrame] = None): DataFrame = {
-    // alreadyCut: the caller hands an edge list it has itself just
-    // localCheckpoint-materialized (qClusteringCoeff) — re-checkpointing
-    // it here would persist a second identical block set and pay one
-    // full extra materialization job (r14 fix)
-    val e = if (alreadyCut) edgesIn else edgesIn.localCheckpoint()
     // deg is consumed TWICE below (the da / db orientation joins), and
     // exchange reuse did NOT fire across the two aliased subtrees
     // (PLANS.md r13: q_triangles reused: 0) — each join re-ran the
@@ -240,7 +242,8 @@ object Graph {
     // a third computation.
     val deg = degIn.getOrElse(
       e.select(explode(array(col("a"), col("b"))).as("v"))
-        .groupBy("v").agg(count(lit(1)).as("d")).localCheckpoint())
+        // sf0.1 median, cuts on/off: q_triangles 10.96/21.98 s
+        .groupBy("v").agg(count(lit(1)).as("d")).transform(Lineage.cut))
     val dirE = e
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
@@ -252,7 +255,8 @@ object Graph {
       .select(col("e.u").as("u"), col("e.v").as("v"))
       // consumed by BOTH wedge-join sides; without materialization each
       // side re-runs the degree joins (pruning blocks exchange reuse)
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: q_triangles 10.96/21.98 s, q_clustering_coeff 12.27/23.19 s
+      .transform(Lineage.cut)
     // wedge generation stays a flat self-join on u: both sides prune to
     // the same (u, v) subtree so the exchange is built once and reused,
     // and the d²-sized pair stream flows through whole-stage codegen. (A
@@ -273,8 +277,8 @@ object Graph {
     // (measured: 8.2 s hinted vs 15–20 s converted under suite I/O
     // pressure at sf0.1) — only a static broadcast avoids materializing
     // wedges at all. So the hint is CONDITIONAL on a measured count:
-    // the edge list is already localCheckpoint-materialized, making
-    // count() a metadata-cheap cached-partition sweep, and the
+    // the caller cut the edge list, making count() a metadata-cheap
+    // cached-partition sweep, and the
     // threshold (64M rows ≈ 1 GB of long pairs) keeps the broadcast
     // far inside executor memory. Above it, the bare join stands and
     // AQE picks shuffled-hash or broadcast from runtime stats — the
@@ -311,14 +315,16 @@ object Graph {
     * of int pairs; the final join is node-cardinality ⋈ node-cardinality.
     */
   def qClusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val edges = coOrderEdges(s, dir).localCheckpoint()
+    // sf0.1 median, cuts on/off: 12.27/23.19 s (all q_clustering_coeff cuts)
+    val edges = coOrderEdges(s, dir).transform(Lineage.cut)
     // checkpointed: consumed by the final cc join here AND (renamed) by
     // both orientation joins inside triangleCounts — one computation,
     // three cached-block readers (r14; PLANS.md r13 showed reused: 0,
     // i.e. every consumer re-ran the explode + aggregate)
     val deg = edges.select(explode(array(col("a"), col("b"))).as("part"))
-      .groupBy("part").agg(count(lit(1)).as("degree")).localCheckpoint()
-    val tri = triangleCounts(edges, alreadyCut = true,
+      // sf0.1 median, cuts on/off: 12.27/23.19 s (all q_clustering_coeff cuts)
+      .groupBy("part").agg(count(lit(1)).as("degree")).transform(Lineage.cut)
+    val tri = triangleCounts(edges,
       degIn = Some(deg.select(col("part").as("v"), col("degree").as("d"))))
     deg.filter(col("degree") >= 2)
       .join(tri, Seq("part"), "left")
@@ -462,7 +468,8 @@ object Graph {
       .agg(countDistinct(col("l_orderkey")).as("w"))
     val e = pairs.select(col("s_node").as("src"), col("c_node").as("dst"), col("w"))
       .union(pairs.select(col("c_node"), col("s_node"), col("w")))
-      .repartition(col("src")).localCheckpoint()
+      // sf0.1 median, cuts on/off: 7.94/17.12 s
+      .repartition(col("src")).transform(Lineage.cut)
     // source = 's:' || min(l_suppkey): computed, not hardcoded, so the
     // query survives fixture regeneration; a 1-row aggregate, not collect
     val r0 = Tables.lineitem(s, dir).agg(min(col("l_suppkey")).as("m"))
@@ -530,7 +537,8 @@ object Graph {
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
       .distinct()
-      .localCheckpoint() // 5 consumers: 4 half-steps + the hub base set
+      // sf0.1 median, cuts on/off: 4.44/5.57 s
+      .transform(Lineage.cut) // 5 consumers: 4 half-steps + the hub base set
     val a1 = e.groupBy("p").agg(count(lit(1)).as("a1")) // Aᵀ·1 = in-degree
     val h1 = e.join(a1, "p").groupBy("c").agg(sum(col("a1")).as("h1"))
     val a2 = e.join(h1, "c").groupBy("p").agg(sum(col("h1")).as("a2"))

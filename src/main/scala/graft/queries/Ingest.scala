@@ -338,9 +338,8 @@ object Ingest {
   /** Core of [[qSequenceGaps]] over any single-column (id) relation —
     * exposed for IngestSpec's hand-built gap patterns (adjacent gaps,
     * width-1 gaps, missing head/tail are NOT gaps). */
-  private[graft] def sequenceGaps(idsIn: DataFrame): DataFrame = {
+  private[graft] def sequenceGaps(ids: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ids = idsIn.localCheckpoint() // 4 consumers: starts ×2, ends ×2, bounds
     val bounds = ids.agg(min(col("id")).as("lo"), max(col("id")).as("hi"))
     val starts = ids.select((col("id") + 1).as("gs"))
       .join(ids.select(col("id").as("gs")), Seq("gs"), "left_anti")
@@ -704,7 +703,7 @@ object Ingest {
     * the log is scanned once for the boundary plus once per half — never
     * materialized. A lakehouse MERGE additionally prunes untouched FILES
     * via delta-key min/max stats; the per-key rule is this one. */
-  def qMergeUpsert(s: SparkSession, dir: String): DataFrame = {
+  def qMergeCompact(s: SparkSession, dir: String): DataFrame = {
     val root = scratchDir("mergeupsert", dir)
     val e = graft.io.Tables.events(s, dir)
       .select(col("user_id"), col("event_id"),
@@ -819,7 +818,7 @@ object Ingest {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_dp_release" -> (qDpRelease _),
     "q_pseudonymize" -> (qPseudonymize _),
-    "q_merge_compact" -> (qMergeUpsert _),
+    "q_merge_compact" -> (qMergeCompact _),
     "q_erasure_audit" -> (qErasureAudit _),
     "q_ref_integrity" -> (qRefIntegrity _),
     "q_fd_audit" -> (qFdAudit _),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.TextPipeline
+import graft.core.{Lineage, TextPipeline}
 import graft.io.Tables
 
 /** M4b — approximate-nearest-neighbor similarity search over `embeddings`
@@ -177,14 +177,15 @@ object Similarity {
 
   /** Two Lloyd iterations from the hash seeds: the learned coarse
     * quantizer shared by [[qAnnIvf]] and [[qDedupSemantic]]. The KCells-row
-    * centroid table is localCheckpoint-materialized so the downstream
+    * centroid table is cut (materialized once) so the downstream
     * plans (which reference it from several branches — probes + index,
     * both self-join sides) don't re-run the whole Lloyd chain per branch;
     * a production pipeline persists exactly this table between the
     * training and indexing phases. */
   private def kmeansCentroids(e: DataFrame): DataFrame =
     kmeansUpdate(kmeansAssign(e, kmeansUpdate(kmeansAssign(e, kmeansSeeds(e)))))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: q_kmeans 1.61/1.96 s (wins for 4 of 9 queries)
+      .transform(Lineage.cut)
 
   def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -347,7 +348,8 @@ object Similarity {
     * is a pure function of the pair) with the quadratic term confined to
     * map-local arithmetic. */
   def qDedupSemanticProbe2(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.core.Lineage.cut(vecs(s, dir).select(col("vec_id"), col("v")))
+    // cuts on/off: sf0.1 3.06/3.24 s, sf1 21.44/22.16 s (sf1 won 3/3)
+    val e = Lineage.cut(vecs(s, dir).select(col("vec_id"), col("v")))
     val idx = kmeansAssignTop2(e, kmeansCentroids(e))
     idx.select(col("cell"), col("vec_id").as("a_id"), col("v").as("a_v"))
       .join(idx.select(col("cell"), col("vec_id").as("b_id"),
@@ -396,10 +398,11 @@ object Similarity {
       lit(mod)) === 0L
     val idx = kmeansAssign(e, kmeansCentroids(e)).filter(samp)
       .select(col("vec_id"), col("v"), col("cell"))
-      // 2 consumers each (candidate sides / truth sides); Lineage.cut =
-      // localCheckpoint unless the plan audit disables it
-      .transform(graft.core.Lineage.cut)
-    val es = graft.core.Lineage.cut(e.filter(samp))
+      // 2 consumers each (candidate sides / truth sides)
+      // sf0.1 median, cuts on/off: 2.11/2.36 s (all q_dedup_semantic_eval cuts)
+      .transform(Lineage.cut)
+    // sf0.1 median, cuts on/off: 2.11/2.36 s (all q_dedup_semantic_eval cuts)
+    val es = Lineage.cut(e.filter(samp))
     val truth = es.select(col("vec_id").as("a_id"), col("v").as("a_v"))
       .join(es.select(col("vec_id").as("b_id"), col("v").as("b_v")),
         col("a_id") < col("b_id"))
@@ -639,10 +642,11 @@ object Similarity {
     // several branches (training sample, encode pass, query melt) — each
     // would re-run the 64-dim divide per vector per consumer. A
     // production pipeline writes normalized embeddings once and serves
-    // every index build from that table; localCheckpoint is the local
+    // every index build from that table; the cut is the local
     // stand-in for exactly that.
     val e = raw.select(col("vec_id"),
-      transform(col("v"), x => x / nrm).as("v")).localCheckpoint()
+      // sf0.1 median, cuts on/off: q_ann_pq 4.53/8.06 s, q_ann_index_delta 8.72/21.92 s
+      transform(col("v"), x => x / nrm).as("v")).transform(Lineage.cut)
     // FAISS-style train/add split: Lloyd passes scan only the training
     // set (10% at scale — measured count decides, like the triangles
     // gate); the full corpus is scanned once, to encode. Cuts codebook
@@ -652,7 +656,8 @@ object Similarity {
     val tsub = pqMelt(train)
     val sub = pqMelt(e)
     val c2 = pqUpdate(pqAssign(tsub, pqUpdate(pqAssign(tsub, pqSeeds(train)))))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: q_ann_pq 4.53/8.06 s, q_ann_index_delta 8.72/21.92 s
+      .transform(Lineage.cut)
 
     // compressed store: one row per vector, codes[m] = nearest codeword
     val codes = pqAssign(sub, c2)
@@ -1213,20 +1218,23 @@ object Similarity {
     val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
       lit(0.0), (acc, x) => acc + x))
     val e = raw.select(col("vec_id"),
-      transform(col("v"), x => x / nrm).as("v")).localCheckpoint()
+      // sf0.1 median, cuts on/off: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
+      transform(col("v"), x => x / nrm).as("v")).transform(Lineage.cut)
     // residuals against the assigned (frozen) coarse centroid — consumed
     // by the training sample and the encode pass
     val res = kmeansAssign(e, coarse)
       .join(broadcast(coarse), Seq("cell"))
       .select(col("vec_id"), col("cell").as("ivf_cell"),
         zip_with(col("v"), col("cv"), (x, y) => x - y).as("v"))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
+      .transform(Lineage.cut)
     val train = if (res.count() >= PqTrainMin)
       res.filter(col("vec_id") % 10 === 0) else res
     val tsub = pqMelt(train.select(col("vec_id"), col("v")))
     val rcb = pqUpdate(pqAssign(tsub, pqUpdate(pqAssign(tsub,
         pqSeeds(train.select(col("vec_id"), col("v")))))))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
+      .transform(Lineage.cut)
     val codes = pqAssign(pqMelt(res.select(col("vec_id"), col("v"))), rcb)
       .groupBy(col("vec_id"))
       .agg(transform(sort_array(collect_list(struct(col("m"), col("cell")))),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.TextPipeline
+import graft.core.{Lineage, TextPipeline}
 import graft.io.Tables
 
 /** M3 — text-analysis tier over `documents`: the operations a large-scale
@@ -124,7 +124,8 @@ object TextAnalysis {
     // AND the scoring join — without this, each consumer re-derives the
     // scan + explode + aggregate lineage (3 document scans, measured)
     val tf = bg.groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: q_bigram_lm 2.29/3.15 s, q_perplexity_filter 2.99/4.14 s
+      .transform(Lineage.cut)
     val c12 = tf.groupBy("bigram").agg(sum(col("tf")).as("c12"))
     val c1 = c12
       .select(substring_index(col("bigram"), " ", 1).as("w1"), col("c12"))
@@ -196,7 +197,6 @@ object TextAnalysis {
     val dt = docs
       .select(col("doc_id"), explode(TextPipeline.trigrams(toks)).as("t"))
       .distinct()
-      .localCheckpoint()
     val owner = dt.groupBy("t").agg(min(col("doc_id")).as("first_doc"))
     dt.join(owner, "t")
       .groupBy("doc_id")
@@ -239,9 +239,8 @@ object TextAnalysis {
   def qTailIndex(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val qlog = (c: Column) => round(log2(c.cast("double")) * 1e6).cast("long")
-    val wc = graft.core.Lineage.cut(
-      TextPipeline.words(Tables.documents(s, dir), "text")
-        .groupBy(col("word")).agg(count(lit(1)).as("f")))
+    val wc = TextPipeline.words(Tables.documents(s, dir), "text")
+      .groupBy(col("word")).agg(count(lit(1)).as("f"))
     val nv = wc.agg(count(lit(1)).cast("long").as("n_vocab"))
     val withK = wc.orderBy(col("f").desc, col("word").asc).limit(HillK + 1)
       .withColumn("rank",
@@ -271,7 +270,7 @@ object TextAnalysis {
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
       .withColumn("rank",
         row_number().over(Window.orderBy(col("f").desc, col("word").asc)))
-      .localCheckpoint() // vocabulary-sized; 3 consumers
+      .transform(Lineage.cut) // vocabulary-sized; 3 consumers
     val nv = ranked.agg(max(col("rank")).cast("long").as("n_vocab"))
     val withK = ranked.crossJoin(broadcast(nv))
       .withColumn("k", least(lit(HillK.toLong), col("n_vocab") - 1))
@@ -330,13 +329,11 @@ object TextAnalysis {
     * b: int) relation — exposed so the spec can drive an engineered
     * corpus with real class signal through the exact production
     * spelling. */
-  private[graft] def nbConfusion(docsIn: DataFrame): DataFrame = {
+  private[graft] def nbConfusion(docs: DataFrame): DataFrame = {
     val qlog = (c: Column) => round(log2(c.cast("double")) * 1e6).cast("long")
-    val docs = graft.core.Lineage.cut(docsIn)
-    val model = graft.core.Lineage.cut(
-      docs.filter(col("b") =!= 0)
-        .select(col("y_true").as("y"), explode(col("w")).as("word"))
-        .groupBy("y", "word").agg(count(lit(1)).as("n_wc")))
+    val model = docs.filter(col("b") =!= 0)
+      .select(col("y_true").as("y"), explode(col("w")).as("word"))
+      .groupBy("y", "word").agg(count(lit(1)).as("n_wc"))
     val ctot = model.groupBy("y").agg(sum(col("n_wc")).as("n_c"))
     val vocab = model.agg(countDistinct(col("word")).as("v"))
     val cls = docs.filter(col("b") =!= 0)
@@ -347,8 +344,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("y_true"), explode(col("w")).as("word"))
       .groupBy("doc_id", "y_true", "word").agg(count(lit(1)).as("tf"))
     // model is vocab × classes (BPE-vocab scale at 100 TB) — explicitly
-    // broadcast: the Lineage.cut hides its row count from the planner,
-    // which would otherwise fall back to a sort-merge join
+    // broadcast rather than left to the planner's size estimate
     val scored = tf.crossJoin(spine)
       .join(broadcast(model), Seq("y", "word"), "left")
       .groupBy(col("doc_id"), col("y_true"), col("y"),
@@ -461,15 +457,10 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val words = Tables.documents(s, dir)
       .select(col("doc_id"), explode(toks).as("word"))
-    // tf feeds two consumers (the df aggregate and the join probe) whose
-    // pruned subtrees diverge, so exchange reuse can't kick in — without
-    // materialization the corpus would tokenize + explode once PER
-    // consumer. Checkpoint the narrow (doc_id, word, tf) table instead
-    // (the `sets` pattern below): one tokenize pass, and df becomes a
-    // cheap re-aggregation of it (no distinct pass — df = rows per word).
-    // At cluster scale this is a persist of ~1% of the corpus bytes.
+    // df = rows of tf per word (no distinct pass)
     val tf = words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      // cuts on/off: sf0.1 1.56/1.49 s, sf1 4.81/7.35 s (sf1 won 3/3)
+      .transform(Lineage.cut) // 2 consumers: the df aggregate + the join probe
     val df_ = tf.groupBy("word").agg(count(lit(1)).as("df"))
     // corpus size as a broadcast scalar subquery — NO driver-side action
     // inside an operator (a .count() here would serialize the job DAG)
@@ -519,10 +510,11 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val words = Tables.documents(s, dir)
       .select(col("doc_id"), explode(toks).as("word"))
-    // materialize tf once for its two consumers (see qTfidfTop) — one
-    // tokenize pass; df = rows of tf per word, no distinct
+    // materialize tf once for its two consumers — one tokenize pass;
+    // df = rows of tf per word, no distinct
     val tf = words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: 2.30/2.77 s (both cuts)
+      .transform(Lineage.cut)
     val dfq = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = Tables.documents(s, dir).agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
@@ -542,7 +534,8 @@ object TextAnalysis {
       .agg(sort_array(collect_list(col("word"))).as("terms"),
         count(lit(1)).as("k"))
       .filter(col("k") >= 4)
-      .localCheckpoint()
+      // sf0.1 median, cuts on/off: 2.30/2.77 s (both cuts)
+      .transform(Lineage.cut)
     // C(k,4) sorted 4-subsets per doc: k=4 → the set itself; k=5 → the 5
     // leave-one-out subsets. Tokens are [a-z]+ so the u0001 separator can never appear in a word and the signature is collision-free.
     val subs = sets.select(col("doc_id"),
@@ -798,7 +791,8 @@ object TextAnalysis {
     val qlog = (c: Column) => round(log2(c.cast("double")) * 1e6).cast("long")
     val sw = TextPipeline.words(Tables.documents(s, dir), "text", keep = Seq("source"))
       .groupBy("source", "word").agg(count(lit(1)).as("c_sw"))
-      .localCheckpoint() // feeds the marginal AND the scoring join once
+      // sf0.1 median, cuts on/off: 0.77/0.99 s
+      .transform(Lineage.cut) // feeds the marginal AND the scoring join once
     val cw = sw.groupBy("word").agg(sum(col("c_sw")).as("c_w"))
     val ns = sw.groupBy("source").agg(sum(col("c_sw")).as("n_s"))
     val bigN = ns.agg(sum(col("n_s")).as("big_n"))
@@ -870,7 +864,6 @@ object TextAnalysis {
         sum(when(col("predicted") === "unk", 1L).otherwise(0L)).as("pred_unk"))
       .withColumn("correct",
         when(col("lang") === "en", col("pred_en")).otherwise(col("pred_unk")))
-      .localCheckpoint() // 2 consumers: per-lang rows + the __all__ total
     val total = per.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("pred_en")).as("pred_en"),
         sum(col("pred_unk")).as("pred_unk"),

@@ -10,10 +10,10 @@ import graft.SparkEntry
   * ReadSchema — is the parquet reader doing the projection/selection?),
   * the join strategies chosen, and the exchange (shuffle) count — the
   * three things that decide whether a plan survives a 100× scale-up.
-  * `GRAFT_NO_LINEAGE_CUT=1` makes the eval-tier queries' multi-consumer
-  * lineage cuts (graft.core.Lineage) identity so their FULL plans are
-  * visible — in particular the in-plan h32 sample predicates — and also
-  * prints any `- filter:` lines carrying those predicates. */
+  * `GRAFT_NO_LINEAGE_CUT=1` makes every non-loop lineage cut
+  * (graft.core.Lineage) the identity so the FULL plans are visible — in
+  * particular the in-plan h32 sample predicates, which it prints as
+  * `- sample-filter:` lines. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -26,7 +26,8 @@ object ExplainAudit {
     println()
     println(s"Source fixtures: `$sfDir`. For every query: parquet pushdown")
     println("evidence, join strategies, and shuffle count. Regenerate with")
-    println("`tools/run.sh graft.tools.ExplainAudit > PLANS.md` after plan changes.")
+    println("`GRAFT_NO_LINEAGE_CUT=1 tools/run.sh graft.tools.ExplainAudit > PLANS.md`")
+    println("after plan changes.")
     println()
 
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -58,11 +59,11 @@ object ExplainAudit {
           .map(l => if (l.length > 150) l.take(147) + "..." else l).distinct
         val wsc = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
         // eval-tier sampling evidence: surface Filter nodes carrying the
-        // deterministic h32-mod sample predicate (pmod over an md5-derived
-        // conv) so "the sampled-slice contract is in the plan" is
-        // auditable from PLANS.md alone
+        // deterministic sample predicate `pmod(h32(...), M)` (the native
+        // md5-prefix hash) so "the sampled-slice contract is in the plan"
+        // is auditable from PLANS.md alone
         val sampFilters = lines.filter(l =>
-          l.contains("Filter") && l.contains("pmod(") && l.contains("md5("))
+          l.contains("Filter") && l.contains("pmod(h32("))
           .map(l => if (l.length > 150) l.take(147) + "..." else l).distinct
         println(s"## $name")
         println(s"- shuffles (Exchange): $shuffles, broadcast: $bcasts, " +

@@ -298,7 +298,7 @@ class IngestSpec extends SparkSpec {
 
   test("merge upsert: the written snapshot round-trips to the read-side latest-wins view, with all three merge classes live") {
     val d = "/root/testdata/sf0.01"
-    val written = Ingest.qMergeUpsert(spark, d).collect().map(_.toString).toSeq
+    val written = Ingest.qMergeCompact(spark, d).collect().map(_.toString).toSeq
     val view = graft.queries.Dedup.qDedupLatest(spark, d)
       .collect().map(_.toString).toSeq
     assert(written.nonEmpty && written == view,
@@ -321,7 +321,7 @@ class IngestSpec extends SparkSpec {
       (3L, 30L, ts(7), "view", 5.0))     // u3: pure insert
       .toDF("user_id", "event_id", "ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val got = Ingest.qMergeUpsert(spark, tmp).collect()
+    val got = Ingest.qMergeCompact(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(3))).toSeq
     assert(got == Seq((1L, 10L, "view"), (2L, 21L, "purchase"),
       (3L, 30L, "view")),

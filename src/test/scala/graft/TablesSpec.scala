@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -42,36 +40,6 @@ class TablesSpec extends SparkSpec {
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
-
-  /** Jobs submitted while `body` runs. Each job is tagged through a local
-    * property captured at submission; a trailing control job (one footer
-    * inference) marks the end, and since the listener bus delivers in
-    * order, every job `body` started has been seen once the control's
-    * start arrives. */
-  private def jobsDuring(body: => Unit, control: => Unit): Int = {
-    val key = "graft.test.phase"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body"); body
-      sc.setLocalProperty(key, "control"); control
-      sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("control") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("control"), "control job never reached the bus")
-      seen.toArray.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("read after write replays exactly the inferred schema and rows") {
     val path = s"${scratch("rt")}/rich.parquet"
