@@ -85,14 +85,6 @@ object VectorFunctions {
     ExpressionUtils.column(agg.toAggregateExpression())
   }
 
-  /** Unicode NFC normalization of a STRING column (UAX #15 canonical
-    * composition; ASCII rows zero-copy — see graft.plans.NfcNormalize).
-    * Spark has no normalization builtin; DuckDB's `nfc_normalize` is the
-    * oracle twin. */
-  def nfc(s: Column): Column =
-    ExpressionUtils.column(graft.plans.NfcNormalize(
-      ExpressionUtils.expression(s)))
-
   /** Reference-tokenizer normalized token array of a STRING column
     * (split on the single space, [a-zA-Z] only, ASCII-lowercased,
     * empties dropped) as one fused byte pass — see

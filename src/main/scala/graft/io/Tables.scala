@@ -7,6 +7,10 @@ import org.apache.spark.sql.types.StructType
   * the write/read pair for the scratch artifacts the queries persist
   * between stages (index stores, sketch stores, snapshot generations).
   *
+  * Artifact lifecycle: every artifact lives under a scratch root from
+  * [[store]], built at most once per (prefix, fixture dir) per JVM and
+  * deleted with its root when the JVM exits.
+  *
   * One accessor per table; every query takes `sfDir` (the per-scale-factor
   * directory) so the same plan runs at sf0.001 (smoke), sf0.01 (oracle) and
   * sf0.1 (bench) — and, unchanged, against a 100 TB warehouse path.
@@ -60,6 +64,37 @@ object Tables {
     df.write.mode("overwrite").parquet(path)
     schemaCache.put(path, (mtime(path), df.schema))
   }
+
+  /** One scratch root and whether its build has completed. `ensure` is
+    * synchronized per root: concurrent callers wait for one build, a
+    * build may call [[store]] for another key (the erase/add/compact
+    * generations build on their gen0), and a build that throws leaves
+    * the root unbuilt, so the next call rebuilds into the same root. */
+  private final class Scratch(val root: String) {
+    private var built = false
+    def ensure(build: String => Unit): String = synchronized {
+      if (!built) { build(root); built = true }
+      root
+    }
+  }
+
+  private val scratch =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Scratch]()
+
+  /** The scratch root for (`prefix`, fixture `dir`), after `build` has
+    * filled it once in this JVM; later calls only return the root. The
+    * root is `<tmpdir>/graft_<prefix>_<sanitized dir>-<uuid>`: the full
+    * dir string keys the memo, so distinct fixture paths (a symlink alias
+    * included) never share a root, and the random suffix keeps
+    * concurrent JVMs out of each other's overwrites. Spark's shutdown
+    * hook removes the root at JVM exit. A query that rewrites its
+    * artifacts on every call passes a no-op build and takes the root. */
+  def store(prefix: String, dir: String)(build: String => Unit): String =
+    scratch.computeIfAbsent((prefix, dir), { key =>
+      val safe = key._2.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80)
+      new Scratch(org.apache.spark.sql.graftbridge.Bridge
+        .tempDirDeletedAtExit(s"graft_${key._1}_$safe"))
+    }).ensure(build)
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     read(spark, s"$sfDir/$name.parquet")

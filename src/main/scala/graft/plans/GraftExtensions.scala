@@ -27,7 +27,6 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   *  - `hll_det(BIGINT) -> ARRAY<INT>` (deterministic HyperLogLog
   *    registers over 32-bit hashes — fixed 256-byte state, oracle-
   *    verifiable estimate, see HllDet);
-  *  - `nfc(STRING) -> STRING` (Unicode NFC, see NfcNormalize);
   *  - `normalized_tokens(STRING) -> ARRAY<STRING>` (the reference
   *    tokenizer in one byte pass, see NormalizedTokens);
   *  - `h32(STRING) -> BIGINT` and `h60(STRING) -> BIGINT` (portable
@@ -78,8 +77,6 @@ object GraftExtensions {
       arity("topk_min", 3)(c => TopKMin(c(0), c(1), c(2)))),
     (FunctionIdentifier("hll_det"), HllDet.info,
       arity("hll_det", 1)(c => HllDet(c(0)))),
-    (FunctionIdentifier("nfc"), NfcNormalize.info,
-      arity("nfc", 1)(c => NfcNormalize(c(0)))),
     (FunctionIdentifier("normalized_tokens"), NormalizedTokens.info,
       arity("normalized_tokens", 1)(c => NormalizedTokens(c(0)))),
     (FunctionIdentifier("h32"), H32.info,

@@ -246,17 +246,12 @@ object Analytics {
   /** Persisted Bloom store root — the historical wave's filter bits
     * (build keys with o_orderkey mod 4 ≠ 3, the lifecycle arrival-wave
     * convention), written once per fixture dir. */
-  private val bloomStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def bloomStoreDir(s: SparkSession, dir: String): String =
-    bloomStoreRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("bloomstore", d)
-      Tables.write(bloomBits(highValueKeys(s, d)
+    Tables.store("bloomstore", dir) { root =>
+      Tables.write(bloomBits(highValueKeys(s, dir)
           .filter(pmod(col("o_orderkey"), lit(4)) =!= 3)
           .select(col("o_orderkey").as("k"))), s"$root/bits_hist.parquet")
-      root
-    })
+    }
 
   /** Incremental Bloom maintenance — the persisted-store doctrine on the
     * MEMBERSHIP sketch, and the monoid half of the store-algebra
@@ -720,48 +715,36 @@ object Analytics {
           .as("active_7d_approx"))
   }
 
-  /** Persisted-register-store roots for [[qHllIncremental]]. */
-  private val hllStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Writes the per-day register SNAPSHOT (days strictly before the
     * data-anchored cutoff, min-day + 21 — the qIncrementalAgg anchor
     * convention): the persistable incremental state of the rolling
     * sketch, one 256-int array per day. */
   private[graft] def hllRegisterStoreDir(s: SparkSession, dir: String): String =
-    hllStoreRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("hllregstore", d)
-      val ev = Tables.events(s, d)
+    Tables.store("hllregstore", dir) { root =>
+      val ev = Tables.events(s, dir)
         .select(col("ts"), col("user_id"), to_date(col("ts")).as("day"))
       val anchor = ev.agg(date_add(min(col("day")), 21).as("cut"))
       Tables.write(graft.streaming.Windows.hllDayRegisters(
           ev.crossJoin(broadcast(anchor)).filter(col("day") < col("cut"))),
         s"$root/day_registers.parquet")
-      root
-    })
+    }
 
   /** Erasure-subject predicate for the sketch store — the shared
     * q_erasure_audit scope ([[Ingest.erasureSubject]]) applied to the
     * event stream's user dimension. */
   private def erasedUser(c: Column): Column = Ingest.erasureSubject(c)
 
-  /** Erased-generation roots for [[qHllStoreErase]]. */
-  private val hllErasedStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Writes the erased GENERATION of the register store: per-day HLL
     * registers REBUILT from the surviving events — see
     * [[qHllStoreErase]] for why rebuild (not subtraction) is the only
     * correct erase verb for sketch state. */
   private[graft] def hllErasedStoreDir(s: SparkSession, dir: String): String =
-    hllErasedStoreRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("hllregerase", d)
+    Tables.store("hllregerase", dir) { root =>
       Tables.write(graft.streaming.Windows.hllDayRegisters(
-          Tables.events(s, d).select(col("ts"), col("user_id"))
+          Tables.events(s, dir).select(col("ts"), col("user_id"))
             .filter(!erasedUser(col("user_id")))),
         s"$root/day_registers.parquet")
-      root
-    })
+    }
 
   /** Right-to-be-forgotten for SKETCH state — the erase verb the index
     * tiers have ([[graft.queries.Dedup.qDedupIndexErase]] prunes rows by
@@ -1029,23 +1012,18 @@ object Analytics {
     cmsHeavyHitters(counts, cmsSketch(counts))
   }
 
-  /** Persisted CMS store roots — writes BOTH generations once per
+  /** Persisted CMS store — writes BOTH generations once per
     * fixture dir: `sketch_hist` over the historical docs (doc_id mod 4
     * ≠ 3, the lifecycle arrival-wave convention) for the incremental
     * rung, and `sketch_full` over the whole corpus for the erase rung. */
-  private val cmsStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def cmsStoreDir(s: SparkSession, dir: String): String =
-    cmsStoreRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("cmsstore", d)
-      val docs = Tables.documents(s, d)
+    Tables.store("cmsstore", dir) { root =>
+      val docs = Tables.documents(s, dir)
       Tables.write(
         cmsSketch(cmsKeyCounts(docs.filter(pmod(col("doc_id"), lit(4)) =!= 3))),
         s"$root/sketch_hist.parquet")
       Tables.write(cmsSketch(cmsKeyCounts(docs)), s"$root/sketch_full.parquet")
-      root
-    })
+    }
 
   /** Incremental CMS maintenance — the persisted-store doctrine
     * ([[qHllIncremental]]) on the frequency sketch: historical counters

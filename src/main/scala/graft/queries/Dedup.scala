@@ -210,12 +210,11 @@ object Dedup {
     * precision/recall are ratio statistics, so a uniform pair subsample
     * estimates them unbiasedly). The hash is the h32 both engines already
     * share, so Spark and DuckDB measure the SAME sampled sub-corpus.
-    * Default 1 = non-binding (every document passes; CORRECTNESS stays
-    * hash-exact on the full fixture); GRAFT_EVAL_SAMPLE_MOD overrides for
-    * scale measurements, and DedupSimilaritySpec pins sampled ≈ full at
-    * fixture scale via the injectable impls. */
-  private[graft] val EvalSampleMod: Long =
-    sys.env.get("GRAFT_EVAL_SAMPLE_MOD").map(_.toLong).getOrElse(1L)
+    * The registered queries use 1 = non-binding (every document passes;
+    * CORRECTNESS stays hash-exact on the full fixture); a scale
+    * measurement passes its own modulus to the injectable impls, which is
+    * how DedupSimilaritySpec pins sampled ≈ full at fixture scale. */
+  private[graft] val EvalSampleMod: Long = 1L
 
   /** The eval-tier doc-space sample predicate (Spark side). */
   private def evalSampled(mod: Long): Column =
@@ -840,13 +839,6 @@ object Dedup {
         col("kind"), col("jaccard"))
       .orderBy("new_id", "dup_of")
 
-  /** Persisted-index roots for [[qDedupPersisted]] — one build per
-    * (JVM, fixture dir), the q_ann_persisted discipline applied to the
-    * dedup tier: the historical corpus's winnow-fingerprint POSTINGS and
-    * its shingle verification store are parquet artifacts written once. */
-  private val dedupIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Sorted distinct 60-bit hashes of a shingle array — the ONE store
     * spelling shared by the batch index build ([[hashedStore]]) and the
     * streaming probe's per-row store (Windows.dedupIndexProbeStream), so
@@ -882,12 +874,14 @@ object Dedup {
       s"$root/shingles.parquet")
   }
 
+  /** Persisted index for [[qDedupPersisted]] — one build per
+    * (JVM, fixture dir), the q_ann_persisted discipline applied to the
+    * dedup tier: the historical corpus's winnow-fingerprint POSTINGS and
+    * its shingle verification store are parquet artifacts written once. */
   private[graft] def dedupIndexDir(s: SparkSession, dir: String): String =
-    dedupIndexRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("dedupindex", d)
-      writeDedupIndex(s, d, col("doc_id") % 2 === 0, root)
-      root
-    })
+    Tables.store("dedupindex", dir) { root =>
+      writeDedupIndex(s, dir, col("doc_id") % 2 === 0, root)
+    }
 
   /** [[qDedupIncremental]] against a PERSISTED index — the probe-many
     * production shape: the historical half's fingerprint postings and
@@ -969,11 +963,6 @@ object Dedup {
       .orderBy("new_id", "dup_of")
   }
 
-  /** Erased-generation roots for [[qDedupIndexErase]], one rewrite per
-    * (JVM, fixture dir) over the [[dedupIndexDir]] artifacts. */
-  private val dedupErasedRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Deletion set for the write-side index erasure: index documents
     * whose doc_id ≡ 0 (mod [[Ingest.ErasureMod]]) — the SAME subject
     * rule the read-side blast-radius audit (q_erasure_audit) scopes, so
@@ -988,15 +977,13 @@ object Dedup {
     * surviving corpus — the property the spec re-proves by building that
     * rebuild and diffing probes. */
   private[graft] def dedupErasedIndexDir(s: SparkSession, dir: String): String =
-    dedupErasedRoots.computeIfAbsent(dir, { d =>
-      val src = dedupIndexDir(s, d)
-      val root = Ingest.scratchDir("dedupindexerase", d)
+    Tables.store("dedupindexerase", dir) { root =>
+      val src = dedupIndexDir(s, dir)
       Tables.write(Tables.read(s, s"$src/postings.parquet")
         .filter(!erasedDoc(col("doc_id"))), s"$root/postings.parquet")
       Tables.write(Tables.read(s, s"$src/shingles.parquet")
         .filter(!erasedDoc(col("doc_id"))), s"$root/shingles.parquet")
-      root
-    })
+    }
 
   /** Write-side index ERASURE — the delete verb of the persisted-index
     * lifecycle (build: [[dedupIndexDir]]; probe: [[qDedupPersisted]];
@@ -1028,10 +1015,6 @@ object Dedup {
   def qDedupIndexErase(s: SparkSession, dir: String): DataFrame =
     probeDedupIndex(s, dir, dedupErasedIndexDir(s, dir),
       !erasedDoc(col("doc_id")))
-
-  /** Added-generation roots for [[qDedupIndexAdd]]. */
-  private val dedupAddRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** A probe's duplicate-id set, Lineage.cut because every builder
     * consumes it from two write jobs (postings + store anti-joins) —
@@ -1086,17 +1069,15 @@ object Dedup {
     * batch postings/store rows the probe already needed ARE the rows
     * appended. */
   private[graft] def dedupAddedIndexDir(s: SparkSession, dir: String): String =
-    dedupAddRoots.computeIfAbsent(dir, { d =>
-      val src = dedupIndexDir(s, d)
-      val root = Ingest.scratchDir("dedupindexadd", d)
-      val dups = dedupDupIds(s, d)
+    Tables.store("dedupindexadd", dir) { root =>
+      val src = dedupIndexDir(s, dir)
+      val dups = dedupDupIds(s, dir)
       Tables.write(Tables.read(s, s"$src/postings.parquet")
-        .unionByName(acceptedBatchPostings(s, d, dups)),
+        .unionByName(acceptedBatchPostings(s, dir, dups)),
         s"$root/postings.parquet")
       Tables.write(Tables.read(s, s"$src/shingles.parquet")
-        .unionByName(acceptedBatchStore(s, d, dups)), s"$root/shingles.parquet")
-      root
-    })
+        .unionByName(acceptedBatchStore(s, dir, dups)), s"$root/shingles.parquet")
+    }
 
   /** Write-side index ADD — the verb that closes the incremental-ingest
     * loop [[qDedupPersisted]] opens: after probing, the batch's
@@ -1127,10 +1108,6 @@ object Dedup {
   def qDedupIndexAdd(s: SparkSession, dir: String): DataFrame =
     artifactSummary(s, dedupAddedIndexDir(s, dir), col("doc_id") % 2 === 1)
 
-  /** Compacted-generation roots for [[qDedupIndexCompact]]. */
-  private val dedupCompactRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Builds the generational layout of the dedup index and compacts
     * it — the dedup twin of Similarity's ANN compaction: a base
     * postings/store generation (the even half, from [[dedupIndexDir]]),
@@ -1141,15 +1118,14 @@ object Dedup {
     * base ∪ delta minus tombstones into `gen1` with one union + one
     * anti-join per artifact — no re-fingerprinting, no text scan. */
   private[graft] def dedupCompactedIndexDir(s: SparkSession, dir: String): String =
-    dedupCompactRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("dedupindexcompact", d)
-      val gen0 = dedupIndexDir(s, d)
-      val dups = dedupDupIds(s, d)
-      Tables.write(acceptedBatchPostings(s, d, dups),
+    Tables.store("dedupindexcompact", dir) { root =>
+      val gen0 = dedupIndexDir(s, dir)
+      val dups = dedupDupIds(s, dir)
+      Tables.write(acceptedBatchPostings(s, dir, dups),
         s"$root/delta_postings.parquet")
-      Tables.write(acceptedBatchStore(s, d, dups),
+      Tables.write(acceptedBatchStore(s, dir, dups),
         s"$root/delta_shingles.parquet")
-      Tables.write(Tables.documents(s, d).select(col("doc_id"))
+      Tables.write(Tables.documents(s, dir).select(col("doc_id"))
         .filter(erasedDoc(col("doc_id"))), s"$root/tombstones.parquet")
       val tomb = Tables.read(s, s"$root/tombstones.parquet")
       Tables.write(Tables.read(s, s"$gen0/postings.parquet")
@@ -1158,8 +1134,7 @@ object Dedup {
       Tables.write(Tables.read(s, s"$gen0/shingles.parquet")
         .unionByName(Tables.read(s, s"$root/delta_shingles.parquet"))
         .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/shingles.parquet")
-      s"$root/gen1"
-    })
+    } + "/gen1"
 
   /** Dedup index COMPACTION — the generational fold over the full
     * lifecycle: base (build) + delta (the ADD verb's accepted batch) −
@@ -1180,10 +1155,6 @@ object Dedup {
     * once, keyed by doc_id. */
   def qDedupIndexCompact(s: SparkSession, dir: String): DataFrame =
     artifactSummary(s, dedupCompactedIndexDir(s, dir), lit(true))
-
-  /** Lifecycle-composition roots for [[qDedupIndexLifecycle]]. */
-  private val dedupLifecycleRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Re-consent predicate (the ANN tier's reAddedVec applied to docs):
     * the even-multiple half of the deletion set re-uploads AFTER its
@@ -1211,16 +1182,15 @@ object Dedup {
     * every generation is pure parquet-row algebra (no re-shingling of
     * history anywhere in the chain). */
   private[graft] def dedupLifecycleIndexDir(s: SparkSession, dir: String): String =
-    dedupLifecycleRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("dedupindexlifecycle", d)
-      val gen0 = dedupIndexDir(s, d)
+    Tables.store("dedupindexlifecycle", dir) { root =>
+      val gen0 = dedupIndexDir(s, dir)
       val batch1 = col("doc_id") % 4 === 1
-      val dups1 = dupIdsOf(probeDedupIndex(s, d, gen0, batch = batch1))
-      Tables.write(acceptedBatchPostings(s, d, dups1, batch1),
+      val dups1 = dupIdsOf(probeDedupIndex(s, dir, gen0, batch = batch1))
+      Tables.write(acceptedBatchPostings(s, dir, dups1, batch1),
         s"$root/delta1_postings.parquet")
-      Tables.write(acceptedBatchStore(s, d, dups1, batch1),
+      Tables.write(acceptedBatchStore(s, dir, dups1, batch1),
         s"$root/delta1_shingles.parquet")
-      Tables.write(Tables.documents(s, d).select(col("doc_id"))
+      Tables.write(Tables.documents(s, dir).select(col("doc_id"))
         .filter(erasedDoc(col("doc_id"))), s"$root/tombstones.parquet")
       val tomb = Tables.read(s, s"$root/tombstones.parquet")
       Tables.write(Tables.read(s, s"$gen0/postings.parquet")
@@ -1231,15 +1201,14 @@ object Dedup {
         .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/shingles.parquet")
       val batch2 = (col("doc_id") % 4 === 3 && !erasedDoc(col("doc_id"))) ||
         reAddedDoc(col("doc_id"))
-      val dups2 = dupIdsOf(probeDedupIndex(s, d, s"$root/gen1", batch = batch2))
+      val dups2 = dupIdsOf(probeDedupIndex(s, dir, s"$root/gen1", batch = batch2))
       Tables.write(Tables.read(s, s"$root/gen1/postings.parquet")
-        .unionByName(acceptedBatchPostings(s, d, dups2, batch2)),
+        .unionByName(acceptedBatchPostings(s, dir, dups2, batch2)),
         s"$root/gen2/postings.parquet")
       Tables.write(Tables.read(s, s"$root/gen1/shingles.parquet")
-        .unionByName(acceptedBatchStore(s, d, dups2, batch2)),
+        .unionByName(acceptedBatchStore(s, dir, dups2, batch2)),
         s"$root/gen2/shingles.parquet")
-      s"$root/gen2"
-    })
+    } + "/gen2"
 
   /** END-TO-END dedup-index lifecycle — add → erase → compact → add
     * composed on one generation chain ([[dedupLifecycleIndexDir]]),
@@ -1577,10 +1546,6 @@ object Dedup {
     Lineage.cut(if (p == L) kp else widen(kp, L - p))
   }
 
-  /** Persisted substring-key index roots for [[qSubstrIncremental]]. */
-  private val substrIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Writes the historical substring-key INDEX: per width-[[SubstrL50]]
     * key of the even-doc_id corpus half (standing in for yesterday's
     * already-processed corpus), its per-DOCUMENT occurrence count —
@@ -1591,19 +1556,13 @@ object Dedup {
     * aggregate sum(cnt) per key on read; a production store compacts
     * that aggregate alongside, folding it on each generation flip. */
   private[graft] def substrIndexDir(s: SparkSession, dir: String): String =
-    substrIndexRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("substrix", d)
+    Tables.store("substrix", dir) { root =>
       Tables.write(
-        substringKeys(Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
+        substringKeys(Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
             SubstrL50)
           .groupBy(col("k"), col("doc_id")).agg(count(lit(1)).as("cnt")),
         s"$root/keys.parquet")
-      root
-    })
-
-  /** Erased-generation roots for [[qSubstrIndexErase]]. */
-  private val substrErasedRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Writes the erased GENERATION of the substring-key store: gen0's
     * postings minus the erasure subjects' rows — a PRUNE, sound here
@@ -1611,12 +1570,10 @@ object Dedup {
     * document (contrast [[graft.queries.Analytics.qHllStoreErase]],
     * where max-fold registers force a rebuild). */
   private[graft] def substrErasedIndexDir(s: SparkSession, dir: String): String =
-    substrErasedRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("substrixerase", d)
-      Tables.write(Tables.read(s, s"${substrIndexDir(s, d)}/keys.parquet")
+    Tables.store("substrixerase", dir) { root =>
+      Tables.write(Tables.read(s, s"${substrIndexDir(s, dir)}/keys.parquet")
         .filter(!erasedDoc(col("doc_id"))), s"$root/keys.parquet")
-      root
-    })
+    }
 
   /** Incremental substring dedup — the persisted-index doctrine applied
     * to the SUFFIX tier, closing the family's lifecycle the way the

@@ -279,7 +279,7 @@ object Extras {
     qsEstimates(qsHist(o, geom), geom)
   }
 
-  /** Persisted quantile-histogram store roots — written once per fixture
+  /** Persisted quantile-histogram store — written once per fixture
     * dir (the cmsStoreDir pattern): the HISTORICAL generation
     * (o_orderkey mod 4 ≠ 3, the lifecycle arrival-wave convention) with
     * its geometry for the incremental rung, and the FULL-corpus
@@ -287,13 +287,9 @@ object Extras {
     * BESIDE the counters because bucket i is meaningless without the
     * (lo, hi) it was cut from — the store contract [[qsBucket]]
     * documents. */
-  private val qsStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def qsStoreDir(s: SparkSession, dir: String): String =
-    qsStoreRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("qsstore", d)
-      val o = Tables.orders(s, d)
+    Tables.store("qsstore", dir) { root =>
+      val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice").as("x"))
       val hist = o.filter(pmod(col("o_orderkey"), lit(4)) =!= 3).select(col("x"))
       val histGeom = hist.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
@@ -303,8 +299,7 @@ object Extras {
       val fullGeom = full.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
       Tables.write(fullGeom, s"$root/geom_full.parquet")
       Tables.write(qsHist(full, fullGeom), s"$root/hist_full.parquet")
-      root
-    })
+    }
 
   /** Incremental quantile-histogram maintenance — the persisted-store
     * doctrine (qCmsIncremental) on the quantile family: historical

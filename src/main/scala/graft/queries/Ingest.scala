@@ -48,23 +48,6 @@ object Ingest {
       else "/root/repo/fixtures/ingest"
     }
 
-  /** Per-JVM scratch roots for the write-then-read queries, keyed by
-    * (query prefix, FULL fixture path): the full sanitized path — not
-    * its hashCode — makes distinct fixture dirs collision-free, and
-    * `Files.createTempDirectory`'s random suffix makes concurrent
-    * sessions in different JVMs land in different roots, so two runs
-    * over the same fixture can never race each other's
-    * mode(overwrite) writes. Cached so bench iterations rewrite one
-    * stable root instead of leaking a directory per call. */
-  private val scratchRoots =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private[graft] def scratchDir(prefix: String, dir: String): String =
-    scratchRoots.computeIfAbsent((prefix, dir), { key =>
-      val safe = key._2.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80)
-      java.nio.file.Files
-        .createTempDirectory(s"graft_${key._1}_${safe}_").toString
-    })
-
   /** CSV with an explicit schema: 24 rows, 3 of them with a
     * type-malformed `amount` cell ("N/A"). PERMISSIVE parses the good
     * cells of a bad row (category survives), nulls the bad cell, and
@@ -173,7 +156,7 @@ object Ingest {
     * The eager write is the operator under test — a sink IS a side
     * effect; Overwrite keeps the query re-runnable. */
   def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir("orc", dir)
+    val out = Tables.store("orc", dir)(_ => ())
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
       .write.mode("overwrite").orc(out)
@@ -212,7 +195,7 @@ object Ingest {
     * synthesis and runs eagerly at construction — it IS part of the
     * operator's measured cost, like q_orc_roundtrip's write half.) */
   def qSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val base = scratchDir("schevo", dir)
+    val base = Tables.store("schevo", dir)(_ => ())
     val docs = Tables.documents(s, dir)
     docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -367,24 +350,23 @@ object Ingest {
     * PREPARATION — the entire point of bucketing is that you pay the
     * cluster-by-key shuffle once at ingest and then every downstream
     * join of the co-bucketed tables skips its exchanges forever — so it
-    * memoizes per fixture rather than re-running per call (unlike
+    * builds once per fixture rather than re-running per call (unlike
     * q_schema_evolution, whose write IS the measured operator). */
-  private val bucketPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def bucketedPair(s: SparkSession, dir: String): (String, String) =
-    bucketPairs.computeIfAbsent(dir, { _ =>
-      val base = scratchDir("bktjoin", dir)
+  private def bucketedPair(s: SparkSession, dir: String): (String, String) = {
+    def names(base: String) = {
       val tag = base.replaceAll("[^A-Za-z0-9_]", "_").takeRight(48)
-      val ot = s"bkt_orders_$tag"; val lt = s"bkt_lineitem_$tag"
+      (s"bkt_orders_$tag", s"bkt_lineitem_$tag")
+    }
+    names(Tables.store("bktjoin", dir) { base =>
+      val (ot, lt) = names(base)
       Tables.orders(s, dir).write.mode("overwrite")
         .bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/orders").format("parquet").saveAsTable(ot)
       Tables.lineitem(s, dir).write.mode("overwrite")
         .bucketBy(JoinBuckets, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$base/lineitem").format("parquet").saveAsTable(lt)
-      (ot, lt)
     })
+  }
 
   /** Co-bucketed fact-fact join: lineitem⨝orders where BOTH sides were
     * written `bucketBy(8, orderkey).sortBy(orderkey)` — Spark reads the
@@ -415,17 +397,12 @@ object Ingest {
 
   /** One-time-per-JVM partitioned-layout write for [[qDppPrune]]:
     * customer clustered into one directory per c_nationkey. Layout
-    * preparation, memoized like [[bucketedPair]]. */
-  private val dppRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * preparation, built once like [[bucketedPair]]. */
   private def partitionedCustomer(s: SparkSession, dir: String): String =
-    dppRoots.computeIfAbsent(dir, { _ =>
-      val path = s"${scratchDir("dpp", dir)}/customer"
+    Tables.store("dpp", dir) { root =>
       Tables.customer(s, dir).write.mode("overwrite")
-        .partitionBy("c_nationkey").parquet(path)
-      path
-    })
+        .partitionBy("c_nationkey").parquet(s"$root/customer")
+    } + "/customer"
 
   /** Dynamic partition pruning over a star join: customer laid out
     * one-directory-per-nation, joined to the nation⨝region dim filtered
@@ -704,7 +681,7 @@ object Ingest {
     * materialized. A lakehouse MERGE additionally prunes untouched FILES
     * via delta-key min/max stats; the per-key rule is this one. */
   def qMergeCompact(s: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("mergeupsert", dir)
+    val root = Tables.store("mergeupsert", dir)(_ => ())
     val e = graft.io.Tables.events(s, dir)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"), col("event_type"), col("value"))

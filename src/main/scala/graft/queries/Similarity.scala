@@ -364,10 +364,9 @@ object Similarity {
   }
 
   /** Vec-space sampling modulus for [[qDedupSemanticEval]] — the
-    * q_dedup_eval doctrine (in-plan sampled truth; default non-binding,
-    * GRAFT_ANN_EVAL_MOD overrides for scale runs). */
-  private[graft] val AnnEvalSampleMod: Long =
-    sys.env.get("GRAFT_ANN_EVAL_MOD").map(_.toLong).getOrElse(1L)
+    * q_dedup_eval doctrine (in-plan sampled truth; 1 = non-binding, a
+    * scale run passes its own modulus to the injectable impl). */
+  private[graft] val AnnEvalSampleMod: Long = 1L
 
   /** Recall of the cell-blocked semantic dedup ([[qDedupSemantic]])
     * against the EXACT all-pairs cosine truth, per cosine decile band —
@@ -830,20 +829,16 @@ object Similarity {
     pqRerank(ix.raw, shortlist)
   }
 
-  /** Persisted-index roots, one BUILD per (JVM, fixture dir). The build
+  /** Persisted index, one BUILD per (JVM, fixture dir). The build
     * trains the same IVFADC index as [[qAnnIvfPq]] and writes its three
     * artifacts as parquet: `ivf_centroids` (KCells rows), `pq_codebook`
     * (M·PqK rows) and `pq_codes` (vec_id, codes, ivf_cell — 16 B/vec plus
-    * the cell id). Cached so every later probe (and every bench
+    * the cell id). Built once so every later probe (and every bench
     * iteration after the first) reads the index instead of re-training —
     * the FAISS train/add/search lifecycle. */
-  private val indexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def persistedIndexDir(s: SparkSession, dir: String): String =
-    indexRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("annindex", d)
-      val ix = buildPqIndex(s, d, PqTrainMin)
+    Tables.store("annindex", dir) { root =>
+      val ix = buildPqIndex(s, dir, PqTrainMin)
       val coarse = kmeansCentroids(ix.e)
       val inv = ix.codes.join(
         kmeansAssign(ix.e, coarse)
@@ -851,8 +846,7 @@ object Similarity {
       Tables.write(coarse, s"$root/ivf_centroids.parquet")
       Tables.write(ix.cb, s"$root/pq_codebook.parquet")
       Tables.write(inv, s"$root/pq_codes.parquet")
-      root
-    })
+    }
 
   /** Probe-only IVFADC over the PERSISTED index — the production query
     * shape the in-plan [[qAnnIvfPq]] deliberately isn't: at 100 TB you
@@ -976,11 +970,6 @@ object Similarity {
       .select(col("vec_id"), col("codes"), col("ivf_cell"))
   }
 
-  /** Erased-generation roots for [[qAnnIndexErase]], one rewrite per
-    * (JVM, fixture dir) over the [[persistedIndexDir]] artifacts. */
-  private val erasedIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Deletion-set predicate for the ANN index erasure: vec_id ≡ 0
     * (mod [[graft.queries.Ingest.ErasureMod]]) — the q_erasure_audit
     * subject rule applied to the vector store. */
@@ -996,17 +985,15 @@ object Similarity {
     * table is bit-equal to re-encoding the surviving corpus — the
     * delete-side twin of the add-side equality, spec-pinned. */
   private[graft] def erasedAnnIndexDir(s: SparkSession, dir: String): String =
-    erasedIndexRoots.computeIfAbsent(dir, { d =>
-      val src = persistedIndexDir(s, d)
-      val root = Ingest.scratchDir("annindexerase", d)
+    Tables.store("annindexerase", dir) { root =>
+      val src = persistedIndexDir(s, dir)
       Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
         s"$root/ivf_centroids.parquet")
       Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
         s"$root/pq_codebook.parquet")
       Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
         .filter(!erasedVec(col("vec_id"))), s"$root/pq_codes.parquet")
-      root
-    })
+    }
 
   /** Write-side ANN index ERASURE — the delete verb of the FAISS
     * lifecycle (train / add / search / DELETE), completing
@@ -1032,10 +1019,6 @@ object Similarity {
     probeAnnIndex(s, dir, erasedAnnIndexDir(s, dir),
       !erasedVec(col("vec_id")))
 
-  /** Compacted-generation roots for [[qAnnIndexCompact]]. */
-  private val compactRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Builds the GENERATIONAL layout an index store physically
     * accumulates, then compacts it: a base `pq_codes` generation (the
     * even half — "yesterday's build"), TWO delta files appended by
@@ -1048,17 +1031,16 @@ object Similarity {
     * to the index artifacts, and the third lifecycle verb after add
     * ([[qAnnIndexDelta]]) and delete ([[qAnnIndexErase]]). */
   private[graft] def compactedAnnIndexDir(s: SparkSession, dir: String): String =
-    compactRoots.computeIfAbsent(dir, { d =>
-      val src = persistedIndexDir(s, d)
-      val root = Ingest.scratchDir("annindexcompact", d)
+    Tables.store("annindexcompact", dir) { root =>
+      val src = persistedIndexDir(s, dir)
       Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
         .filter(col("vec_id") % 2 === 0), s"$root/gen0/pq_codes.parquet")
-      Tables.write(encodeRows(s, d, col("vec_id") % 4 === 1),
+      Tables.write(encodeRows(s, dir, col("vec_id") % 4 === 1),
         s"$root/delta1.parquet")
-      Tables.write(encodeRows(s, d, col("vec_id") % 4 === 3),
+      Tables.write(encodeRows(s, dir, col("vec_id") % 4 === 3),
         s"$root/delta2.parquet")
       Tables.write(
-        vecs(s, d).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
+        vecs(s, dir).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
         s"$root/tombstones.parquet")
       // the compaction job: one narrow union + one anti-join on vec_id
       val tomb = Tables.read(s, s"$root/tombstones.parquet")
@@ -1070,8 +1052,7 @@ object Similarity {
         s"$root/gen1/ivf_centroids.parquet")
       Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
         s"$root/gen1/pq_codebook.parquet")
-      s"$root/gen1"
-    })
+    } + "/gen1"
 
   /** Index COMPACTION probe — searches the compacted generation
     * produced by [[compactedAnnIndexDir]]. Because base + deltas cover
@@ -1091,10 +1072,6 @@ object Similarity {
   def qAnnIndexCompact(s: SparkSession, dir: String): DataFrame =
     probeAnnIndex(s, dir, compactedAnnIndexDir(s, dir),
       !erasedVec(col("vec_id")))
-
-  /** Lifecycle-composition roots for [[qAnnIndexLifecycle]]. */
-  private val lifecycleRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The re-consent predicate: the half of the deletion set (even
     * multiples of ErasureMod) that re-uploads AFTER its erasure — the
@@ -1125,21 +1102,20 @@ object Similarity {
     * logical membership, re-added ids must survive the earlier
     * tombstone, and nothing erased may resurrect. */
   private[graft] def lifecycleAnnIndexDir(s: SparkSession, dir: String): String =
-    lifecycleRoots.computeIfAbsent(dir, { d =>
-      val src = persistedIndexDir(s, d)
-      val root = Ingest.scratchDir("annindexlifecycle", d)
+    Tables.store("annindexlifecycle", dir) { root =>
+      val src = persistedIndexDir(s, dir)
       Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
         .filter(col("vec_id") % 2 === 0), s"$root/gen0/pq_codes.parquet")
-      Tables.write(encodeRows(s, d, col("vec_id") % 4 === 1),
+      Tables.write(encodeRows(s, dir, col("vec_id") % 4 === 1),
         s"$root/delta1.parquet")
       Tables.write(
-        vecs(s, d).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
+        vecs(s, dir).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
         s"$root/tombstones.parquet")
       val tomb = Tables.read(s, s"$root/tombstones.parquet")
       Tables.write(Tables.read(s, s"$root/gen0/pq_codes.parquet")
         .unionByName(Tables.read(s, s"$root/delta1.parquet"))
         .join(tomb, Seq("vec_id"), "left_anti"), s"$root/gen1/pq_codes.parquet")
-      Tables.write(encodeRows(s, d,
+      Tables.write(encodeRows(s, dir,
           (col("vec_id") % 4 === 3 && !erasedVec(col("vec_id"))) ||
             reAddedVec(col("vec_id"))), s"$root/delta2.parquet")
       Tables.write(Tables.read(s, s"$root/gen1/pq_codes.parquet")
@@ -1149,8 +1125,7 @@ object Similarity {
         s"$root/gen2/ivf_centroids.parquet")
       Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
         s"$root/gen2/pq_codebook.parquet")
-      s"$root/gen2"
-    })
+    } + "/gen2"
 
   /** END-TO-END index lifecycle — add → erase → compact → add composed
     * on one generation chain ([[lifecycleAnnIndexDir]]), then the
@@ -1283,23 +1258,17 @@ object Similarity {
     pqRerank(raw, shortlist)
   }
 
-  /** Residual-index roots for [[qAnnResidualPersisted]]. */
-  private val residualIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Writes the persisted RESIDUAL index: the shared coarse centroids
     * plus the residual codebook and residual codes from ONE
     * [[buildResidualIndex]] pass — the train-once step for the
     * by_residual configuration. */
   private[graft] def residualIndexDir(s: SparkSession, dir: String): String =
-    residualIndexRoots.computeIfAbsent(dir, { d =>
-      val root = Ingest.scratchDir("annindexres", d)
-      val (coarse, rcb, codes) = buildResidualIndex(s, d)
+    Tables.store("annindexres", dir) { root =>
+      val (coarse, rcb, codes) = buildResidualIndex(s, dir)
       Tables.write(coarse, s"$root/ivf_centroids.parquet")
       Tables.write(rcb, s"$root/pq_codebook.parquet")
       Tables.write(codes, s"$root/pq_codes.parquet")
-      root
-    })
+    }
 
   /** Probe-only rung over the PERSISTED residual index — the
     * train-once/probe-many treatment ([[qAnnPersisted]]) applied to the

@@ -42,6 +42,12 @@ object Bridge {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }.foreach(_.unpersist(blocking = false))
 
+  /** A fresh directory `<java.io.tmpdir>/<prefix>-<uuid>` that Spark's
+    * shutdown hook deletes recursively when the JVM exits. */
+  def tempDirDeletedAtExit(prefix: String): String =
+    org.apache.spark.util.Utils
+      .createTempDir(System.getProperty("java.io.tmpdir"), prefix).getPath
+
   /** Register a function by name on an ALREADY-RUNNING session (the
     * `spark.sql.extensions` config only applies at session build time). */
   def registerFunction(

@@ -280,7 +280,7 @@ class ExpressionsSpec extends SparkSpec {
     // signed int32 read would go negative there)
     val nasty = Seq(
       "", "a", "hello world", "x" * 10000, "日本語 tokën 😀",
-      "123:45", "a b", "0", ":", "doc-42:7"
+      "123:45", "a\u0000b", "0", ":", "doc-42:7"
     ).toDF("t")
     val fixture = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("text").as("t"))
@@ -502,30 +502,29 @@ class ExpressionsSpec extends SparkSpec {
     assert(proj(InternalRow(arr("", "", null))).getLong(0) == EntropyQsum.quant(2L))
   }
 
-  test("nfc: composes NFD to NFC, is idempotent, ASCII takes the zero-copy path, NFC is canonical-only (full-width survives)") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import graft.plans.NfcNormalize
-    // NFD a + U+0301 composes to precomposed U+00E1
-    val nfd = UTF8String.fromString("da\u0301ta\u0301")
-    val out = NfcNormalize.nfc(nfd).toString
-    assert(out == "d\u00E1t\u00E1", s"NFC composition: ${out.map(_.toInt.toHexString)}")
-    // idempotent
-    assert(NfcNormalize.nfc(UTF8String.fromString(out)).toString == out)
-    // ASCII fast path returns the SAME buffer (zero-copy)
-    val ascii = UTF8String.fromString("plain ascii text")
-    assert(NfcNormalize.nfc(ascii) eq ascii)
-    // canonical-only: full-width compatibility forms are NOT folded
-    // (that would be NFKC) — width survives normalization
-    val fw = UTF8String.fromString("\uFF22\uFF29\uFF27")
-    assert(NfcNormalize.nfc(fw).toString == "\uFF22\uFF29\uFF27")
-    // i + combining dot above has no precomposed form: NFC keeps it
-    val idot = UTF8String.fromString("i\u0307")
-    assert(NfcNormalize.nfc(idot).toString == "i\u0307")
-    // DataFrame/codegen face agrees with the static helper
+  test("nfc UDF: composes NFD, idempotent, canonical-only, null-safe") {
     import spark.implicits._
-    val viaQuery = Seq("da\u0301ta\u0301").toDF("s")
-      .select(VectorFunctions.nfc(col("s"))).collect()(0).getString(0)
-    assert(viaQuery == "d\u00E1t\u00E1")
+    val nfc = graft.queries.TextAnalysis.nfc
+    val cases = Seq(
+      "da\u0301ta\u0301" -> "d\u00E1t\u00E1", // NFD a + U+0301 composes to U+00E1
+      "d\u00E1t\u00E1" -> "d\u00E1t\u00E1",   // already NFC: unchanged
+      // canonical-only: full-width compatibility forms are NOT folded
+      // (that would be NFKC) — width survives normalization
+      "\uFF22\uFF29\uFF27" -> "\uFF22\uFF29\uFF27",
+      "i\u0307" -> "i\u0307",                   // no precomposed form: kept
+      "plain ascii text" -> "plain ascii text")
+    val rows = cases.map(_._1).toDF("s")
+      .select(col("s"), nfc(col("s")).as("once"), nfc(nfc(col("s"))).as("twice"))
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    cases.foreach { case (in, want) =>
+      val (once, twice) = rows(in)
+      assert(once == want, s"NFC of ${in.map(_.toInt.toHexString)}: " +
+        s"${once.map(_.toInt.toHexString)}")
+      assert(twice == once, "NFC must be idempotent")
+    }
+    val nul = Seq(Option.empty[String]).toDF("s").select(nfc(col("s")))
+      .collect()(0)
+    assert(nul.isNullAt(0), "NULL in, NULL out")
   }
 
   test("unicode tokenizer fine points: combining marks kept, full-width distinct from ASCII, Turkish-I fold explicit, em-dash splits") {

@@ -139,7 +139,7 @@ class IngestSpec extends SparkSpec {
     }
     // the evolution is real: a bare read of the gen-1 directory alone has
     // no `quality` column at all (same per-JVM scratch root the query used)
-    val base = Ingest.scratchDir("schevo", sf)
+    val base = graft.io.Tables.store("schevo", sf)(_ => ())
     assert(!spark.read.parquet(s"$base/gen1").columns.contains("quality"))
     assert(spark.read.parquet(s"$base/gen2").columns.contains("quality"))
   }

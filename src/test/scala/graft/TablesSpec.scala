@@ -10,7 +10,8 @@ import graft.io.Tables
 /** Pins the artifact write/read pair of `graft.io.Tables`: the schema a
   * [[Tables.write]] records and [[Tables.read]] replays is exactly the one
   * footer inference would find, rewrites are never served a stale schema,
-  * and reading a library-written artifact starts no Spark job. */
+  * and reading a library-written artifact starts no Spark job. Also pins
+  * the build-once scratch helper [[Tables.store]]. */
 class TablesSpec extends SparkSpec {
 
   private def scratch(tag: String): String =
@@ -105,5 +106,95 @@ class TablesSpec extends SparkSpec {
       control = spark.read.parquet(path).schema)
     assert(n == 0)
     assert(Tables.read(spark, path).schema == plain.schema)
+  }
+
+  /** A fixture-dir key no other suite uses, so every store test builds. */
+  private def freshKey(): String = s"tables_spec_${java.util.UUID.randomUUID}"
+
+  test("store builds once across repeated and concurrent calls") {
+    val key = freshKey()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def once(): String = Tables.store("once", key) { root =>
+      builds.incrementAndGet()
+      Thread.sleep(200) // keep the build open while the others arrive
+      Files.writeString(java.nio.file.Paths.get(root, "marker"), "built")
+    }
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map(_ => pool.submit(
+        new java.util.concurrent.Callable[String] {
+          def call(): String = { start.await(); once() }
+        }))
+      start.countDown()
+      val roots = calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(roots.distinct.size == 1, s"callers saw different roots: $roots")
+      // every waiter returned only after the build finished
+      assert(new java.io.File(roots.head, "marker").isFile)
+      assert(once() == roots.head && once() == roots.head)
+    } finally pool.shutdown()
+    assert(builds.get == 1, s"${builds.get} builds for one key")
+  }
+
+  test("a build may call store for another key") {
+    val key = freshKey()
+    var inner, outer = 0
+    def innerDir() = Tables.store("inner", key) { root =>
+      inner += 1
+      Files.writeString(java.nio.file.Paths.get(root, "gen0"), "x")
+    }
+    def outerDir() = Tables.store("outer", key) { root =>
+      outer += 1
+      val src = innerDir()
+      assert(new java.io.File(src, "gen0").isFile, "nested build not done")
+      Files.copy(java.nio.file.Paths.get(src, "gen0"),
+        java.nio.file.Paths.get(root, "gen1"))
+    }
+    val o = outerDir()
+    assert(new java.io.File(o, "gen1").isFile)
+    assert(outerDir() == o && innerDir() != o)
+    assert((inner, outer) == ((1, 1)))
+  }
+
+  test("a build that throws caches nothing and is retried into the same root") {
+    val key = freshKey()
+    val seen = scala.collection.mutable.Buffer.empty[String]
+    def call(fail: Boolean) = Tables.store("retry", key) { root =>
+      seen += root
+      if (fail) throw new IllegalStateException("build failed")
+    }
+    val e = intercept[IllegalStateException](call(fail = true))
+    assert(e.getMessage == "build failed")
+    val root = call(fail = false)
+    assert(seen.toSeq == Seq(root, root), s"builds went to $seen")
+    assert(call(fail = true) == root, "a finished build must not re-run")
+    assert(seen.size == 2)
+  }
+
+  test("a store root is deleted when the JVM exits") {
+    val javaBin = s"${sys.props("java.home")}/bin/java"
+    val proc = new ProcessBuilder(javaBin, "-Xmx256m",
+      "-cp", sys.props("java.class.path"), TablesSpecExitProbe.getClass
+        .getName.stripSuffix("$"), freshKey())
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() == 0, s"probe JVM failed:\n$out")
+    val root = out.linesIterator.collectFirst {
+      case l if l.startsWith("ROOT ") => l.stripPrefix("ROOT ")
+    }.getOrElse(fail(s"probe printed no root:\n$out"))
+    assert(root.contains("graft_exitprobe_tables_spec_"), root)
+    assert(!new java.io.File(root).exists, s"$root outlived its JVM")
+  }
+}
+
+/** Child-JVM body for the exit test: builds one store with a file in it,
+  * prints the root, and exits. */
+object TablesSpecExitProbe {
+  def main(args: Array[String]): Unit = {
+    val root = Tables.store("exitprobe", args(0)) { r =>
+      Files.writeString(java.nio.file.Paths.get(r, "artifact"), "x")
+    }
+    require(new java.io.File(root, "artifact").isFile)
+    println(s"ROOT $root")
   }
 }
