@@ -9,7 +9,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Artifact lifecycle: every artifact lives under a scratch root from
   * [[store]], built at most once per (prefix, fixture dir) per JVM and
-  * deleted with its root when the JVM exits.
+  * deleted with its root when the JVM exits. A persisted index's later
+  * generations are [[Generation]] verbs over its gen0: each holds only
+  * the artifacts it changed, so nothing unchanged (the frozen ANN
+  * quantizers, say) is ever copied into a new root.
   *
   * One accessor per table; every query takes `sfDir` (the per-scale-factor
   * directory) so the same plan runs at sf0.001 (smoke), sf0.01 (oracle) and

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Lineage, TextPipeline}
 import graft.core.TextPipeline.{duckH32, duckShingles, h32, shinglesOf}
 import graft.functions.VectorFunctions.h60
-import graft.io.Tables
+import graft.io.{Generation, Tables}
+import Ingest.{erasureSubject, reconsentedSubject}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** M4a — deduplication tier over `documents`: the dedup ladder of a
@@ -862,17 +863,24 @@ object Dedup {
     sh.select(col("doc_id"), storeHash(col("s")).as("hs"))
       .select(col("doc_id"), size(col("hs")).cast("long").as("n"), col("hs"))
 
+  /** Both dedup-index artifacts' rows (winnow `postings`, hashed
+    * `shingles` store; keyed by doc_id) for the corpus docs matching `keep`. */
+  private def dedupRows(s: SparkSession, d: String,
+      keep: Column): Map[String, DataFrame] = Map(
+    "postings" -> TextAnalysis.winnowFps(s, d).filter(keep),
+    "shingles" -> hashedStore(shingled(s, d).filter(keep)))
+
+  /** The dedup index generation under `root`. */
+  private def dedupGen(s: SparkSession, root: String): Generation =
+    Generation.at(s, root, "postings", "shingles")
+
   /** Writes both dedup-index artifacts for the corpus docs matching
     * `keep` — the ONE builder behind [[dedupIndexDir]] (keep = the even
     * historical half) and the spec's from-scratch-rebuild-minus-deleted
     * control, so build and rebuild cannot drift. */
   private[graft] def writeDedupIndex(s: SparkSession, d: String,
-      keep: Column, root: String): Unit = {
-    Tables.write(TextAnalysis.winnowFps(s, d).filter(keep),
-      s"$root/postings.parquet")
-    Tables.write(hashedStore(shingled(s, d).filter(keep)),
-      s"$root/shingles.parquet")
-  }
+      keep: Column, root: String): Unit =
+    Generation.write(s, root, dedupRows(s, d, keep))
 
   /** Persisted index for [[qDedupPersisted]] — one build per
     * (JVM, fixture dir), the q_ann_persisted discipline applied to the
@@ -920,8 +928,8 @@ object Dedup {
   private[graft] def probeDedupIndex(s: SparkSession, dir: String,
       root: String, live: Column = lit(true),
       batch: Column = col("doc_id") % 2 === 1): DataFrame = {
-    val idxFps = Tables.read(s, s"$root/postings.parquet")
-    val idxSs = Tables.read(s, s"$root/shingles.parquet")
+    val idx = dedupGen(s, root)
+    val (idxFps, idxSs) = (idx("postings"), idx("shingles"))
     val batchFps = TextAnalysis.winnowFps(s, dir)
       .filter(batch && live)
       // 3 consumers: vs-index join + both batch-internal sides
@@ -963,27 +971,15 @@ object Dedup {
       .orderBy("new_id", "dup_of")
   }
 
-  /** Deletion set for the write-side index erasure: index documents
-    * whose doc_id ≡ 0 (mod [[Ingest.ErasureMod]]) — the SAME subject
-    * rule the read-side blast-radius audit (q_erasure_audit) scopes, so
-    * audit and rewrite answer to one GDPR deletion list. */
-  private def erasedDoc(c: Column): Column = Ingest.erasureSubject(c)
-
-  /** Writes the erased GENERATION of the persisted dedup index: both
-    * artifacts re-written without the deletion set's rows. Because
-    * winnow fingerprints and the hashed shingle store are PER-DOCUMENT
-    * deterministic (no corpus statistics anywhere in the artifacts),
-    * pruning rows by doc_id is exactly a from-scratch rebuild over the
-    * surviving corpus — the property the spec re-proves by building that
-    * rebuild and diffing probes. */
+  /** The erased GENERATION of the persisted dedup index: gen0 pruned of
+    * the deletion set's rows. Because winnow fingerprints and the hashed
+    * shingle store are PER-DOCUMENT deterministic (no corpus statistics
+    * anywhere in the artifacts), pruning rows by doc_id is exactly a
+    * from-scratch rebuild over the surviving corpus — the property the
+    * spec re-proves by building that rebuild and diffing probes. */
   private[graft] def dedupErasedIndexDir(s: SparkSession, dir: String): String =
-    Tables.store("dedupindexerase", dir) { root =>
-      val src = dedupIndexDir(s, dir)
-      Tables.write(Tables.read(s, s"$src/postings.parquet")
-        .filter(!erasedDoc(col("doc_id"))), s"$root/postings.parquet")
-      Tables.write(Tables.read(s, s"$src/shingles.parquet")
-        .filter(!erasedDoc(col("doc_id"))), s"$root/shingles.parquet")
-    }
+    Tables.store("dedupindexerase", dir)(
+      dedupGen(s, dedupIndexDir(s, dir)).prune(_, !erasureSubject(col("doc_id"))))
 
   /** Write-side index ERASURE — the delete verb of the persisted-index
     * lifecycle (build: [[dedupIndexDir]]; probe: [[qDedupPersisted]];
@@ -1014,10 +1010,10 @@ object Dedup {
     * corpus text; the probe is unchanged O(batch). */
   def qDedupIndexErase(s: SparkSession, dir: String): DataFrame =
     probeDedupIndex(s, dir, dedupErasedIndexDir(s, dir),
-      !erasedDoc(col("doc_id")))
+      !erasureSubject(col("doc_id")))
 
   /** A probe's duplicate-id set, Lineage.cut because every builder
-    * consumes it from two write jobs (postings + store anti-joins) —
+    * consumes it from two artifact writes (postings + store anti-joins) —
     * without the cut the whole probe's candidate/verify stage would
     * re-execute per artifact write. */
   private def dupIdsOf(probe: DataFrame): DataFrame =
@@ -1025,24 +1021,12 @@ object Dedup {
     Lineage.cut(probe
       .select(col("new_id").as("doc_id")).distinct())
 
-  private def dedupDupIds(s: SparkSession, d: String): DataFrame =
-    dupIdsOf(qDedupPersisted(s, d))
-
-  /** The ADD verb's admission rule — accepted batch postings/store rows
-    * (odd ids minus the probe's duplicates) — ONE spelling shared by
-    * [[dedupAddedIndexDir]] and the compaction delta files
-    * ([[dedupCompactedIndexDir]]) so the two verbs cannot drift. */
-  private def acceptedBatchPostings(s: SparkSession, d: String,
-      dups: DataFrame,
-      batch: Column = col("doc_id") % 2 === 1): DataFrame =
-    TextAnalysis.winnowFps(s, d).filter(batch)
-      .join(dups, Seq("doc_id"), "left_anti")
-
-  private def acceptedBatchStore(s: SparkSession, d: String,
-      dups: DataFrame,
-      batch: Column = col("doc_id") % 2 === 1): DataFrame =
-    hashedStore(shingled(s, d).filter(batch))
-      .join(dups, Seq("doc_id"), "left_anti")
+  /** The ADD verb's admission rule — both artifacts' batch rows minus the
+    * probe's duplicates — ONE spelling for every add, so adds cannot drift. */
+  private def accepted(s: SparkSession, d: String, dups: DataFrame,
+      batch: Column = col("doc_id") % 2 === 1): Map[String, DataFrame] =
+    dedupRows(s, d, batch).map { case (n, rows) =>
+      n -> rows.join(dups, Seq("doc_id"), "left_anti") }
 
   /** Per-doc artifact summary of an index generation (doc_id, n_fps,
     * n_shingles for docs matching `keep`) — the shared read-back plan
@@ -1050,34 +1034,26 @@ object Dedup {
     * generation's parquet so the gates check the physical tables. */
   private def artifactSummary(s: SparkSession, root: String,
       keep: Column): DataFrame = {
-    val fps = Tables.read(s, s"$root/postings.parquet").filter(keep)
+    val gen = dedupGen(s, root)
+    val fps = gen("postings").filter(keep)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_fps"))
-    val ss = Tables.read(s, s"$root/shingles.parquet").filter(keep)
+    val ss = gen("shingles").filter(keep)
       .select(col("doc_id"), col("n").as("n_shingles"))
     fps.join(ss, "doc_id")
       .select(col("doc_id"), col("n_fps"), col("n_shingles"))
       .orderBy("doc_id")
   }
 
-  /** Writes the ADD generation of the persisted dedup index: the
-    * ACCEPTED batch docs' postings and store rows (every odd doc NOT
-    * classified a duplicate by the probe — keep-earlier admits the
-    * earlier side of batch pairs and rejects collisions with the
-    * index) are unioned into the existing artifacts. Like the delta
-    * encode on the ANN side, nothing historical is recomputed: the
-    * batch postings/store rows the probe already needed ARE the rows
-    * appended. */
+  /** The ADD generation of the persisted dedup index: gen0 with the
+    * ACCEPTED batch docs' rows appended (every odd doc NOT classified a
+    * duplicate by the probe — keep-earlier admits the earlier side of
+    * batch pairs and rejects collisions with the index). Nothing
+    * historical is recomputed, and [[dedupCompactedIndexDir]] folds this
+    * generation, so the probe that classifies the batch runs once. */
   private[graft] def dedupAddedIndexDir(s: SparkSession, dir: String): String =
-    Tables.store("dedupindexadd", dir) { root =>
-      val src = dedupIndexDir(s, dir)
-      val dups = dedupDupIds(s, dir)
-      Tables.write(Tables.read(s, s"$src/postings.parquet")
-        .unionByName(acceptedBatchPostings(s, dir, dups)),
-        s"$root/postings.parquet")
-      Tables.write(Tables.read(s, s"$src/shingles.parquet")
-        .unionByName(acceptedBatchStore(s, dir, dups)), s"$root/shingles.parquet")
-    }
+    Tables.store("dedupindexadd", dir)(dedupGen(s, dedupIndexDir(s, dir))
+      .append(_, accepted(s, dir, dupIdsOf(qDedupPersisted(s, dir)))))
 
   /** Write-side index ADD — the verb that closes the incremental-ingest
     * loop [[qDedupPersisted]] opens: after probing, the batch's
@@ -1108,32 +1084,21 @@ object Dedup {
   def qDedupIndexAdd(s: SparkSession, dir: String): DataFrame =
     artifactSummary(s, dedupAddedIndexDir(s, dir), col("doc_id") % 2 === 1)
 
-  /** Builds the generational layout of the dedup index and compacts
-    * it — the dedup twin of Similarity's ANN compaction: a base
-    * postings/store generation (the even half, from [[dedupIndexDir]]),
-    * ONE delta file per artifact carrying the ADD verb's accepted batch
-    * rows (the [[dedupAddedIndexDir]] admission rule, materialized as
-    * the separate files an ingest job physically appends), and a
-    * tombstone file with the erasure subjects. COMPACTION folds
-    * base ∪ delta minus tombstones into `gen1` with one union + one
-    * anti-join per artifact — no re-fingerprinting, no text scan. */
+  /** The erasure subjects' doc_ids: the tombstones both dedup folds share. */
+  private def dedupTombstones(s: SparkSession, dir: String): DataFrame =
+    Generation.stored(s, "dedupindextomb", dir, "tombstones")(
+      Tables.documents(s, dir).select(col("doc_id"))
+        .filter(erasureSubject(col("doc_id"))))
+
+  /** COMPACTS the dedup index (the twin of Similarity's ANN compaction)
+    * into `gen1` = base ∪ the ADD verb's accepted rows − the erasure
+    * tombstones. The add generation ([[dedupAddedIndexDir]]) already is
+    * base ∪ accepted, so the fold is one anti-join per artifact: no
+    * re-fingerprinting, no text scan, no second probe. */
   private[graft] def dedupCompactedIndexDir(s: SparkSession, dir: String): String =
     Tables.store("dedupindexcompact", dir) { root =>
-      val gen0 = dedupIndexDir(s, dir)
-      val dups = dedupDupIds(s, dir)
-      Tables.write(acceptedBatchPostings(s, dir, dups),
-        s"$root/delta_postings.parquet")
-      Tables.write(acceptedBatchStore(s, dir, dups),
-        s"$root/delta_shingles.parquet")
-      Tables.write(Tables.documents(s, dir).select(col("doc_id"))
-        .filter(erasedDoc(col("doc_id"))), s"$root/tombstones.parquet")
-      val tomb = Tables.read(s, s"$root/tombstones.parquet")
-      Tables.write(Tables.read(s, s"$gen0/postings.parquet")
-        .unionByName(Tables.read(s, s"$root/delta_postings.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/postings.parquet")
-      Tables.write(Tables.read(s, s"$gen0/shingles.parquet")
-        .unionByName(Tables.read(s, s"$root/delta_shingles.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/shingles.parquet")
+      dedupGen(s, dedupAddedIndexDir(s, dir))
+        .fold(s"$root/gen1", Nil, dedupTombstones(s, dir))
     } + "/gen1"
 
   /** Dedup index COMPACTION — the generational fold over the full
@@ -1149,17 +1114,12 @@ object Dedup {
     * [[writeDedupIndex]] rebuild over exactly that member set and zero
     * tombstoned ids in either artifact.
     *
-    * Scale stance (100 TB): compaction is one union + one broadcast
-    * anti-join per artifact, all narrow posting/store rows — text is
+    * Scale stance (100 TB): compaction is one broadcast anti-join per
+    * artifact, all narrow posting/store rows — text is
     * never rescanned; the summary aggregates the compacted postings
     * once, keyed by doc_id. */
   def qDedupIndexCompact(s: SparkSession, dir: String): DataFrame =
     artifactSummary(s, dedupCompactedIndexDir(s, dir), lit(true))
-
-  /** Re-consent predicate (the ANN tier's reAddedVec applied to docs):
-    * the even-multiple half of the deletion set re-uploads AFTER its
-    * erasure, so the day-2 tombstone must not block the day-4 add. */
-  private def reAddedDoc(c: Column): Column = Ingest.reconsentedSubject(c)
 
   /** Builds the multi-day generation CHAIN of the persisted dedup index
     * — the composed sequence the pairwise verbs ([[qDedupIndexAdd]] /
@@ -1172,12 +1132,12 @@ object Dedup {
     *   day 3  COMPACT gen1 = (gen0 ∪ delta1) − tombstones
     *   day 4  ADD    batch2 = the ≡ 3 (mod 4) arrivals (minus forgotten
     *                  subjects) PLUS the re-consented deletion half
-    *                  ([[reAddedDoc]]), probed against gen1 → gen2
+    *                  ([[Ingest.reconsentedSubject]]), probed against gen1 → gen2
     *
     * Each verb is the SAME machinery as its pairwise twin (the shared
-    * [[probeDedupIndex]] plan, the shared admission helpers) — this
-    * builder only chains them, so the lifecycle query proves the verbs
-    * compose: day-4 admission answers to day-3's membership, re-added
+    * [[probeDedupIndex]] plan, admission rule and Generation verbs) —
+    * this builder only chains them, so the lifecycle query proves the
+    * verbs compose: day-4 admission answers to day-3's membership, re-added
     * ids are fingerprinted fresh and survive the earlier tombstone, and
     * every generation is pure parquet-row algebra (no re-shingling of
     * history anywhere in the chain). */
@@ -1186,28 +1146,12 @@ object Dedup {
       val gen0 = dedupIndexDir(s, dir)
       val batch1 = col("doc_id") % 4 === 1
       val dups1 = dupIdsOf(probeDedupIndex(s, dir, gen0, batch = batch1))
-      Tables.write(acceptedBatchPostings(s, dir, dups1, batch1),
-        s"$root/delta1_postings.parquet")
-      Tables.write(acceptedBatchStore(s, dir, dups1, batch1),
-        s"$root/delta1_shingles.parquet")
-      Tables.write(Tables.documents(s, dir).select(col("doc_id"))
-        .filter(erasedDoc(col("doc_id"))), s"$root/tombstones.parquet")
-      val tomb = Tables.read(s, s"$root/tombstones.parquet")
-      Tables.write(Tables.read(s, s"$gen0/postings.parquet")
-        .unionByName(Tables.read(s, s"$root/delta1_postings.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/postings.parquet")
-      Tables.write(Tables.read(s, s"$gen0/shingles.parquet")
-        .unionByName(Tables.read(s, s"$root/delta1_shingles.parquet"))
-        .join(tomb, Seq("doc_id"), "left_anti"), s"$root/gen1/shingles.parquet")
-      val batch2 = (col("doc_id") % 4 === 3 && !erasedDoc(col("doc_id"))) ||
-        reAddedDoc(col("doc_id"))
+      val gen1 = dedupGen(s, gen0).fold(s"$root/gen1",
+        Seq(accepted(s, dir, dups1, batch1)), dedupTombstones(s, dir))
+      val batch2 = (col("doc_id") % 4 === 3 && !erasureSubject(col("doc_id"))) ||
+        reconsentedSubject(col("doc_id"))
       val dups2 = dupIdsOf(probeDedupIndex(s, dir, s"$root/gen1", batch = batch2))
-      Tables.write(Tables.read(s, s"$root/gen1/postings.parquet")
-        .unionByName(acceptedBatchPostings(s, dir, dups2, batch2)),
-        s"$root/gen2/postings.parquet")
-      Tables.write(Tables.read(s, s"$root/gen1/shingles.parquet")
-        .unionByName(acceptedBatchStore(s, dir, dups2, batch2)),
-        s"$root/gen2/shingles.parquet")
+      gen1.append(s"$root/gen2", accepted(s, dir, dups2, batch2))
     } + "/gen2"
 
   /** END-TO-END dedup-index lifecycle — add → erase → compact → add
@@ -1556,24 +1500,19 @@ object Dedup {
     * aggregate sum(cnt) per key on read; a production store compacts
     * that aggregate alongside, folding it on each generation flip. */
   private[graft] def substrIndexDir(s: SparkSession, dir: String): String =
-    Tables.store("substrix", dir) { root =>
-      Tables.write(
-        substringKeys(Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
-            SubstrL50)
-          .groupBy(col("k"), col("doc_id")).agg(count(lit(1)).as("cnt")),
-        s"$root/keys.parquet")
-    }
+    Tables.store("substrix", dir)(Generation.write(s, _, Map("keys" ->
+      substringKeys(Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
+          SubstrL50)
+        .groupBy(col("k"), col("doc_id")).agg(count(lit(1)).as("cnt")))))
 
-  /** Writes the erased GENERATION of the substring-key store: gen0's
-    * postings minus the erasure subjects' rows — a PRUNE, sound here
-    * because each (k, doc_id, cnt) row is a pure function of its own
-    * document (contrast [[graft.queries.Analytics.qHllStoreErase]],
-    * where max-fold registers force a rebuild). */
+  /** The erased GENERATION of the substring-key store: gen0 pruned of
+    * the erasure subjects' rows — sound here because each
+    * (k, doc_id, cnt) row is a pure function of its own document
+    * (contrast [[graft.queries.Analytics.qHllStoreErase]], where
+    * max-fold registers force a rebuild). */
   private[graft] def substrErasedIndexDir(s: SparkSession, dir: String): String =
-    Tables.store("substrixerase", dir) { root =>
-      Tables.write(Tables.read(s, s"${substrIndexDir(s, dir)}/keys.parquet")
-        .filter(!erasedDoc(col("doc_id"))), s"$root/keys.parquet")
-    }
+    Tables.store("substrixerase", dir)(Generation.at(s, substrIndexDir(s, dir),
+      "keys").prune(_, !erasureSubject(col("doc_id"))))
 
   /** Incremental substring dedup — the persisted-index doctrine applied
     * to the SUFFIX tier, closing the family's lifecycle the way the
@@ -1612,7 +1551,7 @@ object Dedup {
     * posting stores (and that the HLL store's max-folds lack). */
   def qSubstrIndexErase(s: SparkSession, dir: String): DataFrame =
     substrProbe(s, dir, substrErasedIndexDir(s, dir),
-      !erasedDoc(col("doc_id")))
+      !erasureSubject(col("doc_id")))
 
   /** Shared probe of a substring-key store generation: batch = the odd
     * half under `keep`, chain over the batch only, duplicated iff batch
@@ -1622,7 +1561,7 @@ object Dedup {
   private def substrProbe(s: SparkSession, dir: String, idxRoot: String,
       keep: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val idx = Tables.read(s, s"$idxRoot/keys.parquet")
+    val idx = Generation.at(s, idxRoot, "keys")("keys")
       .groupBy(col("k")).agg(sum(col("cnt")).as("idx_occ"))
     // substringKeys already lineage-cuts its result — no second cut
     val batch = substringKeys(

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Lineage, TextPipeline}
-import graft.io.Tables
+import graft.io.{Generation, Tables}
+import graft.queries.Ingest.{erasureSubject, reconsentedSubject}
 
 /** M4b — approximate-nearest-neighbor similarity search over `embeddings`
   * (64-dim float vectors): brute-force cosine top-k as the exactness
@@ -835,7 +836,8 @@ object Similarity {
     * (M·PqK rows) and `pq_codes` (vec_id, codes, ivf_cell — 16 B/vec plus
     * the cell id). Built once so every later probe (and every bench
     * iteration after the first) reads the index instead of re-training —
-    * the FAISS train/add/search lifecycle. */
+    * the FAISS train/add/search lifecycle. Add and erase never retrain,
+    * so later generations hold only `pq_codes` and probe these quantizers. */
   private[graft] def persistedIndexDir(s: SparkSession, dir: String): String =
     Tables.store("annindex", dir) { root =>
       val ix = buildPqIndex(s, dir, PqTrainMin)
@@ -869,18 +871,23 @@ object Similarity {
   def qAnnPersisted(s: SparkSession, dir: String): DataFrame =
     probeAnnIndex(s, dir, persistedIndexDir(s, dir), lit(true))
 
+  /** The `pq_codes` generation (keyed by vec_id) under `root`. */
+  private def annCodes(s: SparkSession, root: String): Generation =
+    Generation.at(s, root, "pq_codes")
+
   /** The probe plan of [[qAnnPersisted]] with the index GENERATION and
     * a liveness predicate injectable — shared with [[qAnnIndexErase]]
-    * (and the spec's rebuild control) so every generation of the
-    * persisted artifacts is searched by ONE plan. `live` filters the
+    * (and the spec's rebuild control) so every generation's codes are
+    * searched by ONE plan, against gen0's quantizers. `live` filters the
     * raw-vector relation (queries and re-rank fetches); the codes table
     * needs no predicate — a pruned generation simply has fewer rows. */
   private[graft] def probeAnnIndex(s: SparkSession, dir: String,
       root: String, live: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
-    val cb = Tables.read(s, s"$root/pq_codebook.parquet")
-    val inv = Tables.read(s, s"$root/pq_codes.parquet")
+    val gen0 = persistedIndexDir(s, dir)
+    val coarse = Tables.read(s, s"$gen0/ivf_centroids.parquet")
+    val cb = Tables.read(s, s"$gen0/pq_codebook.parquet")
+    val inv = annCodes(s, root)("pq_codes")
     val raw = vecs(s, dir).select(col("vec_id"), col("v")).filter(live)
     // normalize the QUERY vectors only (the corpus normalization is baked
     // into the index) — the expression is bit-identical to the build's
@@ -948,7 +955,7 @@ object Similarity {
 
   /** [[encodeFrozen]] in the `pq_codes` ARTIFACT schema (vec_id, codes
     * array, ivf_cell) — what an ingest job physically appends; used by
-    * the compaction generation builder so delta files carry the same
+    * the compaction and lifecycle folds so their deltas carry the same
     * schema as the base table they fold into. */
   private def encodeRows(s: SparkSession, dir: String,
       keep: Column): DataFrame = {
@@ -970,30 +977,17 @@ object Similarity {
       .select(col("vec_id"), col("codes"), col("ivf_cell"))
   }
 
-  /** Deletion-set predicate for the ANN index erasure: vec_id ≡ 0
-    * (mod [[graft.queries.Ingest.ErasureMod]]) — the q_erasure_audit
-    * subject rule applied to the vector store. */
-  private def erasedVec(c: Column): Column =
-    graft.queries.Ingest.erasureSubject(c)
-
-  /** Writes the erased GENERATION of the persisted ANN index: `pq_codes`
-    * re-written without the deletion set's rows; the coarse centroids
-    * and PQ codebook carry over UNCHANGED into the new generation —
-    * deletion never retrains (quantizer drift is a rebuild decision,
-    * exactly as for the add verb in [[qAnnIndexDelta]]). Codes are
-    * per-vector deterministic against the frozen codebook, so the pruned
-    * table is bit-equal to re-encoding the surviving corpus — the
+  /** The erased GENERATION of the persisted ANN index: gen0's
+    * `pq_codes` pruned of the deletion set's rows. The generation holds
+    * only the codes it changed; the coarse centroids and PQ codebook stay
+    * gen0's — deletion never retrains (quantizer drift is a rebuild
+    * decision, exactly as for the add verb in [[qAnnIndexDelta]]). Codes
+    * are per-vector deterministic against the frozen codebook, so the
+    * pruned table is bit-equal to re-encoding the surviving corpus — the
     * delete-side twin of the add-side equality, spec-pinned. */
   private[graft] def erasedAnnIndexDir(s: SparkSession, dir: String): String =
-    Tables.store("annindexerase", dir) { root =>
-      val src = persistedIndexDir(s, dir)
-      Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
-        s"$root/ivf_centroids.parquet")
-      Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
-        s"$root/pq_codebook.parquet")
-      Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
-        .filter(!erasedVec(col("vec_id"))), s"$root/pq_codes.parquet")
-    }
+    Tables.store("annindexerase", dir)(
+      annCodes(s, persistedIndexDir(s, dir)).prune(_, !erasureSubject(col("vec_id"))))
 
   /** Write-side ANN index ERASURE — the delete verb of the FAISS
     * lifecycle (train / add / search / DELETE), completing
@@ -1017,41 +1011,36 @@ object Similarity {
     * nothing retrains and the corpus vectors are never re-encoded. */
   def qAnnIndexErase(s: SparkSession, dir: String): DataFrame =
     probeAnnIndex(s, dir, erasedAnnIndexDir(s, dir),
-      !erasedVec(col("vec_id")))
+      !erasureSubject(col("vec_id")))
 
-  /** Builds the GENERATIONAL layout an index store physically
-    * accumulates, then compacts it: a base `pq_codes` generation (the
-    * even half — "yesterday's build"), TWO delta files appended by
-    * later ingest jobs (the odd half split by vec_id mod 4, each
-    * encoded against the frozen quantizers exactly like
-    * [[qAnnIndexDelta]]), and a tombstone file carrying the erasure
-    * subjects. COMPACTION folds base ∪ deltas minus tombstones into
-    * one new generation (`gen1`) with the quantizers carried over —
-    * the small-file-compaction doctrine (Ingest.qCompactFiles) applied
-    * to the index artifacts, and the third lifecycle verb after add
-    * ([[qAnnIndexDelta]]) and delete ([[qAnnIndexErase]]). */
+  /** The base both ANN folds share: gen0's codes pruned to the even half. */
+  private def annEvenHalf(s: SparkSession, dir: String): Generation =
+    Generation.store(s, "annindexeven", dir, "pq_codes")(
+      annCodes(s, persistedIndexDir(s, dir)).prune(_, col("vec_id") % 2 === 0))
+
+  /** The day-1 delta both ANN folds share: the ≡ 1 (mod 4) arrivals. */
+  private def annDelta1(s: SparkSession, dir: String): Map[String, DataFrame] =
+    Map("pq_codes" -> Generation.stored(s, "annindexdelta1", dir, "pq_codes")(
+      encodeRows(s, dir, col("vec_id") % 4 === 1)))
+
+  /** The erasure subjects' vec_ids: the tombstones both ANN folds share. */
+  private def annTombstones(s: SparkSession, dir: String): DataFrame =
+    Generation.stored(s, "annindextomb", dir, "tombstones")(
+      vecs(s, dir).select(col("vec_id")).filter(erasureSubject(col("vec_id"))))
+
+  /** COMPACTS the generational layout an index store accumulates — a
+    * base `pq_codes` generation (the even half), TWO deltas from later
+    * ingest jobs (the odd half split by vec_id mod 4, each encoded
+    * against the frozen quantizers like [[qAnnIndexDelta]]) and the
+    * erasure tombstones — into `gen1` = base ∪ deltas − tombstones: the
+    * small-file-compaction doctrine (Ingest.qCompactFiles) applied to the
+    * index, and the third lifecycle verb after add ([[qAnnIndexDelta]])
+    * and delete ([[qAnnIndexErase]]). */
   private[graft] def compactedAnnIndexDir(s: SparkSession, dir: String): String =
     Tables.store("annindexcompact", dir) { root =>
-      val src = persistedIndexDir(s, dir)
-      Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
-        .filter(col("vec_id") % 2 === 0), s"$root/gen0/pq_codes.parquet")
-      Tables.write(encodeRows(s, dir, col("vec_id") % 4 === 1),
-        s"$root/delta1.parquet")
-      Tables.write(encodeRows(s, dir, col("vec_id") % 4 === 3),
-        s"$root/delta2.parquet")
-      Tables.write(
-        vecs(s, dir).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
-        s"$root/tombstones.parquet")
-      // the compaction job: one narrow union + one anti-join on vec_id
-      val tomb = Tables.read(s, s"$root/tombstones.parquet")
-      Tables.write(Tables.read(s, s"$root/gen0/pq_codes.parquet")
-        .unionByName(Tables.read(s, s"$root/delta1.parquet"))
-        .unionByName(Tables.read(s, s"$root/delta2.parquet"))
-        .join(tomb, Seq("vec_id"), "left_anti"), s"$root/gen1/pq_codes.parquet")
-      Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
-        s"$root/gen1/ivf_centroids.parquet")
-      Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
-        s"$root/gen1/pq_codebook.parquet")
+      annEvenHalf(s, dir).fold(s"$root/gen1", Seq(annDelta1(s, dir),
+          Map("pq_codes" -> encodeRows(s, dir, col("vec_id") % 4 === 3))),
+        annTombstones(s, dir))
     } + "/gen1"
 
   /** Index COMPACTION probe — searches the compacted generation
@@ -1071,15 +1060,7 @@ object Similarity {
     * tombstone list — no re-encode, no retrain; probe cost unchanged. */
   def qAnnIndexCompact(s: SparkSession, dir: String): DataFrame =
     probeAnnIndex(s, dir, compactedAnnIndexDir(s, dir),
-      !erasedVec(col("vec_id")))
-
-  /** The re-consent predicate: the half of the deletion set (even
-    * multiples of ErasureMod) that re-uploads AFTER its erasure — the
-    * day-4 re-add that proves a tombstone kills only generations
-    * BEFORE it, never later arrivals of the same id (the
-    * log-structured-store invariant compaction must preserve). */
-  private def reAddedVec(c: Column): Column =
-    graft.queries.Ingest.reconsentedSubject(c)
+      !erasureSubject(col("vec_id")))
 
   /** Builds the full multi-day generation CHAIN of the persisted ANN
     * index and folds it verb by verb — the sequence a production store
@@ -1093,38 +1074,22 @@ object Similarity {
     *   day 3  COMPACT gen1 = (gen0 ∪ delta1) − tombstones
     *   day 4  ADD    delta2 = the ≡ 3 (mod 4) arrivals (minus forgotten
     *                  subjects) PLUS the re-consented half of the
-    *                  deletion set ([[reAddedVec]]) → gen2
+    *                  deletion set ([[Ingest.reconsentedSubject]]) → gen2
     *
     * Every verb reuses the pairwise machinery ([[encodeRows]], the
-    * compaction fold) — this builder only CHAINS them, so what the
+    * compaction's base, delta1 and tombstones, the Generation verbs) —
+    * this builder only CHAINS them, so what the
     * lifecycle query proves is the verbs' associativity: the final
     * generation must equal a from-scratch encode of the surviving
     * logical membership, re-added ids must survive the earlier
     * tombstone, and nothing erased may resurrect. */
   private[graft] def lifecycleAnnIndexDir(s: SparkSession, dir: String): String =
     Tables.store("annindexlifecycle", dir) { root =>
-      val src = persistedIndexDir(s, dir)
-      Tables.write(Tables.read(s, s"$src/pq_codes.parquet")
-        .filter(col("vec_id") % 2 === 0), s"$root/gen0/pq_codes.parquet")
-      Tables.write(encodeRows(s, dir, col("vec_id") % 4 === 1),
-        s"$root/delta1.parquet")
-      Tables.write(
-        vecs(s, dir).select(col("vec_id")).filter(erasedVec(col("vec_id"))),
-        s"$root/tombstones.parquet")
-      val tomb = Tables.read(s, s"$root/tombstones.parquet")
-      Tables.write(Tables.read(s, s"$root/gen0/pq_codes.parquet")
-        .unionByName(Tables.read(s, s"$root/delta1.parquet"))
-        .join(tomb, Seq("vec_id"), "left_anti"), s"$root/gen1/pq_codes.parquet")
-      Tables.write(encodeRows(s, dir,
-          (col("vec_id") % 4 === 3 && !erasedVec(col("vec_id"))) ||
-            reAddedVec(col("vec_id"))), s"$root/delta2.parquet")
-      Tables.write(Tables.read(s, s"$root/gen1/pq_codes.parquet")
-        .unionByName(Tables.read(s, s"$root/delta2.parquet")),
-        s"$root/gen2/pq_codes.parquet")
-      Tables.write(Tables.read(s, s"$src/ivf_centroids.parquet"),
-        s"$root/gen2/ivf_centroids.parquet")
-      Tables.write(Tables.read(s, s"$src/pq_codebook.parquet"),
-        s"$root/gen2/pq_codebook.parquet")
+      annEvenHalf(s, dir)
+        .fold(s"$root/gen1", Seq(annDelta1(s, dir)), annTombstones(s, dir))
+        .append(s"$root/gen2", Map("pq_codes" -> encodeRows(s, dir,
+          (col("vec_id") % 4 === 3 && !erasureSubject(col("vec_id"))) ||
+            reconsentedSubject(col("vec_id")))))
     } + "/gen2"
 
   /** END-TO-END index lifecycle — add → erase → compact → add composed
@@ -1146,7 +1111,7 @@ object Similarity {
     * the broadcast tombstone list; probe cost is unchanged O(queries). */
   def qAnnIndexLifecycle(s: SparkSession, dir: String): DataFrame =
     probeAnnIndex(s, dir, lifecycleAnnIndexDir(s, dir),
-      !erasedVec(col("vec_id")) || reAddedVec(col("vec_id")))
+      !erasureSubject(col("vec_id")) || reconsentedSubject(col("vec_id")))
 
   /** Residual IVFADC — the FAISS DEFAULT configuration
     * (`by_residual=true`; Jégou, Douze & Schmid, TPAMI 2011 §V.A):

@@ -72,7 +72,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // 14.0 s vs prefix 1.7 s — this pins the completeness half (identical
     // answers) and the drop-out mechanism itself on a 400-doc corpus
     val dir = writeHotShingleCorpus(400,
-      java.nio.file.Files.createTempDirectory("hotshingle").toString)
+      tempDir("hotshingle"))
     val viaCount = Dedup.qNgramJaccard(spark, dir).collect().map(_.toString).toSeq
     val viaPrefix = Dedup.qNgramJaccardPrefix(spark, dir).collect().map(_.toString).toSeq
     assert(viaCount.length == 40, s"expected the 40 clone pairs, got ${viaCount.length}")
@@ -758,7 +758,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // (1) EXACTNESS of the contract: mod=2 on the full corpus must equal
     // mod=1 on a PHYSICALLY pre-filtered corpus — i.e. the in-plan
     // predicate is doc-space subsampling, nothing more or less
-    val tmp = java.nio.file.Files.createTempDirectory("evalsample").toString
+    val tmp = tempDir("evalsample")
     graft.io.Tables.documents(spark, d)
       .filter(pmod(graft.core.TextPipeline.h32(col("doc_id").cast("string")),
         lit(2L)) === 0L)
@@ -934,6 +934,23 @@ class DedupSimilaritySpec extends SparkSpec {
     val codeFiles = probe.inputFiles.filter(_.contains("pq_codes"))
     assert(codeFiles.nonEmpty && codeFiles.forall(_.contains("gen1")),
       s"probe must scan only the compacted generation: ${codeFiles.take(2).toSeq}")
+    // the frozen quantizers belong to gen0: the probe reads them from the
+    // persisted build, and no later generation's root holds a copy
+    import scala.jdk.CollectionConverters._
+    val gen0 = Similarity.persistedIndexDir(spark, d)
+    val later = Seq(erased, new java.io.File(gen1).getParent,
+      new java.io.File(Similarity.lifecycleAnnIndexDir(spark, d)).getParent)
+    val laterFiles = later.flatMap { r =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(r))
+      try walk.iterator().asScala.map(_.toString).toList finally walk.close()
+    }
+    for (t <- Seq("ivf_centroids", "pq_codebook")) {
+      val read = probe.inputFiles.filter(_.contains(t))
+      assert(read.nonEmpty && read.forall(_.contains(gen0)),
+        s"probe must read $t from gen0 $gen0: ${read.take(2).toSeq}")
+      assert(!laterFiles.exists(_.contains(t)),
+        s"$t copied into a later generation: ${laterFiles.filter(_.contains(t)).take(2)}")
+    }
   }
 
   test("dedup index erase: no erased id in the artifacts; probe == from-scratch rebuild minus deleted; an erased-only duplicate stops being reported") {
@@ -946,7 +963,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val alt = (1 to 40).map(i => s"v$i").mkString(" ")
     val third = (1 to 40).map(i => s"u$i").mkString(" ")
     val fourth = (1 to 40).map(i => s"t$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("eraseix").toString
+    val tmp = tempDir("eraseix")
     Seq(
       (34L, base, "en", "s1"), // index, erased (34 % 17 == 0)
       (12L, alt, "en", "s1"), // index, kept
@@ -978,7 +995,7 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     // pruned-generation probe == a from-scratch rebuild over the
     // surviving corpus, through the same builder and probe plan
-    val rebuilt = java.nio.file.Files.createTempDirectory("eraserb").toString
+    val rebuilt = tempDir("eraserb")
     Dedup.writeDedupIndex(spark, tmp,
       col("doc_id") % 2 === 0 && col("doc_id") % 17 =!= 0, rebuilt)
     val fromScratch = Dedup.probeDedupIndex(spark, tmp, rebuilt,
@@ -1009,7 +1026,7 @@ class DedupSimilaritySpec extends SparkSpec {
       s"admitted a classified duplicate: ${(addedIds & dups).take(3)}")
     // gen1 row-exact to a from-scratch rebuild over index ∪ accepted,
     // through the same builder
-    val rebuilt = java.nio.file.Files.createTempDirectory("addrb").toString
+    val rebuilt = tempDir("addrb")
     Dedup.writeDedupIndex(spark, d,
       col("doc_id") % 2 === 0 ||
         (col("doc_id") % 2 === 1 && !col("doc_id").isin(dups.toSeq: _*)),
@@ -1021,7 +1038,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val alt = (1 to 40).map(i => s"v$i").mkString(" ")
     val third = (1 to 40).map(i => s"u$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("addix").toString
+    val tmp = tempDir("addix")
     Seq((34L, base, "en", "s1"), (12L, alt, "en", "s1"),
       (35L, base, "en", "s1"), (13L, alt, "en", "s1"),
       (21L, third, "en", "s1"), (39L, third, "en", "s1"))
@@ -1046,7 +1063,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // must equal a from-scratch rebuild over exactly that set
     val dups = Dedup.qDedupPersisted(spark, d).collect()
       .map(_.getLong(0)).toSet
-    val rebuilt = java.nio.file.Files.createTempDirectory("cmprb").toString
+    val rebuilt = tempDir("cmprb")
     Dedup.writeDedupIndex(spark, d,
       !col("doc_id").isin(dups.toSeq: _*) && col("doc_id") % 17 =!= 0,
       rebuilt)
@@ -1120,7 +1137,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // (b) associativity: gen2 row-equal to writeDedupIndex over exactly
     // the member set (per-doc artifact determinism composed across the
     // whole verb chain)
-    val rebuilt = java.nio.file.Files.createTempDirectory("lcrb").toString
+    val rebuilt = tempDir("lcrb")
     Dedup.writeDedupIndex(spark, d,
       col("doc_id").isin(members.toSeq: _*), rebuilt)
     for (t <- Seq("postings", "shingles")) {

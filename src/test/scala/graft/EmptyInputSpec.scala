@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Library totality: EVERY SparkEntry query must execute (not necessarily
   * return rows) against an empty corpus — the first thing a user hits when
   * pointing the engine at a fresh/filtered dataset is an operator that
@@ -16,7 +14,7 @@ import java.nio.file.Files
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val out = Files.createTempDirectory("graft_empty_fixture").toString
+    val out = tempDir("graft_empty_fixture")
     graft.io.Tables.names.foreach { t =>
       spark.read.parquet(s"$sf/$t.parquet").limit(0)
         .coalesce(1).write.mode("overwrite").parquet(s"$out/$t.parquet")

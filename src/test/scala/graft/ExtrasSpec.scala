@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.queries.Extras
@@ -126,7 +125,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("partition-by-column writes prune partitions at read (PartitionFilters)") {
-    val out = Files.createTempDirectory("graft_part").toString
+    val out = tempDir("graft_part")
     graft.io.Tables.documents(spark, sf)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     val back = spark.read.parquet(out).filter(col("lang") === "en")
@@ -253,7 +252,7 @@ class ExtrasSpec extends SparkSpec {
     }
     val base = words.mkString(" ")
     val edited = (words.take(5) ++ Seq("inserted") ++ words.drop(5)).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_spec").toString
+    val dir = tempDir("graft_cdc_spec")
     Seq((1L, base, "en", "src0", base.length.toLong),
       (2L, edited, "en", "src0", edited.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -305,7 +304,7 @@ class ExtrasSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getDouble(3))))
       .toMap
     // Crafted through the production path by writing a tiny events table
-    val dir = java.nio.file.Files.createTempDirectory("graft_interp").toString
+    val dir = tempDir("graft_interp")
     Seq(
       // u1: known(10.0) .. click .. known(20.0): t exactly midway → 15.0
       (1L, t0, "u1", "view", 10.0),
@@ -438,7 +437,7 @@ class ExtrasSpec extends SparkSpec {
     //   r3: "aaa" is one symbol; only (aa,aa) remains
     //   r4+: no pairs anywhere → rounds vanish (run-dry contract)
     import spark.implicits._
-    val dir = Files.createTempDirectory("bpe").toString
+    val dir = tempDir("bpe")
     Seq((0L, "aaa aaaa", "en", "synth", 8L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(dir + "/documents.parquet")

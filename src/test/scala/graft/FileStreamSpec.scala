@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.Windows
@@ -14,9 +13,9 @@ import graft.streaming.Windows
 class FileStreamSpec extends SparkSpec {
 
   test("file-source streaming tumbling agg == batch over all arrived files") {
-    val srcDir = Files.createTempDirectory("graft_stream_src").toString
-    val outDir = Files.createTempDirectory("graft_stream_out").toString
-    val ckDir = Files.createTempDirectory("graft_stream_ck").toString
+    val srcDir = tempDir("graft_stream_src")
+    val outDir = tempDir("graft_stream_out")
+    val ckDir = tempDir("graft_stream_ck")
 
     val events = graft.io.Tables.events(spark, sf)
       .select("ts", "event_type", "value")
@@ -62,7 +61,7 @@ class FileStreamSpec extends SparkSpec {
 
   test("foreachBatch upsert sink: duplicate redelivery converges to distinct keys") {
     import org.apache.spark.sql.{DataFrame, SaveMode}
-    val tableDir = Files.createTempDirectory("graft_fb_tbl").toString
+    val tableDir = tempDir("graft_fb_tbl")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -90,9 +89,9 @@ class FileStreamSpec extends SparkSpec {
   }
 
   test("checkpoint recovery: restart resumes exactly-once (no double-counted windows)") {
-    val srcDir = Files.createTempDirectory("graft_ck_src").toString
-    val outDir = Files.createTempDirectory("graft_ck_out").toString
-    val ckDir = Files.createTempDirectory("graft_ck_ck").toString
+    val srcDir = tempDir("graft_ck_src")
+    val outDir = tempDir("graft_ck_out")
+    val ckDir = tempDir("graft_ck_ck")
     val events = graft.io.Tables.events(spark, sf).select("ts", "event_type", "value")
     val mid = events.agg(expr("percentile(unix_micros(ts), 0.5)")).collect()(0).getDouble(0).toLong
     val schema = events.schema
@@ -123,7 +122,7 @@ class FileStreamSpec extends SparkSpec {
 
   test("file-source streaming probe of the persisted dedup index == q_dedup_persisted, incl. out-of-order pairs and a redelivered file") {
     val d = "/root/testdata/sf0.01"
-    val srcDir = Files.createTempDirectory("graft_probe_src").toString
+    val srcDir = tempDir("graft_probe_src")
     val root = graft.queries.Dedup.dedupIndexDir(spark, d)
     val odd = graft.io.Tables.documents(spark, d)
       .select("doc_id", "text", "lang")
@@ -248,7 +247,7 @@ class FileStreamSpec extends SparkSpec {
 
   test("file-source streaming ANN probe of the persisted index == batch face, incl. a redelivered query file") {
     val d = "/root/testdata/sf0.01"
-    val srcDir = Files.createTempDirectory("graft_annprobe_src").toString
+    val srcDir = tempDir("graft_annprobe_src")
     val (coarse, index, queries) =
       graft.queries.Similarity.annStreamParts(spark, d)
     // query vectors arrive as files: 0-4 first, 5-9 later, then file 1
@@ -294,8 +293,8 @@ class FileStreamSpec extends SparkSpec {
 
   test("file-source streaming corpus pipeline == batch capstone, incl. a late lower-id duplicate replacing its survivor") {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft_corpus_src").toString
-    val corpusDir = Files.createTempDirectory("graft_corpus_fx").toString
+    val srcDir = tempDir("graft_corpus_src")
+    val corpusDir = tempDir("graft_corpus_fx")
 
     // augmented corpus: the sf docs plus an engineered EXACT duplicate of
     // a mid-length doc under a LOWER doc_id (-1), arriving LAST — the

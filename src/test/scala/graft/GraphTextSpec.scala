@@ -192,7 +192,7 @@ class GraphTextSpec extends SparkSpec {
     // disjoint-vocabulary source: inner term vanishes (c_w == c_sw), so
     // KL collapses to the closed form log2(N / n_s)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("kldrift").toString
+    val dir = tempDir("kldrift")
     Seq((0L, "aa bb aa bb aa bb aa bb aa bb aa bb", "en", "big", 35L),
         (1L, "zz yy zz yy", "en", "rare", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -833,7 +833,7 @@ class GraphTextSpec extends SparkSpec {
     // fixture run is a vacuous all-zeros report; the semantics need a
     // corpus that actually contains each class
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("piifix").toString
+    val tmp = tempDir("piifix")
     Seq(
       (1L, "contact a.b@c.com or x@y.org today", "en", "s1"),
       (2L, "order 1234567 shipped, ref 7654321, see https://t.co/x", "en", "s1"),

@@ -311,7 +311,7 @@ class IngestSpec extends SparkSpec {
     // (matched update) — including an out-of-order same-user pair —
     // u3 only after (NOT MATCHED insert)
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("mergeupsert").toString
+    val tmp = tempDir("mergeupsert")
     def ts(h: Int) = new java.sql.Timestamp(1700000000000L + h * 3600000L)
     Seq(
       (1L, 10L, ts(0), "view", 1.0),     // u1: carry-over from the base

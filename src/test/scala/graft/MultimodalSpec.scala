@@ -83,7 +83,7 @@ class MultimodalSpec extends SparkSpec {
     // a byte-identical clone must land at hamming 0 (the content-clone
     // contract): run the query over a crafted two-doc corpus
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mediadedup").toString
+    val dir = tempDir("mediadedup")
     Seq((0L, "the same exact media payload bytes", "en", "synth", 34L),
         (1L, "the same exact media payload bytes", "en", "synth", 34L),
         (2L, "completely different other content here", "en", "synth", 39L))

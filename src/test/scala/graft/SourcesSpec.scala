@@ -11,9 +11,6 @@ import graft.io.Tables
   * the reference's own "word count" text-output shape. */
 class SourcesSpec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("text source: reference input file reads line-per-row (reference scan semantics)") {
     val lines = spark.read.textFile("/root/reference/input_file/input.txt")
     // 26 records: the final line has no trailing newline (wc -l says 25,
@@ -26,7 +23,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv sink/source round-trip preserves schema and rows") {
-    val out = tmp("graft_csv")
+    val out = tempDir("graft_csv")
     val src = Tables.customer(spark, sf)
       .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
     src.write.mode("overwrite").option("header", "true").csv(out)
@@ -39,7 +36,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json sink/source round-trip preserves nested props") {
-    val out = tmp("graft_json")
+    val out = tempDir("graft_json")
     val src = Tables.events(spark, sf).limit(500)
       .select(col("event_id"), col("event_type"), col("value"), col("props"))
     src.write.mode("overwrite").json(out)
@@ -52,7 +49,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc sink/source round-trip preserves schema and exact values") {
-    val out = tmp("graft_orc")
+    val out = tempDir("graft_orc")
     val src = Tables.orders(spark, sf)
     src.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
@@ -65,7 +62,7 @@ class SourcesSpec extends SparkSpec {
 
   test("malformed ingestion: PERMISSIVE captures, DROPMALFORMED drops, FAILFAST throws") {
     import org.apache.spark.sql.types._
-    val dir = tmp("graft_badjson")
+    val dir = tempDir("graft_badjson")
     Files.writeString(java.nio.file.Paths.get(dir, "part-0.json"),
       """{"id": 1, "name": "ok-one"}
         |{"id": 2, "name": "ok-two"}
@@ -103,7 +100,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("parquet sink preserves types exactly (timestamps, doubles, arrays)") {
-    val out = tmp("graft_parquet")
+    val out = tempDir("graft_parquet")
     val src = Tables.embeddings(spark, sf)
     src.write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out)
@@ -112,7 +109,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("reference result-file shape: 'word count' text lines, sorted") {
-    val out = tmp("graft_wcout")
+    val out = tempDir("graft_wcout")
     val wc = graft.queries.WordCount.wordcount(spark, sf)
     wc.select(concat_ws(" ", col("word"), col("cnt"))).coalesce(1)
       .write.mode("overwrite").text(out)
@@ -125,7 +122,7 @@ class SourcesSpec extends SparkSpec {
   test("binaryFile source: media blobs ingest with exact bytes and glob pruning") {
     // the raw-media ingestion path for the Multimodal tier: opaque files →
     // (path, modificationTime, length, content) rows, bytes never parsed
-    val dir = tmp("graft_bin")
+    val dir = tempDir("graft_bin")
     val blobs = Map(
       "a.img" -> Array[Byte](1, 2, 3, 0, -1),
       "b.img" -> Array[Byte](9, 8, 7),
@@ -160,7 +157,7 @@ class SourcesSpec extends SparkSpec {
     // large ones. Order-free content checksum (sum over row h32s) proves
     // the rewrite lossless; at 100 TB the same job runs per partition with
     // maxRecordsPerFile instead of a repartition count.
-    val base = Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact")
     val docs = Tables.documents(spark, sf).select("doc_id", "lang", "text")
     def checksum(df: org.apache.spark.sql.DataFrame): Long =
       df.select(graft.core.TextPipeline.h32(

@@ -11,6 +11,12 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh directory `<java.io.tmpdir>/<prefix>-<uuid>`, deleted when
+    * the JVM exits by the shutdown hook that also removes the
+    * [[graft.io.Tables.store]] roots, so a test run leaves no temp dirs. */
+  protected def tempDir(prefix: String): String =
+    org.apache.spark.sql.graftbridge.Bridge.tempDirDeletedAtExit(prefix)
+
   /** Jobs submitted while `body` runs. Each job is tagged through a local
     * property captured at submission; a trailing `control` job marks the
     * end, and since the listener bus delivers in order, every job `body`

@@ -3,19 +3,21 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import graft.io.Tables
+import graft.io.{Generation, Tables}
 
 /** Pins the artifact write/read pair of `graft.io.Tables`: the schema a
   * [[Tables.write]] records and [[Tables.read]] replays is exactly the one
   * footer inference would find, rewrites are never served a stale schema,
   * and reading a library-written artifact starts no Spark job. Also pins
-  * the build-once scratch helper [[Tables.store]]. */
+  * the build-once scratch helper [[Tables.store]] and the three verbs of
+  * an index [[Generation]]. */
 class TablesSpec extends SparkSpec {
 
   private def scratch(tag: String): String =
-    Files.createTempDirectory(s"graft_tables_$tag").toString
+    tempDir(s"graft_tables_$tag")
 
   /** Non-nullable scalars, a nested struct, an array, a decimal and a
     * timestamp — the shapes the persisted stores hold. */
@@ -184,6 +186,67 @@ class TablesSpec extends SparkSpec {
     }.getOrElse(fail(s"probe printed no root:\n$out"))
     assert(root.contains("graft_exitprobe_tables_spec_"), root)
     assert(!new java.io.File(root).exists, s"$root outlived its JVM")
+  }
+
+  /** A two-artifact generation keyed on `id` over ids 0..9: `a` (id, x)
+    * and `b` (id, y). */
+  private def tinyGen(): Generation = Generation.write(spark, scratch("gen0"),
+    Map("a" -> aRows(0 until 10), "b" -> bRows(0 until 10)))
+
+  private def aRows(ids: Range): DataFrame =
+    spark.range(ids.start, ids.end).selectExpr("id", "id * 10 AS x")
+
+  private def bRows(ids: Range): DataFrame =
+    spark.range(ids.start, ids.end).selectExpr("id", "concat('b', id) AS y")
+
+  private def ids(df: DataFrame): Set[Long] =
+    df.select("id").collect().map(_.getLong(0)).toSet
+
+  test("generation prune drops exactly the ids that fail keep") {
+    val g = tinyGen()
+    val root = scratch("prune")
+    val p = g.prune(root, col("id") % 3 =!= 0)
+    for (n <- Seq("a", "b")) {
+      assert(ids(p(n)) == Set(1L, 2L, 4L, 5L, 7L, 8L), n)
+      assert(sorted(p(n)) == sorted(g(n).filter(col("id") % 3 =!= 0)), n)
+      assert(p.files(n) == s"$root/$n.parquet")
+    }
+  }
+
+  test("generation append equals base ∪ delta and writes only the artifact it changed") {
+    val g = tinyGen()
+    val root = scratch("append")
+    val c = g.append(root, Map("a" -> aRows(10 until 13)))
+    assert(sorted(c("a")) == sorted(aRows(0 until 13)))
+    assert(c.files("a") == s"$root/a.parquet")
+    // `b` did not change: it stays the parent's file, with no copy
+    assert(c.files("b") == g.files("b"))
+    assert(sorted(c("b")) == sorted(bRows(0 until 10)))
+    assert(!new java.io.File(s"$root/b.parquet").exists,
+      "an unchanged artifact was written under the child root")
+  }
+
+  test("generation fold equals (base ∪ deltas) left-anti tombstones; a later append of a tombstoned id survives") {
+    import spark.implicits._
+    val g = tinyGen()
+    val root = scratch("fold")
+    val tomb = Seq(0L, 3L, 11L, 13L).toDF("id")
+    // two deltas; the second carries `a` rows only
+    val f = g.fold(s"$root/gen1",
+      Seq(Map("a" -> aRows(10 until 12), "b" -> bRows(10 until 12)),
+        Map("a" -> aRows(12 until 14))), tomb)
+    val gone = Set(0L, 3L, 11L, 13L)
+    assert(sorted(f("a")) ==
+      sorted(aRows(0 until 14).filter(!col("id").isin(gone.toSeq: _*))))
+    assert(sorted(f("b")) ==
+      sorted(bRows(0 until 12).filter(!col("id").isin(gone.toSeq: _*))))
+    assert(f.files.values.forall(_.startsWith(s"$root/gen1/")))
+    // the re-add rule: an id appended after the fold that tombstoned it
+    // is back; the artifact the append left alone keeps the fold's rows
+    val g2 = f.append(s"$root/gen2", Map("a" -> aRows(3 until 4)))
+    assert(ids(g2("a")) == ids(f("a")) + 3L)
+    assert(g2.files("b") == f.files("b") && !ids(g2("b")).contains(3L))
+    assert(!new java.io.File(s"$root/gen2/b.parquet").exists)
   }
 }
 

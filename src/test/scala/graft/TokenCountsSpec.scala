@@ -73,7 +73,7 @@ class TokenCountsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("empty input, all-NULL and all-blank input") {
     // an empty LocalRelation is folded away before the rule runs; an empty
     // file is not
-    val dir = java.nio.file.Files.createTempDirectory("tc_empty")
+    val dir = java.nio.file.Paths.get(tempDir("tc_empty"))
     java.nio.file.Files.write(dir.resolve("empty.txt"), Array.emptyByteArray)
     val empty = spark.read.text(dir.toString).withColumnRenamed("value", "text")
     assert(assertFusedSame(wc(empty)).count() == 0)
