@@ -45,6 +45,15 @@ object TextPipeline {
   def normalizedTokens(text: Column): Column =
     graft.functions.VectorFunctions.normalizedTokens(text)
 
+  /** [[normalizedTokens]] of the `text` column — the token array every
+    * `documents` query starts from. */
+  val toks: Column = normalizedTokens(col("text"))
+
+  /** Exact-dedup fingerprint of a token array: md5 of the tokens joined
+    * by single spaces. Two documents get the same fingerprint iff their
+    * normalized token streams are equal (tokens never contain a space). */
+  def exactFingerprint(w: Column): Column = md5(concat_ws(" ", w))
+
   /** DuckDB spelling of the same per-token normalization, for oracle SQL. */
   val duckNormalize: String => String =
     t => s"lower(regexp_replace($t, '[^a-zA-Z]', '', 'g'))"

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: |A ∩ B| for two SORTED, DISTINCT
   * ARRAY<STRING> or ARRAY<BIGINT> columns via a merge scan — O(|A|+|B|)
@@ -46,48 +45,14 @@ case class SortedIntersectCount(left: Expression, right: Expression)
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements(); val ny = y.numElements()
-    var i = 0; var j = 0; var c = 0
-    if (longElems) {
-      while (i < nx && j < ny) {
-        val cmp = java.lang.Long.compare(x.getLong(i), y.getLong(j))
-        if (cmp == 0) { c += 1; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
-      }
-    } else {
-      while (i < nx && j < ny) {
-        val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-        if (cmp == 0) { c += 1; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
-      }
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.mergeCount(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], longElems)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val cmp = ctx.freshName("cmp")
-      val cmpExpr =
-        if (longElems) s"Long.compare($a.getLong($i), $b.getLong($j))"
-        else s"$a.getUTF8String($i).compareTo($b.getUTF8String($j))"
-      s"""
-         |int $nx = $a.numElements(); int $ny = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $nx && $j < $ny) {
-         |  int $cmp = $cmpExpr;
-         |  if ($cmp == 0) { $c++; $i++; $j++; }
-         |  else if ($cmp < 0) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val merge = classOf[SortedIntersectCount].getName + ".mergeCount"
+    defineCodeGen(ctx, ev, (a, b) => s"$merge($a, $b, $longElems)")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
@@ -95,6 +60,25 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
+  /** THE merge loop: |x ∩ y| for two ascending, duplicate-free arrays of
+    * BIGINT (`longs`) or STRING elements, in O(|x| + |y|) comparisons
+    * with no allocation. Shared by the interpreted path, the generated
+    * code and the streaming dedup registry
+    * (graft.streaming.Windows.dedupRegistryUpdate). */
+  def mergeCount(x: ArrayData, y: ArrayData, longs: Boolean): Int = {
+    val nx = x.numElements(); val ny = y.numElements()
+    var i = 0; var j = 0; var c = 0
+    while (i < nx && j < ny) {
+      val cmp =
+        if (longs) java.lang.Long.compare(x.getLong(i), y.getLong(j))
+        else x.getUTF8String(i).compareTo(y.getUTF8String(j))
+      if (cmp == 0) { c += 1; i += 1; j += 1 }
+      else if (cmp < 0) i += 1
+      else j += 1
+    }
+    c
+  }
+
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[SortedIntersectCount].getName, "sorted_intersect_count")
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Lineage, TextPipeline}
+import graft.core.TextPipeline.{duckToks, toks}
 import graft.io.Tables
 
 /** Corpus-preparation tier: the whole-corpus operations a training-data
@@ -16,9 +17,6 @@ import graft.io.Tables
   * the corpus itself shuffles at most once (the per-language rank).
   */
 object Corpus {
-
-  private val toks: Column = TextPipeline.normalizedTokens(col("text"))
-  private val duckToks = TextPipeline.duckToks
 
   /** Redaction: scrub email-shaped, long-digit, and url-shaped spans
     * (the standard PII pre-filters). Pure regexp projection — one narrow
@@ -658,7 +656,7 @@ object Corpus {
         // the q_dedup_exact fingerprint (normalized tokens, not raw
         // text) so the contamination number matches what the dedup
         // tier would actually remove
-        md5(concat_ws(" ", toks)).as("sig"))
+        TextPipeline.exactFingerprint(toks).as("sig"))
     val stats = per.agg(count(lit(1)).as("n"), sum(col("nt")).as("toks"),
         sum(col("n_chars")).as("chars"),
         countDistinct(col("lang")).as("nl"),
@@ -854,7 +852,7 @@ object Corpus {
       expr("percentile(nt, 0.9)").as("p90"))
     cleaned.crossJoin(broadcast(bounds))
       .filter(col("nt") >= col("p10") && col("nt") <= col("p90"))
-      .withColumn("fp", md5(concat_ws(" ", col("w"))))
+      .withColumn("fp", TextPipeline.exactFingerprint(col("w")))
       .withColumn("canon", min(col("doc_id")).over(Window.partitionBy("fp")))
       .filter(col("doc_id") === col("canon"))
       .select(col("lang"), col("nt"), pipelineSplit(col("doc_id")).as("split"))
@@ -927,7 +925,7 @@ object Corpus {
     val exact = Lineage.cut(
       cleaned.crossJoin(broadcast(bounds))
         .filter(col("nt") >= col("p10") && col("nt") <= col("p90"))
-        .withColumn("fp", md5(concat_ws(" ", col("w"))))
+        .withColumn("fp", TextPipeline.exactFingerprint(col("w")))
         .withColumn("canon", min(col("doc_id")).over(Window.partitionBy("fp")))
         .filter(col("doc_id") === col("canon"))
         .select(col("doc_id"), col("lang"), col("w"), col("nt")))
@@ -950,8 +948,8 @@ object Corpus {
         graft.functions.VectorFunctions.sortedIntersectCount(
           col("a_ss"), col("b_ss")).cast("long").as("inter"),
         col("a_n"), col("b_n"))
-      .filter(col("inter").cast("double")
-        / (col("a_n") + col("b_n") - col("inter")) >= Dedup.JaccardT)
+      .filter(Dedup.jaccard(col("inter"), col("a_n"), col("b_n"))
+        >= Dedup.JaccardT)
     val clusters = Dedup.components(
       pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
     val members = clusters.join(exact.select(col("doc_id"), col("nt")),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Lineage, TextPipeline}
-import graft.core.TextPipeline.{duckH32, duckShingles, h32, shinglesOf}
+import graft.core.TextPipeline.{duckH32, duckShingles, duckToks, h32, shinglesOf, toks}
 import graft.functions.VectorFunctions.h60
 import graft.io.{Generation, Tables}
 import Ingest.{erasureSubject, reconsentedSubject}
@@ -56,11 +56,6 @@ object Dedup {
 
   // ---- shared token/shingle projections ------------------------------------
 
-  /** Normalized token array (reference tokenizer semantics, TextPipeline). */
-  private val toks: Column = TextPipeline.normalizedTokens(col("text"))
-
-  private val duckToks = TextPipeline.duckToks
-
   /** MinHash signature array (NumHashes entries) over a PRE-HASHED shingle
     * array (`hashShingles`): each slot is an affine mix + min over the
     * cached integer hashes — md5 runs once per shingle, not NumHashes
@@ -85,7 +80,7 @@ object Dedup {
   def qDedupExact(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fp = Tables.documents(s, dir)
-      .select(col("doc_id"), md5(concat_ws(" ", toks)).as("fingerprint"))
+      .select(col("doc_id"), TextPipeline.exactFingerprint(toks).as("fingerprint"))
     val w = Window.partitionBy(col("fingerprint"))
     fp.withColumn("canonical_id", min(col("doc_id")).over(w))
       .withColumn("n_copies", count(lit(1)).over(w))
@@ -271,8 +266,7 @@ object Dedup {
       .select(col("h"), col("doc_id").as("b_id"), col("n").as("b_n"))
     val truth = a.join(b, "h").filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id", "a_n", "b_n").agg(count(lit(1)).as("inter"))
-      .filter(col("inter").cast("double")
-        / (col("a_n") + col("b_n") - col("inter")) >= EvalT)
+      .filter(jaccard(col("inter"), col("a_n"), col("b_n")) >= EvalT)
       .select(col("a_id"), col("b_id"))
     val bands = sigsOf(s, dir).filter(evalSampled(mod))
       .select(col("doc_id"),
@@ -353,8 +347,8 @@ object Dedup {
     val truth = a.join(b, "h").filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id", "a_n", "b_n").agg(count(lit(1)).as("inter"))
       .select(col("a_id"), col("b_id"),
-        least(floor(col("inter").cast("double")
-          / (col("a_n") + col("b_n") - col("inter")) * 10), lit(9.0))
+        least(floor(jaccard(col("inter"), col("a_n"), col("b_n")) * 10),
+          lit(9.0))
           .cast("long").as("j_band"))
     val bands = sigsOf(s, dir).filter(evalSampled(mod))
       .select(col("doc_id"),
@@ -602,6 +596,14 @@ object Dedup {
     * private[graft], by the streaming probe twin in Windows). */
   private[graft] val JaccardT = 0.2
 
+  /** Jaccard similarity of two sets from their intersection size and
+    * their two sizes: |A ∩ B| / (|A| + |B| − |A ∩ B|), as a double. Every
+    * Column-side verifier (batch and streaming probes) scores with this
+    * one spelling; the streaming registry's in-state Scala form
+    * (Windows.dedupRegistryUpdate) computes the same double. */
+  private[graft] def jaccard(inter: Column, a: Column, b: Column): Column =
+    inter.cast("double") / (a + b - inter)
+
   /** Shingled docs (doc_id, lang, s): the shared head of both exact
     * verifiers. Early filter on the TOKEN count (equivalent to
     * size(s) > 0 since ≥3 tokens ⟺ ≥1 trigram): a post-shingle filter
@@ -659,7 +661,7 @@ object Dedup {
       .groupBy(col("a_id"), col("b_id"), col("a_n"), col("b_n"))
       .agg(count(lit(1)).as("inter"))
       .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))
+        jaccard(col("inter"), col("a_n"), col("b_n")).as("jaccard"))
       .filter(col("jaccard") >= JaccardT)
       .orderBy("a_id", "b_id")
   }
@@ -716,7 +718,7 @@ object Dedup {
         graft.functions.VectorFunctions.sortedIntersectCount(col("a_ss"), col("b_ss"))
           .cast("long").as("inter"), col("a_n"), col("b_n"))
       .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))
+        jaccard(col("inter"), col("a_n"), col("b_n")).as("jaccard"))
       .filter(col("jaccard") >= JaccardT)
       .orderBy("a_id", "b_id")
   }
@@ -742,7 +744,7 @@ object Dedup {
   def qDedupWinnow(s: SparkSession, dir: String): DataFrame =
     winnowScored(s, dir)
       .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))
+        jaccard(col("inter"), col("a_n"), col("b_n")).as("jaccard"))
       .filter(col("jaccard") >= JaccardT)
       .orderBy("a_id", "b_id")
 
@@ -795,7 +797,7 @@ object Dedup {
     winnowScored(s, dir)
       .select(col("a_id"), col("b_id"),
         (col("inter").cast("double") / least(col("a_n"), col("b_n"))).as("containment"),
-        (col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))
+        jaccard(col("inter"), col("a_n"), col("b_n")).as("jaccard"))
       .filter(col("containment") >= ContainT)
       .orderBy("a_id", "b_id")
 
@@ -822,7 +824,7 @@ object Dedup {
     winnowScored(s, dir)
       .filter(col("a_id") % 2 === 1 || col("b_id") % 2 === 1) // drop index-internal
       .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))
+        jaccard(col("inter"), col("a_n"), col("b_n")).as("jaccard"))
       .filter(col("jaccard") >= JaccardT)
       .select(
         when(col("a_id") % 2 === 1, col("a_id")).otherwise(col("b_id")).as("new_id"),
@@ -965,8 +967,7 @@ object Dedup {
           .sortedIntersectCount(col("hs_new"), col("hs_dup"))
           .cast("long").as("inter"), col("n_new"), col("n_dup"))
       .select(col("new_id"), col("dup_of"), col("kind"),
-        (col("inter").cast("double")
-          / (col("n_new") + col("n_dup") - col("inter"))).as("jaccard"))
+        jaccard(col("inter"), col("n_new"), col("n_dup")).as("jaccard"))
       .filter(col("jaccard") >= JaccardT)
       .orderBy("new_id", "dup_of")
   }

@@ -119,7 +119,7 @@ object Multimodal {
       i => ascii(col("text").substr((floor(i * n / 32) + 1).cast("int"), lit(1))))
     // relational spelling (posexplode + per-doc window sum), NOT a 32-term
     // per-row fold: projection collapse would inline the sample pipeline
-    // once per bit term (the O(n²) HOF trap TextAnalysis.winnowFps pins)
+    // once per bit term (the O(n²) HOF trap TextAnalysis.winnowRowLocal documents)
     val rows = media(s, dir).filter(n >= 1)
       .select(col("doc_id"), posexplode(samples).as(Seq("i", "sv")))
     val wDoc = Window.partitionBy(col("doc_id"))

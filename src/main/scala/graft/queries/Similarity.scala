@@ -156,7 +156,7 @@ object Similarity {
     * no shuffle, no window, one allocation-free codegen loop per row
     * (same (d2, cell) lexicographic winner and left-to-right (x−y)² fold
     * as the composed array_min/transform form it replaced). */
-  private def kmeansAssign(e: DataFrame, centroids: DataFrame): DataFrame = {
+  private[graft] def kmeansAssign(e: DataFrame, centroids: DataFrame): DataFrame = {
     val cs = centroids
       .agg(sort_array(collect_list(struct(col("cell"), col("cv")))).as("cs"))
     e.crossJoin(broadcast(cs))
@@ -183,7 +183,7 @@ object Similarity {
     * both self-join sides) don't re-run the whole Lloyd chain per branch;
     * a production pipeline persists exactly this table between the
     * training and indexing phases. */
-  private def kmeansCentroids(e: DataFrame): DataFrame =
+  private[graft] def kmeansCentroids(e: DataFrame): DataFrame =
     kmeansUpdate(kmeansAssign(e, kmeansUpdate(kmeansAssign(e, kmeansSeeds(e)))))
       // sf0.1 median, cuts on/off: q_kmeans 1.61/1.96 s (wins for 4 of 9 queries)
       .transform(Lineage.cut)
@@ -239,13 +239,6 @@ object Similarity {
     * (cell, pos, long) partial agg with the KCells-row centroid table
     * broadcast; the report adds one broadcast join and a KCells-row
     * aggregate — nothing scales beyond the assignment scan. */
-  /** Spec hooks: the deterministic trained centroids / assignments over
-    * any (vec_id, v) relation, for driver-side recompute pins. */
-  private[graft] def kmeansCentroidsFor(e: DataFrame): DataFrame =
-    kmeansCentroids(e)
-  private[graft] def kmeansAssignFor(e: DataFrame): DataFrame =
-    kmeansAssign(e, kmeansCentroids(e))
-
   def qKmeans(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir).select(col("vec_id"), col("v"))
     val c2 = kmeansCentroids(e)

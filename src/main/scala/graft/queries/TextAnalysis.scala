@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Lineage, TextPipeline}
+import graft.core.TextPipeline.{duckToks, toks}
 import graft.io.Tables
 
 /** M3 — text-analysis tier over `documents`: the operations a large-scale
@@ -22,11 +23,6 @@ import graft.io.Tables
   * instead of log-idf for that reason.
   */
 object TextAnalysis {
-
-  /** Normalized token array of `text`, reference semantics (TextPipeline). */
-  private val toks: Column = TextPipeline.normalizedTokens(col("text"))
-
-  private val duckToks = TextPipeline.duckToks
 
   /** English stopwords present in the fixture vocabulary. */
   private val stop = Seq("the", "a", "of", "and", "to", "in", "is")
@@ -208,7 +204,7 @@ object TextAnalysis {
   }
 
   /** Hill-estimator order-statistic count for [[qTailIndex]]. */
-  private val HillK = 20
+  private[graft] val HillK = 20
 
   /** Zipf tail index of the token frequency distribution (Hill
     * estimator over the top-[[HillK]] frequencies) — the corpus-health
@@ -232,10 +228,9 @@ object TextAnalysis {
     * top-21, O(partitions·21) merge). No stage ranks the full
     * vocabulary; the residual rank window orders ≤ 21 rows. This
     * removed the repo's last V-cardinality single-partition sort (the
-    * round-11 verdict item; the old window spelling stays below as the
-    * unregistered measured baseline, spec-pinned result-identical and
-    * measured at the sf1 decade + the 10×-vocabulary control,
-    * SURVEY §8.13). */
+    * round-11 verdict item; the old window spelling is GraphTextSpec's
+    * reference, pinned result-identical, and was measured against it at
+    * the sf1 decade + the 10×-vocabulary control, SURVEY §8.13). */
   def qTailIndex(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val qlog = (c: Column) => round(log2(c.cast("double")) * 1e6).cast("long")
@@ -246,33 +241,6 @@ object TextAnalysis {
       .withColumn("rank",
         row_number().over(Window.orderBy(col("f").desc, col("word").asc)))
       .crossJoin(broadcast(nv))
-      .withColumn("k", least(lit(HillK.toLong), col("n_vocab") - 1))
-    val fref = withK.filter(col("rank") === col("k") + 1)
-      .select(col("f").as("f_ref"))
-    withK.filter(col("rank") <= col("k"))
-      .crossJoin(broadcast(fref))
-      .groupBy(col("n_vocab"), col("k"), col("f_ref"))
-      .agg(sum(qlog(col("f")) - qlog(col("f_ref"))).as("denom_micros"))
-      .select(col("n_vocab"), col("k"), col("f_ref"), col("denom_micros"),
-        when(col("denom_micros") > 0,
-          expr("k * 1000000000000 div denom_micros"))
-          .otherwise(lit(null).cast("long")).as("alpha_log2_micros"))
-  }
-
-  /** The pre-round-12 spelling of [[qTailIndex]] — a global rank window
-    * over the full vocabulary — kept (not registered) as the measured
-    * baseline for the bounded TakeOrdered replacement and spec-pinned
-    * result-identical to it (the [[qVocabCoverageWindow]] pattern). */
-  private[graft] def qTailIndexWindow(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qlog = (c: Column) => round(log2(c.cast("double")) * 1e6).cast("long")
-    val ranked = TextPipeline.words(Tables.documents(s, dir), "text")
-      .groupBy(col("word")).agg(count(lit(1)).as("f"))
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("f").desc, col("word").asc)))
-      .transform(Lineage.cut) // vocabulary-sized; 3 consumers
-    val nv = ranked.agg(max(col("rank")).cast("long").as("n_vocab"))
-    val withK = ranked.crossJoin(broadcast(nv))
       .withColumn("k", least(lit(HillK.toLong), col("n_vocab") - 1))
     val fref = withK.filter(col("rank") === col("k") + 1)
       .select(col("f").as("f_ref"))
@@ -570,7 +538,7 @@ object TextAnalysis {
   def qFingerprint(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        md5(concat_ws(" ", toks).cast("binary")).as("fingerprint"))
+        TextPipeline.exactFingerprint(toks).as("fingerprint"))
       .orderBy("doc_id")
 
   /** Winnowing window size (consecutive k-gram hashes per window);
@@ -588,12 +556,13 @@ object TextAnalysis {
     * detection joins on. Exact-duplicate documents get identical fingerprint
     * SETS by construction (pinned against q_dedup_exact in the spec).
     *
-    * Scale stance (100 TB): the whole selection is per-row array HOFs
-    * (trigrams → h32 → window minima → distinct) — zero shuffles before the
-    * presentation sort; a dedup pipeline would join on (fingerprint) next,
-    * which is the same bucketed-candidate shape as the LSH band join. Docs
-    * with fewer than W trigrams contribute their global minimum (one
-    * window), so every non-empty doc has ≥ 1 fingerprint.
+    * Scale stance (100 TB): the selection is per-document work (trigrams →
+    * h32 → window minima → distinct); the relational spelling below
+    * shuffles narrow (doc_id, pos, hash) rows once, the same volume the
+    * dedup join shuffles anyway, and a dedup pipeline joins on
+    * (fingerprint) next — the bucketed-candidate shape of the LSH band
+    * join. Docs with fewer than W trigrams contribute their global minimum
+    * (one window), so every doc with a trigram has ≥ 1 fingerprint.
     */
   def qFingerprintWinnow(s: SparkSession, dir: String): DataFrame =
     winnowFps(s, dir).select("doc_id", "fingerprint")
@@ -602,19 +571,7 @@ object TextAnalysis {
   /** (doc_id, lang, fingerprint): the exploded winnowed-fingerprint
     * relation behind [[qFingerprintWinnow]] and Dedup.qDedupWinnow — one
     * definition so the selection rule can't drift between the report and
-    * the pair join that dedups on it.
-    *
-    * Formulation note: the window minima are computed RELATIONALLY
-    * (posexplode the hash array once, per-doc ROWS-frame `min` window,
-    * distinct) — NOT as the seemingly cheaper per-row HOF
-    * `transform(sequence(1, n−W+1), i -> array_min(slice(hs, i, W)))`.
-    * Higher-order-function lambdas run interpreted with no common-
-    * subexpression elimination, so that form re-derives the ENTIRE
-    * trigram→md5 pipeline per window index — O(n²) regex/digest work,
-    * measured 11.1 s vs 0.5 s at sf0.001 (the same trap
-    * TextPipeline.trigrams documents for element_at-over-sequence). The
-    * window shuffles narrow (doc_id, pos, hash) rows once — the same
-    * volume the dedup join shuffles anyway. */
+    * the pair join that dedups on it. */
   private[queries] def winnowFps(s: SparkSession, dir: String): DataFrame =
     winnowFpsOf(Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), toks.as("w")))
@@ -622,7 +579,21 @@ object TextAnalysis {
   /** [[winnowFps]] over any pre-tokenized (doc_id, lang, w) relation —
     * the composed pipeline (Corpus.qCorpusPipelineFull) fingerprints the
     * CLEANED token stream, not raw text, so the selection core must not
-    * bake the raw-document scan in. */
+    * bake the raw-document scan in.
+    *
+    * Formulation note: the batch face computes the window minima
+    * RELATIONALLY (posexplode the hash array once, per-doc ROWS-frame
+    * `min` window, distinct). The per-row HOF spelling ([[winnowRowLocal]],
+    * which the streaming faces must run) is linear too once its hash array
+    * is materialized, and selects the identical set; it is not used here
+    * because it measured slower in-suite. At sf0.1 (one input split) the
+    * row-local selection runs in the scan's single task and is computed
+    * once per consumer — twice in the self-joins of q_dedup_winnow and
+    * q_dedup_containment, twice in q_fingerprint_winnow's range sort
+    * (its sample job re-runs it) — while the window's shuffle spreads the
+    * minima over tasks and is reused. Bench (4 cpus, 1 pair) read
+    * q_dedup_winnow 3.79 → 5.00 s and q_fingerprint_winnow 1.23 → 1.41 s
+    * for the row-local spelling (ROADMAP item 4 has the full numbers). */
   private[queries] def winnowFpsOf(rel: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = transform(TextPipeline.trigrams(col("w")), t => TextPipeline.h32(t))
@@ -645,6 +616,36 @@ object TextAnalysis {
       .filter(col("pos") <= greatest(col("maxp") - (WinnowW - 1), lit(0)))
       .select(col("doc_id"), col("lang"), col("wmin").as("fingerprint"))
       .distinct()
+  }
+
+  /** The winnow selection as one row-local fragment — the spelling both
+    * streaming faces run (Windows.winnowFingerprints and
+    * Windows.dedupIndexProbeStream), since a window function cannot run
+    * on an unbounded stream. Per row of `rel`: hash each trigram of the
+    * token column `w` (h32), take the minimum of each window of
+    * [[WinnowW]] consecutive hashes over starts 1..max(n−W+1, 1), and
+    * emit one row per distinct minimum as `fingerprint`, next to the
+    * `keep` columns. A row without a trigram (NULL, empty or under 3
+    * tokens) emits nothing. Selects exactly [[winnowFpsOf]]'s set
+    * (StreamingSpec pins streaming == batch).
+    *
+    * The hash array is MATERIALIZED in its own projection before the
+    * selection lambda reads it. Higher-order lambdas run interpreted with
+    * no common-subexpression elimination, so a lambda over the
+    * trigram→h32 expression itself would re-derive it per window start —
+    * O(n²) digest work (measured 11.1 s vs 0.5 s at sf0.001). Read through
+    * a column, the hashes are computed once per row: the optimized plan
+    * holds `h32(` exactly once (DedupSimilaritySpec pins it). */
+  private[graft] def winnowRowLocal(rel: DataFrame, w: Column,
+      keep: String*): DataFrame = {
+    val kept = keep.map(col)
+    val hs = col("winnow_hs")
+    rel.select(kept :+ transform(TextPipeline.trigrams(w),
+        t => TextPipeline.h32(t)).as("winnow_hs"): _*)
+      .select(kept :+ explode(array_distinct(transform(
+          sequence(lit(1), greatest(size(hs) - (WinnowW - 1), lit(1))),
+          i => array_min(slice(hs, i, lit(WinnowW)))))).as("fingerprint"): _*)
+      .filter(col("fingerprint").isNotNull)
   }
 
   /** Token-length histogram per language via the custom typed Aggregator
@@ -931,7 +932,7 @@ object TextAnalysis {
     * against the window spelling at the sf1 decade and on the 10×-
     * vocabulary open-vocab control, SURVEY §8.12). The residual rank
     * window orders 16 rows; the k-spine and total stay broadcast. */
-  private val VocabKMax = 16
+  private[graft] val VocabKMax = 16
 
   def qVocabCoverage(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -941,30 +942,6 @@ object TextAnalysis {
     val ranked = wc.orderBy(col("f").desc, col("word")).limit(VocabKMax)
       .withColumn("rank",
         row_number().over(Window.orderBy(col("f").desc, col("word"))))
-    val spine = s.range(5).select(expr("shiftleft(1L, cast(id AS int))")
-      .as("k"))
-    ranked.crossJoin(broadcast(spine))
-      .filter(col("rank") <= col("k"))
-      .groupBy("k")
-      .agg(count(lit(1)).as("n_types"), sum(col("f")).as("covered_tokens"))
-      .crossJoin(broadcast(tot))
-      .withColumn("coverage_ppm",
-        when(col("total_tokens") > 0,
-          expr("covered_tokens * 1000000 div total_tokens")))
-      .orderBy("k")
-  }
-
-  /** The pre-round-11 spelling of [[qVocabCoverage]] — a global rank
-    * window over the full vocabulary — kept (not registered) as the
-    * measurement baseline for the bounded TakeOrdered replacement and
-    * spec-pinned result-identical to it. */
-  private[graft] def qVocabCoverageWindow(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wc = TextPipeline.words(Tables.documents(s, dir), "text")
-      .groupBy("word").agg(count(lit(1)).as("f"))
-    val tot = wc.agg(sum(col("f")).as("total_tokens"))
-    val ranked = wc.withColumn("rank",
-      row_number().over(Window.orderBy(col("f").desc, col("word"))))
     val spine = s.range(5).select(expr("shiftleft(1L, cast(id AS int))")
       .as("k"))
     ranked.crossJoin(broadcast(spine))

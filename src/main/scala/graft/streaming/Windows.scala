@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.DecimalType
+import graft.plans.SortedIntersectCount
 
 /** M5 — event-time windowing, ONE definition for batch and streaming.
   *
@@ -172,6 +174,14 @@ object Windows {
   /** Current per-nation top-k snapshot (ascending (price, key) order). */
   case class TopkSnapshot(nation: String, prices: Seq[Long], keys: Seq[Long])
 
+  /** The k smallest distinct elements of `kept` ++ `batch`, ascending —
+    * the merge step of every O(k)-state registry here ([[topkStream]],
+    * [[annRegistryUpdate]], [[groupSampleStream]]). The distinct swallows
+    * redelivered elements, so the merge is at-least-once safe. */
+  private def smallestK[A: Ordering](kept: Seq[A], batch: Iterator[A],
+      k: Int): Seq[A] =
+    (kept.iterator ++ batch).toSeq.distinct.sorted.take(k)
+
   /** Streaming bounded top-k — the online twin of `q_topk_bounded` (and
     * of the ANN tier's `topk_min` aggregate): per nation, maintain the k
     * lexicographically smallest (price, key) pairs as orders arrive,
@@ -188,9 +198,8 @@ object Windows {
       .mapGroupsWithState[Seq[(Long, Long)], TopkSnapshot](
         GroupStateTimeout.NoTimeout()) {
         (nation: String, batch: Iterator[PricedOrder], state: GroupState[Seq[(Long, Long)]]) =>
-          val merged = (state.getOption.getOrElse(Seq.empty).iterator ++
-            batch.map(o => (o.price_cents, o.o_orderkey)))
-            .toSeq.distinct.sorted.take(k)
+          val merged = smallestK(state.getOption.getOrElse(Seq.empty),
+            batch.map(o => (o.price_cents, o.o_orderkey)), k)
           state.update(merged)
           TopkSnapshot(nation, merged.map(_._1), merged.map(_._2))
       }
@@ -281,28 +290,6 @@ object Windows {
     PatternState(nP, nM, firstM, lastV, lastE, Seq.empty)
   }
 
-  /** STREAMING twin of `Analytics.qEventPattern` — the CEP automaton
-    * (`view (anything but error)* purchase` within the hour, AFTER MATCH
-    * SKIP TO NEXT ROW) evaluated online. The mutable state is the user's
-    * pending (t_us, event_id, code) suffix, REPLAYED sorted by
-    * (t_us, event_id) — the batch twin's exact window order — per batch,
-    * so the snapshot is arrival-order-independent: a late error landing
-    * between an already-matched view→purchase pair DEMOTES the match on
-    * the next snapshot, and a late view can create one. Dedup is on the
-    * event id (`.distinct` over (t, id, code)), so at-least-once
-    * redelivery is idempotent while two distinct same-type events in the
-    * same microsecond both count — exactly the batch semantics.
-    *
-    * State is BOUNDED when the input carries an event-time watermark:
-    * every event at t ≤ watermark − W is folded into the frozen
-    * [[PatternState]] summary (fold composition is exact — replay(all) ≡
-    * fold(prefix) then replay(suffix)), and only the trailing window
-    * stays materialized. Safe because Spark drops input older than the
-    * watermark before this operator, so nothing can ever land inside the
-    * frozen prefix; an event at t > watermark − W can still interact with
-    * future purchases (t − lastV ≤ W), so it stays pending. Without a
-    * watermark (`getCurrentWatermarkMs` = 0) no pruning happens and the
-    * full-history replay contract holds verbatim. */
   /** One [[patternStream]] micro-batch update for a single user:
     * merge the batch's (t_us, event_id, code) rows into the pending
     * suffix (dedup by id; drop sub-cutoff stragglers — they are older
@@ -325,6 +312,28 @@ object Windows {
       PatternSnap(-1L, snap.n_purchases, snap.n_matched, snap.first_match_us))
   }
 
+  /** STREAMING twin of `Analytics.qEventPattern` — the CEP automaton
+    * (`view (anything but error)* purchase` within the hour, AFTER MATCH
+    * SKIP TO NEXT ROW) evaluated online. The mutable state is the user's
+    * pending (t_us, event_id, code) suffix, REPLAYED sorted by
+    * (t_us, event_id) — the batch twin's exact window order — per batch,
+    * so the snapshot is arrival-order-independent: a late error landing
+    * between an already-matched view→purchase pair DEMOTES the match on
+    * the next snapshot, and a late view can create one. Dedup is on the
+    * event id (`.distinct` over (t, id, code)), so at-least-once
+    * redelivery is idempotent while two distinct same-type events in the
+    * same microsecond both count — exactly the batch semantics.
+    *
+    * State is BOUNDED when the input carries an event-time watermark:
+    * every event at t ≤ watermark − W is folded into the frozen
+    * [[PatternState]] summary (fold composition is exact — replay(all) ≡
+    * fold(prefix) then replay(suffix)), and only the trailing window
+    * stays materialized. Safe because Spark drops input older than the
+    * watermark before this operator, so nothing can ever land inside the
+    * frozen prefix; an event at t > watermark − W can still interact with
+    * future purchases (t − lastV ≤ W), so it stays pending. Without a
+    * watermark (`getCurrentWatermarkMs` = 0) no pruning happens and the
+    * full-history replay contract holds verbatim. */
   def patternStream(events: Dataset[FunnelEvent]): Dataset[PatternSnap] = {
     import events.sparkSession.implicits._
     val W = graft.queries.Analytics.PatternWindowUs
@@ -404,44 +413,15 @@ object Windows {
       }
   }
 
-  /** Winnowed-fingerprint selection as pure per-row projections — the
-    * STREAMING spelling of TextAnalysis.winnowFps. Same trigram → h32
-    * hash, same SIGMOD-2003 selection rule (min per W-hash window over
-    * starts 1..max(n−W+1, 1), so short docs contribute their single
-    * whole-array window), same distinct — but computed with array HOFs
-    * (`sequence`/`slice`/`array_min`) because window functions cannot run
-    * on an unbounded stream. The per-row compute replaces the batch
-    * variant's narrow (doc_id, pos, hash) shuffle — the right trade
-    * inside a micro-batch, where a stateful shuffle per batch would
-    * dominate the interpreted-HOF cost the batch scaladoc warns about.
-    * Spelling equivalence (HOF == window-function, streaming == batch)
-    * is pinned in StreamingSpec on real corpus documents. */
-  /** Trigram-hash array expression over a normalized-token column —
-    * feed of [[winnowSelect]]. MUST be materialized into its own column
-    * before the window HOF references it (interpreted lambdas have no
-    * CSE; referencing the pipeline inside the transform re-derives it
-    * per window index, the O(n²) trap TextAnalysis.winnowFps documents). */
-  private def trigramHashes(w: org.apache.spark.sql.Column) =
-    transform(graft.core.TextPipeline.trigrams(w),
-      t => graft.core.TextPipeline.h32(t))
-
-  /** The distinct winnow-selected minima of a MATERIALIZED trigram-hash
-    * column — the SIGMOD-2003 selection rule as one expression, shared
-    * by [[winnowFingerprints]] and [[dedupIndexProbeStream]] so the
-    * online spellings cannot drift from each other (and both are pinned
-    * against the batch window spelling in StreamingSpec). */
-  private def winnowSelect(hsCol: org.apache.spark.sql.Column) = {
-    val w = graft.queries.TextAnalysis.WinnowW
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(hsCol) - (w - 1), lit(1))),
-      i => array_min(slice(hsCol, i, lit(w)))))
-  }
-
+  /** Streaming face of the winnowed fingerprints: (doc_id, fingerprint)
+    * per distinct winnow-selected trigram hash of each arriving document.
+    * The selection is `TextAnalysis.winnowRowLocal`, the row-local
+    * spelling of the batch window selection (a window function cannot run
+    * on an unbounded stream); StreamingSpec pins streaming == batch on
+    * real corpus documents. */
   def winnowFingerprints(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-        trigramHashes(graft.core.TextPipeline.normalizedTokens(col("text"))).as("hs"))
-      .select(col("doc_id"), explode(winnowSelect(col("hs"))).as("fingerprint"))
-      .filter(col("fingerprint").isNotNull) // empty doc -> zero fingerprints
+    graft.queries.TextAnalysis.winnowRowLocal(docs,
+      graft.core.TextPipeline.normalizedTokens(col("text")), "doc_id")
 
   /** Online fingerprint novelty: first-seen winnowed fingerprints across
     * all arrived documents — `dropDuplicates` on the fingerprint key, the
@@ -466,18 +446,6 @@ object Windows {
     * pairs, the probing doc for index collisions). */
   case class ProbeHit(new_id: Long, dup_of: Long, kind: String,
                       jaccard: Double)
-
-  /** Merge-intersection count of two ascending-sorted distinct id
-    * arrays — the in-state twin of the `sorted_intersect_count` kernel
-    * the stream-static branch uses. */
-  private def sortedIntersect(a: Seq[Long], b: Seq[Long]): Long = {
-    var i = 0; var j = 0; var c = 0L
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { c += 1L; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1 else j += 1
-    }
-    c
-  }
 
   /** STREAMING probe of the PERSISTED dedup index — the online twin of
     * `Dedup.qDedupPersisted`, the shape a 100 TB ingest actually runs:
@@ -526,17 +494,16 @@ object Windows {
     val T = graft.queries.Dedup.JaccardT
     val idxFps = graft.io.Tables.read(s, s"$indexRoot/postings.parquet")
     val idxSs = graft.io.Tables.read(s, s"$indexRoot/shingles.parquet")
-    val posted = docs
+    val stored = docs
       .select(col("doc_id"), col("lang"),
         graft.core.TextPipeline.normalizedTokens(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id"), col("lang"), trigramHashes(col("w")).as("hsg"),
+      .select(col("doc_id"), col("lang"), col("w"),
         graft.queries.Dedup.storeHash(
           graft.core.TextPipeline.shinglesOf(col("w"))).as("hs"))
-      .select(col("doc_id"), col("lang"), col("hs"),
-        size(col("hs")).cast("long").as("n"),
-        explode(winnowSelect(col("hsg"))).as("fingerprint"))
-      .filter(col("fingerprint").isNotNull)
+    val posted = graft.queries.TextAnalysis
+      .winnowRowLocal(stored, col("w"), "doc_id", "lang", "hs")
+      .withColumn("n", size(col("hs")).cast("long"))
     val idxHits = posted
       .join(idxFps.select(col("lang"), col("fingerprint"),
         col("doc_id").as("dup_of")), Seq("lang", "fingerprint"))
@@ -547,8 +514,8 @@ object Windows {
           .sortedIntersectCount(col("hs"), col("hs_dup"))
           .cast("long").as("inter"), col("n"), col("n_dup"))
       .select(col("new_id"), col("dup_of"), lit("index").as("kind"),
-        (col("inter").cast("double")
-          / (col("n") + col("n_dup") - col("inter"))).as("jaccard"))
+        graft.queries.Dedup.jaccard(col("inter"), col("n"), col("n_dup"))
+          .as("jaccard"))
       .filter(col("jaccard") >= T)
     val batchHits = posted
       .select(col("lang"), col("fingerprint"), col("doc_id"), col("n"),
@@ -581,26 +548,30 @@ object Windows {
       state.remove()
       Iterator.empty
     } else {
-      val known = scala.collection.mutable.ArrayBuffer.empty[ProbePosting]
-      known ++= state.getOption.getOrElse(Seq.empty)
+      // each posting beside its store in the kernel's array form,
+      // converted once per invocation
+      val store = (p: ProbePosting) => ArrayData.toArrayData(p.hs.toArray)
+      val known = scala.collection.mutable.ArrayBuffer.empty[(ProbePosting, ArrayData)]
+      known ++= state.getOption.getOrElse(Seq.empty).map(p => p -> store(p))
       val ids = scala.collection.mutable.HashSet.empty[Long]
-      known.foreach(p => ids += p.doc_id)
+      known.foreach(p => ids += p._1.doc_id)
       val out = Seq.newBuilder[ProbeHit]
       // id order within the micro-batch: emission order is then
       // deterministic, and keep-earlier is by id regardless
       batch.toSeq.sortBy(_.doc_id).foreach { d =>
         if (ids.add(d.doc_id)) { // redelivery: no state, no re-emit
-          known.foreach { e =>
-            val inter = sortedIntersect(d.hs, e.hs)
-            val j = inter.toDouble / (d.n + e.n - inter)
+          val ds = store(d)
+          known.foreach { case (e, es) =>
+            val inter = SortedIntersectCount.mergeCount(ds, es, longs = true)
+            val j = inter.toDouble / (d.n + e.n - inter) // Dedup.jaccard
             if (j >= T)
               out += ProbeHit(math.max(d.doc_id, e.doc_id),
                 math.min(d.doc_id, e.doc_id), "batch", j)
           }
-          known += d
+          known += d -> ds
         }
       }
-      state.update(known.toSeq)
+      state.update(known.map(_._1).toSeq)
       pairTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
       out.result().iterator
     }
@@ -717,9 +688,7 @@ object Windows {
       state.remove()
       AnnTopkSnap(q, kept.map(_._2), kept.map(-_._1), ver)
     } else {
-      val merged = (kept.iterator ++
-        batch.map(c => (c.negq, c.neighbor_id)))
-        .toSeq.distinct.sorted.take(k)
+      val merged = smallestK(kept, batch.map(c => (c.negq, c.neighbor_id)), k)
       state.update((ver + 1, merged))
       queryTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
       AnnTopkSnap(q, merged.map(_._2), merged.map(-_._1), ver + 1)
@@ -762,7 +731,7 @@ object Windows {
         graft.core.TextPipeline.normalizedTokens(col("clean_text")).as("w"))
       .select(col("doc_id"), col("lang"),
         size(col("w")).cast("long").as("nt"),
-        md5(concat_ws(" ", col("w"))).as("fp"))
+        graft.core.TextPipeline.exactFingerprint(col("w")).as("fp"))
       .filter(col("nt") >= p10 && col("nt") <= p90)
       .select(col("fp"), col("doc_id"), col("lang"),
         col("nt").as("n_tokens"),
@@ -804,9 +773,8 @@ object Windows {
         GroupStateTimeout.NoTimeout()) {
         (lang: String, batch: Iterator[SampleDoc],
          state: GroupState[Seq[(Long, Long)]]) =>
-          val merged = (state.getOption.getOrElse(Seq.empty).iterator ++
-            batch.map(d => (d.h, d.doc_id)))
-            .toSeq.distinct.sorted.take(k)
+          val merged = smallestK(state.getOption.getOrElse(Seq.empty),
+            batch.map(d => (d.h, d.doc_id)), k)
           state.update(merged)
           SampleSnap(lang, merged.map(_._2))
       }
@@ -894,8 +862,8 @@ object Windows {
     * event-time window rather than all history. */
   def dedupStream(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        md5(concat_ws(" ",
-          graft.core.TextPipeline.normalizedTokens(col("text"))))
+        graft.core.TextPipeline.exactFingerprint(
+          graft.core.TextPipeline.normalizedTokens(col("text")))
           .as("fingerprint"))
       .dropDuplicates("fingerprint")
 

@@ -277,7 +277,7 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     val W = 4
     def localFps(text: String): Set[Long] = {
-      val w = text.split(" ", -1).toIndexedSeq
+      val w = Option(text).toIndexedSeq.flatMap(_.split(" ", -1))
         .map(_.replaceAll("[^a-zA-Z]", "").toLowerCase).filter(_.nonEmpty)
       val g = w.sliding(3).filter(_.length == 3).map(_.mkString(" "))
         .map(h32local).toVector
@@ -285,20 +285,60 @@ class DedupSimilaritySpec extends SparkSpec {
       else (1 to math.max(g.length - (W - 1), 1))
         .map(i => g.slice(i - 1, i - 1 + W).min).toSet
     }
-    val texts = graft.io.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = TextAnalysis.qFingerprintWinnow(spark, sf).collect()
-      .groupBy(_.getLong(0)).view
-      .mapValues(_.map(_.getLong(1)).toSet).toMap
-    texts.foreach { case (id, text) =>
-      assert(got.getOrElse(id, Set.empty[Long]) == localFps(text),
-        s"winnow mismatch for doc $id")
+    def checkAll(dir: String): Unit = {
+      val texts = graft.io.Tables.documents(spark, dir)
+        .select("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      // both spellings: the batch window and the streaming row-local
+      for ((face, fps) <- Seq(
+          "batch" -> TextAnalysis.qFingerprintWinnow(spark, dir),
+          "stream" -> graft.streaming.Windows.winnowFingerprints(
+            graft.io.Tables.documents(spark, dir)))) {
+        val got = fps.select("doc_id", "fingerprint").collect()
+          .groupBy(_.getLong(0)).view
+          .mapValues(_.map(_.getLong(1)).toSet).toMap
+        texts.foreach { case (id, text) =>
+          assert(got.getOrElse(id, Set.empty[Long]) == localFps(text),
+            s"$face winnow mismatch for doc $id in $dir")
+        }
+      }
     }
+    checkAll(sf)
+    // engineered edge inputs: no trigram at all (NULL, empty,
+    // whitespace-only, punctuation-only, 2 tokens), one trigram (< W),
+    // exactly W and W+1 trigrams (the window-start boundary), and one
+    // ~20k-token document (the O(n²) trap would show as a timeout)
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "eps,", "Zeta!", "eta",
+      "THETA", "iota", "kappa", "lambda", "mu")
+    val huge = Seq.fill(20000)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val edge = Seq(
+      1L -> null, 2L -> "", 3L -> "  \t  \n ", 4L -> "!!! ... ,,; ?",
+      5L -> "two tokens", 6L -> "one trigram here",
+      7L -> (1 to W + 2).map(i => s"w${"x" * i}").mkString(" "),
+      8L -> (1 to W + 3).map(i => s"w${"y" * i}").mkString(" "),
+      9L -> huge)
+    val dir = tempDir("winnowedge")
+    edge.toDF("doc_id", "text").withColumn("lang", lit("en"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    checkAll(dir)
     // (Exact-clone set equality is implied: identical normalized token
     // streams recompute to identical localFps, and every doc just matched
     // its recompute. sf0.001's 500 docs plant no doc%512==511 exact clone,
     // so a direct qDedupExact cross-check would be vacuous here.)
+  }
+
+  test("winnow: the trigram hashes are derived once per document in both spellings") {
+    // row-local: the selection lambda reads the hash array through a
+    // column; inlined, the trigram→h32 pipeline would appear (and run) once
+    // more inside it. Window: only the posexplode may reference it.
+    for (df <- Seq(TextAnalysis.qFingerprintWinnow(spark, sf),
+        graft.streaming.Windows.winnowFingerprints(
+          graft.io.Tables.documents(spark, sf)))) {
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert("h32\\(".r.findAllMatchIn(plan).size == 1, plan)
+    }
   }
 
   test("winnow pair candidates verify to a subset of the exact jaccard pairs; clones are caught") {
@@ -1407,9 +1447,9 @@ class DedupSimilaritySpec extends SparkSpec {
     val e = graft.io.Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    val cents = Similarity.kmeansCentroidsFor(e).collect()
+    val cents = Similarity.kmeansCentroids(e).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val assigned = Similarity.kmeansAssignFor(e).collect()
+    val assigned = Similarity.kmeansAssign(e, Similarity.kmeansCentroids(e)).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
     def d2(v: Array[Double], c: Array[Double]): Double = {
       var acc = 0.0; var i = 0
@@ -1451,7 +1491,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val e = graft.io.Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    val top1 = Similarity.kmeansAssignFor(e).collect()
+    val top1 = Similarity.kmeansAssign(e, Similarity.kmeansCentroids(e)).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     recovered.foreach { case (a, b) =>
       assert(top1(a) != top1(b),

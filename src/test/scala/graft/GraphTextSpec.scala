@@ -796,6 +796,56 @@ class GraphTextSpec extends SparkSpec {
       .toSeq == topAuth)
   }
 
+  /** The pre-round-11 spelling of TextAnalysis.qVocabCoverage — a global
+    * rank window over the full vocabulary — the reference the bounded
+    * TakeOrdered selection is pinned result-identical to. */
+  private def vocabCoverageWindow(d: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wc = graft.core.TextPipeline.words(graft.io.Tables.documents(spark, d), "text")
+      .groupBy("word").agg(count(lit(1)).as("f"))
+    val tot = wc.agg(sum(col("f")).as("total_tokens"))
+    val ranked = wc.withColumn("rank",
+      row_number().over(Window.orderBy(col("f").desc, col("word"))))
+    val spine = spark.range(5).select(expr("shiftleft(1L, cast(id AS int))")
+      .as("k"))
+    ranked.crossJoin(broadcast(spine))
+      .filter(col("rank") <= col("k"))
+      .groupBy("k")
+      .agg(count(lit(1)).as("n_types"), sum(col("f")).as("covered_tokens"))
+      .crossJoin(broadcast(tot))
+      .withColumn("coverage_ppm",
+        when(col("total_tokens") > 0,
+          expr("covered_tokens * 1000000 div total_tokens")))
+      .orderBy("k")
+  }
+
+  /** The pre-round-12 spelling of TextAnalysis.qTailIndex — a global rank
+    * window over the full vocabulary — the reference the bounded
+    * top-(k+1) selection is pinned result-identical to. */
+  private def tailIndexWindow(d: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val qlog = (c: org.apache.spark.sql.Column) =>
+      round(log2(c.cast("double")) * 1e6).cast("long")
+    val ranked = graft.core.TextPipeline.words(graft.io.Tables.documents(spark, d), "text")
+      .groupBy(col("word")).agg(count(lit(1)).as("f"))
+      .withColumn("rank",
+        row_number().over(Window.orderBy(col("f").desc, col("word").asc)))
+      .transform(graft.core.Lineage.cut) // vocabulary-sized; 3 consumers
+    val nv = ranked.agg(max(col("rank")).cast("long").as("n_vocab"))
+    val withK = ranked.crossJoin(broadcast(nv))
+      .withColumn("k", least(lit(TextAnalysis.HillK.toLong), col("n_vocab") - 1))
+    val fref = withK.filter(col("rank") === col("k") + 1)
+      .select(col("f").as("f_ref"))
+    withK.filter(col("rank") <= col("k"))
+      .crossJoin(broadcast(fref))
+      .groupBy(col("n_vocab"), col("k"), col("f_ref"))
+      .agg(sum(qlog(col("f")) - qlog(col("f_ref"))).as("denom_micros"))
+      .select(col("n_vocab"), col("k"), col("f_ref"), col("denom_micros"),
+        when(col("denom_micros") > 0,
+          expr("k * 1000000000000 div denom_micros"))
+          .otherwise(lit(null).cast("long")).as("alpha_log2_micros"))
+  }
+
   test("vocab coverage: bounded TakeOrdered selection == the global rank window, and the bound is in the plan") {
     // the respelling may only change the PLAN (per-partition top-16 merge
     // instead of a single-partition sort of the whole vocabulary) — never
@@ -804,7 +854,7 @@ class GraphTextSpec extends SparkSpec {
     for (d <- Seq(sf, "/root/testdata/sf0.01")) {
       val bounded = TextAnalysis.qVocabCoverage(spark, d)
       assert(bounded.collect().map(_.toString).toSeq ==
-        TextAnalysis.qVocabCoverageWindow(spark, d)
+        vocabCoverageWindow(d)
           .collect().map(_.toString).toSeq, s"diverged at $d")
       assert(bounded.queryExecution.executedPlan.toString
         .contains("TakeOrderedAndProject"),
@@ -820,7 +870,7 @@ class GraphTextSpec extends SparkSpec {
     for (d <- Seq(sf, "/root/testdata/sf0.01")) {
       val bounded = TextAnalysis.qTailIndex(spark, d)
       assert(bounded.collect().map(_.toString).toSeq ==
-        TextAnalysis.qTailIndexWindow(spark, d)
+        tailIndexWindow(d)
           .collect().map(_.toString).toSeq, s"diverged at $d")
       val plan = bounded.queryExecution.executedPlan.toString
       assert(plan.contains("TakeOrderedAndProject"),

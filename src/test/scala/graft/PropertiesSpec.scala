@@ -91,6 +91,35 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
+  test("intersect kernel: generated code == interpreted eval, both element types") {
+    // one merge routine serves both paths; compile the projection directly
+    // (no silent interpreted fallback) and compare it with eval per case
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.DataType
+    import org.apache.spark.unsafe.types.UTF8String
+    def agree(t: DataType): (ArrayData, ArrayData) => Unit = {
+      val e = SortedIntersectCount(BoundReference(0, ArrayType(t), nullable = true),
+        BoundReference(1, ArrayType(t), nullable = true))
+      val proj = GenerateUnsafeProjection.generate(Seq(e))
+      (a, b) => {
+        val row = InternalRow(a, b)
+        assert(proj(row).getInt(0) == e.eval(row))
+      }
+    }
+    val longs = agree(LongType)
+    forAll(longSetGen, longSetGen) { (a, b) =>
+      longs(ArrayData.toArrayData(a.toArray), ArrayData.toArrayData(b.toArray))
+    }
+    val strings = agree(StringType)
+    forAll(setGen, setGen) { (a, b) =>
+      strings(new GenericArrayData(a.map(UTF8String.fromString)),
+        new GenericArrayData(b.map(UTF8String.fromString)))
+    }
+  }
+
   private def simhashEval(hs: Seq[Long]): Long =
     SimHash32(Literal.create(hs, ArrayType(LongType))).eval(null).asInstanceOf[Long]
 

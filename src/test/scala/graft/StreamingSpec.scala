@@ -433,9 +433,10 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("t_winnow").collect()
       .map(_.getAs[Long]("fingerprint"))
     q.stop()
-    // batch truth from the WINDOW-FUNCTION spelling (qFingerprintWinnow),
-    // restricted to the streamed docs — pins streaming==batch AND the
-    // per-row HOF selection == the relational window selection in one shot
+    // batch truth from qFingerprintWinnow, restricted to the streamed
+    // docs — pins streaming == batch AND the two spellings of the one
+    // selection rule: the row-local TextAnalysis.winnowRowLocal (stream)
+    // == the relational window TextAnalysis.winnowFpsOf (batch)
     val ids = docs.map(_._1)
     val batch = graft.queries.TextAnalysis.qFingerprintWinnow(spark, sf)
       .filter(col("doc_id").isin(ids: _*))

@@ -1,6 +1,7 @@
 #!/bin/bash
 # Fast runner: bypass sbt JVM startup; classes must be compiled already
 # (sbt -batch compile). Usage: tools/run.sh <mainClass> [args...]
+# Runs the classes of the checkout this script lives in, whatever the cwd.
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -13,5 +14,5 @@ exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$@"
