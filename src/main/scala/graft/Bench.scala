@@ -62,10 +62,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * single-shot numbers.
   *
   * Both summary lines carry a `"load"` contention stamp (loadavg
-  * before/after, process cpu-vs-wall ratio): round 7 shipped a bench
-  * captured on a busy machine and the artifact had no way to show it.
-  * A run with elevated loadavg and a depressed cpu/wall ratio is
-  * self-identifying as contaminated — rerun it; don't diff it.
+  * before/after, process cpu-vs-wall ratio, and `calib_ms_start`/
+  * `calib_ms_end`, a fixed single-thread loop timed before the session
+  * starts and after it stops): round 7 shipped a bench captured on a
+  * busy machine and the artifact had no way to show it. A run with
+  * elevated loadavg, a depressed cpu/wall ratio or a slow calibration
+  * loop is self-identifying as contaminated — rerun it; don't diff it.
   */
 object Bench {
   /** One timed iteration: seconds to build the frame (`fn(spark, dir)`)
@@ -197,7 +199,21 @@ object Bench {
     }
   }
 
+  /** Milliseconds for perfbench's fixed single-thread integer loop (same
+    * constants as perfbench.Main.calibrationMs): the host's speed at that
+    * moment, for the load stamp. Timed before the session starts and
+    * after it stops, outside every timed interval. */
+  private def calibrationMs(): Double = {
+    val t0 = System.nanoTime()
+    var x = 1L
+    var i = 0
+    while (i < 100000000) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
+    if (x == 0) System.err.println() // keeps the loop from being optimized away
+    (System.nanoTime() - t0) / 1e6
+  }
+
   def main(args: Array[String]): Unit = {
+    val calibStart = calibrationMs()
     // f-interpolators format through the default locale; a comma-decimal
     // locale would make the JSON summary unparseable
     java.util.Locale.setDefault(java.util.Locale.ROOT)
@@ -359,10 +375,14 @@ object Bench {
       }
     val wallSec = (System.nanoTime() - wallStart) / 1e9
     val cpuSec = procCpuSec - cpuStart
+    // the session's threads would slow the end reading (200–220 ms
+    // against 140–155 ms for a fresh JVM right after it exits)
+    spark.stop()
+    val calibEnd = calibrationMs()
     // cpu/wall on an otherwise-idle local[32] heavy suite runs well above
     // 1; a contended run shows elevated loadavg AND a depressed ratio
     val loadStamp =
-      f""""load":{"loadavg_start":$loadStart%.2f,"loadavg_end":$loadAvg%.2f,"proc_cpu_sec":$cpuSec%.1f,"wall_sec":$wallSec%.1f,"cpu_wall_ratio":${if (wallSec > 0) cpuSec / wallSec else -1.0}%.2f}"""
+      f""""load":{"loadavg_start":$loadStart%.2f,"loadavg_end":$loadAvg%.2f,"proc_cpu_sec":$cpuSec%.1f,"wall_sec":$wallSec%.1f,"cpu_wall_ratio":${if (wallSec > 0) cpuSec / wallSec else -1.0}%.2f,"calib_ms_start":$calibStart%.1f,"calib_ms_end":$calibEnd%.1f}"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"failed":$failed,"queries":$qs,"min":$mins,"runs":$raw,"errors":$errs,"retry_errors":$retryErrs,"layers":$layerRecords$partitioned,$loadStamp,"sf":"$sfDir"}"""
     // Full per-query detail is large (tens of KB): persist it to a file and
     // echo it early. The harness that invokes Bench keeps only a short tail
@@ -387,6 +407,5 @@ object Bench {
     val errNames = results.filter(_.err.isDefined).map(r => jstr(r.name))
       .mkString("[", ",", "]")
     println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","iters":$iters,"failed":$failed,"n_queries":${results.size},"detail":$detailJson,"queries":$cqs,"error_queries":$errNames$pSummary,$loadStamp,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

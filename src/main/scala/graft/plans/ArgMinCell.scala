@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * vector through interpreted lambdas and allocates a product array plus
   * a struct per centroid PER ROW — with one allocation-free nested loop
   * in whole-stage codegen. This is the per-row hot path of every Lloyd
-  * iteration and of IVF index construction (Similarity.kmeansAssign).
+  * iteration and of IVF index construction (Similarity's `Lloyd.assign`).
   *
   * Float contract: each distance accumulates (x−y)² left-to-right in
   * element order — bit-identical to the sequential `aggregate` fold it

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.{Lineage, TextPipeline}
 import graft.io.Tables
+import graft.queries.Ingest.erasureSubject
 
 /** M9 — search-ranking, runtime-filter, and segmentation analytics (pure
   * extension surface; the reference has nothing beyond word count,
@@ -729,11 +730,6 @@ object Analytics {
         s"$root/day_registers.parquet")
     }
 
-  /** Erasure-subject predicate for the sketch store — the shared
-    * q_erasure_audit scope ([[Ingest.erasureSubject]]) applied to the
-    * event stream's user dimension. */
-  private def erasedUser(c: Column): Column = Ingest.erasureSubject(c)
-
   /** Writes the erased GENERATION of the register store: per-day HLL
     * registers REBUILT from the surviving events — see
     * [[qHllStoreErase]] for why rebuild (not subtraction) is the only
@@ -742,7 +738,7 @@ object Analytics {
     Tables.store("hllregerase", dir) { root =>
       Tables.write(graft.streaming.Windows.hllDayRegisters(
           Tables.events(s, dir).select(col("ts"), col("user_id"))
-            .filter(!erasedUser(col("user_id")))),
+            .filter(!erasureSubject(col("user_id")))),
         s"$root/day_registers.parquet")
     }
 
@@ -1046,12 +1042,6 @@ object Analytics {
     cmsHeavyHitters(counts, merged)
   }
 
-  /** Erasure-subject predicate for the CMS store — the shared
-    * q_erasure_audit scope on the DOCUMENT key (the takedown/
-    * right-to-be-forgotten unit of a text corpus), as the dedup index
-    * tiers use it. */
-  private def cmsErasedDoc(c: Column): Column = Ingest.erasureSubject(c)
-
   /** The sketch-store erase verb CMS uniquely supports: SUBTRACTION.
     * [[qHllStoreErase]] proves the opposite doctrine for HLL — max-fold
     * registers are not invertible, so HLL erase must REBUILD from
@@ -1080,12 +1070,12 @@ object Analytics {
     val full = Tables.read(s, s"$root/sketch_full.parquet")
     val docs = Tables.documents(s, dir)
     val negated = cmsSketch(
-        cmsKeyCounts(docs.filter(cmsErasedDoc(col("doc_id")))))
+        cmsKeyCounts(docs.filter(erasureSubject(col("doc_id")))))
       .select(col("i"), col("c"), (-col("cnt")).as("cnt"))
     val erased = full.unionByName(negated)
       .groupBy(col("i"), col("c")).agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") =!= 0)
-    val counts = cmsKeyCounts(docs.filter(!cmsErasedDoc(col("doc_id"))))
+    val counts = cmsKeyCounts(docs.filter(!erasureSubject(col("doc_id"))))
     cmsHeavyHitters(counts, erased)
   }
 

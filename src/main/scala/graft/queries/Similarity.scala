@@ -2,30 +2,40 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import graft.core.{Lineage, TextPipeline}
+import graft.functions.VectorFunctions.{adcSum, argMinCell, cosineSim, topkMin}
 import graft.io.{Generation, Tables}
 import graft.queries.Ingest.{erasureSubject, reconsentedSubject}
 
 /** M4b — approximate-nearest-neighbor similarity search over `embeddings`
   * (64-dim float vectors): brute-force cosine top-k as the exactness
-  * baseline, a random-hyperplane LSH bucketed variant, and an IVF-style
-  * coarse-quantizer variant — the three-rung ANN ladder of an embedding
-  * dedup / retrieval pipeline.
+  * baseline, a random-hyperplane LSH bucketed variant, a learned k-means
+  * IVF variant, product quantization (PQ, IVFADC, residual IVFADC) and
+  * the persisted-index lifecycle built on them.
   *
   * The reference has nothing vector-shaped (SURVEY.md §2.2); this tier is
-  * pure extension surface. All vector math is higher-order-function array
-  * arithmetic (`zip_with` + sequential `aggregate` folds) — codegen'd, no
-  * UDFs — and every stochastic input (hyperplane signs) is a compile-time
-  * literal injected into BOTH the Spark plan and the DuckDB oracle, so the
-  * two engines run bit-identical float programs.
+  * pure extension surface. Vector math is either higher-order-function
+  * array arithmetic (`zip_with` + sequential `aggregate` folds, codegen'd,
+  * no UDFs) or one of the native kernels of graft.plans — cosine
+  * (`cosine_sim`), nearest-cell argmin (`argmin_cell`), the ADC fold
+  * (`adc_sum`) and the bounded shortlist (`topk_min`) — which keep the
+  * oracle's sequential fold order. Every stochastic input (hyperplane
+  * signs) is a compile-time literal injected into BOTH the Spark plan and
+  * the DuckDB oracle, so the two engines run bit-identical float programs.
+  *
+  * Each ANN stage is written once and shared by every rung that runs it:
+  * L2 normalization ([[normalized]]), Lloyd training ([[Lloyd]]), PQ
+  * encoding ([[encode]]), the coarse probe order ([[rankCells]]), the ADC
+  * shortlist ([[adcShortlist]]) and the exact top-k tail ([[rankTopK]]).
   *
   * Scale stance (100 TB):
   *  - the query set is small and explicitly `broadcast()` — the corpus never
   *    shuffles for brute force; per-partition candidates then one top-k;
   *  - LSH reduces work by bucketing: corpus shuffles ONCE on the 8-bit
   *    bucket key, queries broadcast; candidate count/query ≈ N/256;
-  *  - IVF does the same with learned-ish coarse cells (per-label centroids
-  *    here; k-means cells in production) and nprobe=2;
+  *  - IVF does the same with learned k-means cells (KCells cells, two
+  *    Lloyd iterations from hash seeds) and nprobe=2;
   *  - ranking ties broken by neighbor id so top-k is total-order stable.
   */
 object Similarity {
@@ -51,18 +61,30 @@ object Similarity {
       }
     }
 
-  /** Vectors as double arrays; queries = the first 10 ids (broadcast side). */
+  /** Vectors as double arrays. */
   private def vecs(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
 
+  /** The query set of every rung: the first 10 vectors as (q_id, q_v). */
+  private def queriesOf(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("v").as("q_v"))
+
+  /** (vec_id, v) with `v` scaled to unit L2 norm — the metric contract of
+    * the PQ rungs (squared-L2 order equals cosine order on unit vectors),
+    * one expression for the corpus store, encodes and query vectors. */
+  private def normalized(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), transform(col("v"), x => x /
+      sqrt(aggregate(transform(col("v"), y => y * y), lit(0.0), (acc, y) => acc + y))).as("v"))
+
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-  /** Fused single-pass native kernel (graft.plans.CosineSimilarity);
-    * accumulation order matches the oracle's sequential list_sum folds. */
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.cosineSim(a, b)
+  /** Squared L2 distance as the sequential left fold of (x−y)² — the
+    * spelling the oracle's `list_sum` shares, so both engines round alike. */
+  private def sqL2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
 
   /** ±1 plane k as an array literal column. */
   private def planeCol(k: Int): Column = array(planes(k).map(lit): _*)
@@ -73,147 +95,164 @@ object Similarity {
       when(dot(v, planeCol(k)) > 0, lit(1L << k)).otherwise(lit(0L)))
       .reduce(_ + _)
 
+  /** Ranks scored pairs (keys..., q_id, neighbor_id, cos_raw): `rank` =
+    * 1..[[TopK]] by (cos_raw DESC, neighbor_id ASC) within each
+    * (keys..., q_id) — the one ranking contract of the exact rungs, the
+    * PQ re-rank and both recall curves (which add their knob as a key). */
+  private def rankTopK(scored: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy((keys :+ "q_id").map(col): _*)
+          .orderBy(col("cos_raw").desc, col("neighbor_id").asc)))
+      .filter(col("rank") <= TopK)
+
+  /** Candidate pairs (keys..., q_id, q_v, vec_id, v) minus self-matches,
+    * scored by `cos` (the full-precision cosine unless a curve slices the
+    * vectors) and ranked by [[rankTopK]]. */
+  private def scoreTopK(cands: DataFrame, keys: Seq[String] = Nil,
+      cos: Column = cosineSim(col("v"), col("q_v"))): DataFrame =
+    rankTopK(cands.filter(col("vec_id") =!= col("q_id"))
+      .select(keys.map(col) :+ col("q_id") :+ col("vec_id").as("neighbor_id")
+        :+ cos.as("cos_raw"): _*), keys)
+
+  /** The output of the top-k rungs: (q_id, rank, neighbor_id, cosine to
+    * 6 dp), ordered by query and rank. */
+  private def topKRows(ranked: DataFrame): DataFrame =
+    ranked.select(col("q_id"), col("rank"), col("neighbor_id"),
+        round(col("cos_raw"), 6).as("cosine"))
+      .orderBy("q_id", "rank")
+
   /** Brute-force exact cosine top-k: the ANN ground truth. The query set is
     * broadcast; ranking is per-query (one shuffle on q_id), ties broken by
     * neighbor id. */
   def qAnnBruteforce(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = vecs(s, dir)
-    val q = broadcast(e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    e.crossJoin(q).filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("v"), col("q_v")).as("cos_raw"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        round(col("cos_raw"), 6).as("cosine"))
-      .orderBy("q_id", "rank")
+    topKRows(scoreTopK(e.crossJoin(broadcast(queriesOf(e)))))
   }
 
   /** LSH-bucketed ANN: corpus bucketed by 8 hyperplane sign bits (one
     * narrow pass), candidates = same-bucket vectors, exact cosine re-rank
     * inside the bucket. ~N/256 of the corpus is touched per query. */
   def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = vecs(s, dir).withColumn("bucket", bucketOf(col("v")))
     val q = broadcast(e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"), col("bucket")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    e.join(q, "bucket").filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("v"), col("q_v")).as("cos_raw"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        round(col("cos_raw"), 6).as("cosine"))
-      .orderBy("q_id", "rank")
+    topKRows(scoreTopK(e.join(q, "bucket")))
   }
 
-  /** IVF ANN with a LEARNED k-means coarse quantizer (KCells cells, 2
-    * Lloyd iterations), deterministic by construction so it stays
-    * oracle-expressible:
-    *  - seeds = the KCells vectors with the smallest portable
-    *    h32(vec_id) — `orderBy.limit` (TakeOrdered, scalable), no global
-    *    window over the corpus;
-    *  - assignment = argmin squared-L2 over the broadcast centroid array
-    *    via `array_min(transform(...))` — ONE narrow codegen pass per
-    *    iteration, no shuffle, no per-vector window; ties break to the
-    *    lowest cell id (lexicographic struct(d2, cell) min);
-    *  - update = per-(cell, dim) mean from EXACT integer sums: components
-    *    quantize to round(x·1e6) BIGINT, so the sum is commutative and
-    *    partition-order-free (the `q_stats` decimal trick, Extras.scala) —
-    *    no collect_list of cell members, aggregate state is one long. The
-    *    ~1e-6 quantization on CENTROIDS is irrelevant to cluster shape;
-    *    final ranking uses full-precision cosine on the raw vectors;
-    *  - a cell that empties mid-iteration drops out in both engines
-    *    (GROUP BY semantics) — assignments just stop picking it.
-    * Probing: nprobe=2 nearest cells by centroid cosine, exact re-rank
-    * within probed cells. At 100 TB the centroid table stays KCells rows
-    * (broadcast), each Lloyd pass is scan + narrow (cell,pos,long) partial
-    * agg, and the index join shuffles on the cell id only. The query stays
-    * a pure declarative plan (the c2 subtree feeds both probes and index —
-    * identical shuffles are AQE-reusable); a production pipeline would
-    * persist the KCells-row centroid table between the training and
-    * indexing phases rather than recompute it. */
-  /** Deterministic hash-picked seeds, cell ids 0..KCells-1 in hash order
-    * (the trailing window sorts only the KCells surviving rows). */
-  private def kmeansSeeds(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** The hash-picked Lloyd seeds: the `k` vectors of (vec_id, v) with the
+    * smallest portable h32(vec_id) — `orderBy.limit` (TakeOrdered,
+    * scalable), no global window over the corpus — as (cell, v), cell ids
+    * 0..k-1 in hash order (the trailing window sorts only the k rows). */
+  private def hashSeeds(e: DataFrame, k: Int): DataFrame =
     e.select(col("vec_id"), col("v"),
         TextPipeline.h32(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(KCells)
+      .orderBy(col("h"), col("vec_id")).limit(k)
       .withColumn("cell",
         (row_number().over(Window.orderBy(col("h"), col("vec_id"))) - 1).cast("long"))
-      .select(col("cell"), col("v").as("cv"))
-  }
+      .select(col("cell"), col("v"))
 
-  /** Nearest-cell assignment: broadcast ALL centroids as one array row,
-    * argmin via the fused `argmin_cell` kernel (graft.plans.ArgMinCell) —
-    * no shuffle, no window, one allocation-free codegen loop per row
-    * (same (d2, cell) lexicographic winner and left-to-right (x−y)² fold
-    * as the composed array_min/transform form it replaced). */
-  private[graft] def kmeansAssign(e: DataFrame, centroids: DataFrame): DataFrame = {
-    val cs = centroids
+  /** Centroids (keys..., cell, cv) as one sorted array-of-structs `cs` per
+    * key group — the broadcast side of every nearest-cell assignment. */
+  private def cellArrays(cents: DataFrame, keys: Seq[String]): DataFrame =
+    cents.groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(col("cell"), col("cv")))).as("cs"))
-    e.crossJoin(broadcast(cs))
-      .select(col("vec_id"), col("v"),
-        graft.functions.VectorFunctions.argMinCell(col("v"), col("cs")).as("cell"))
-  }
 
-  /** Lloyd update: per-(cell, dim) mean from exact quantized-int sums. */
-  private def kmeansUpdate(assigned: DataFrame): DataFrame =
-    assigned.select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(sum(round(col("x") * QScale).cast("long")).as("sq"),
-        count(lit(1)).as("n"))
-      .select(col("cell"), col("pos"),
-        (col("sq").cast("double") / (col("n").cast("double") * QScale)).as("c"))
-      .groupBy(col("cell"))
-      .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
-        t => t.getField("c")).as("cv"))
+  /** One Lloyd k-means family over a group-key list, deterministic by
+    * construction so it stays oracle-expressible. The IVF coarse quantizer
+    * ([[Ivf]]) trains ONE codebook over the full vector `v` (no keys); PQ
+    * ([[Pq]]) trains one per subspace over the subvector `sv` (key `m`).
+    * Centroids are (keys..., cell, cv).
+    *  - assignment = argmin squared-L2 over the broadcast centroid arrays
+    *    via the fused `argmin_cell` kernel (graft.plans.ArgMinCell) — ONE
+    *    narrow codegen pass per iteration, no shuffle, no per-vector
+    *    window; ties break to the lowest cell ((d2, cell) lexicographic
+    *    winner, left-to-right (x−y)² fold, as the oracle's duckAssign);
+    *  - update = per-(keys, cell, dim) mean from EXACT integer sums:
+    *    components quantize to round(x·1e6) BIGINT, so the sum is
+    *    commutative and partition-order-free (the `q_stats` decimal
+    *    trick, Extras.scala) — aggregate state is one long. The ~1e-6
+    *    quantization on CENTROIDS is irrelevant to cluster shape; final
+    *    ranking uses full-precision cosine on the raw vectors;
+    *  - a cell that empties mid-iteration drops out in both engines
+    *    (GROUP BY semantics) — assignments just stop picking it.
+    * At 100 TB the centroid table stays KCells (or M·PqK) rows, broadcast;
+    * each Lloyd pass is scan + narrow (keys, cell, pos, long) partial agg. */
+  private final case class Lloyd(keys: Seq[String], v: String) {
+    private val kc = keys.map(col)
+
+    def assign(e: DataFrame, cents: DataFrame): DataFrame = {
+      val cs = broadcast(cellArrays(cents, keys))
+      (if (keys.isEmpty) e.crossJoin(cs) else e.join(cs, keys))
+        .select(col("vec_id") +: kc :+ col(v)
+          :+ argMinCell(col(v), col("cs")).as("cell"): _*)
+    }
+
+    def update(assigned: DataFrame): DataFrame =
+      assigned.select(kc :+ col("cell") :+ posexplode(col(v)).as(Seq("pos", "x")): _*)
+        .groupBy(kc :+ col("cell") :+ col("pos"): _*)
+        .agg(sum(round(col("x") * QScale).cast("long")).as("sq"),
+          count(lit(1)).as("n"))
+        .select(kc :+ col("cell") :+ col("pos")
+          :+ (col("sq").cast("double") / (col("n").cast("double") * QScale)).as("c"): _*)
+        .groupBy(kc :+ col("cell"): _*)
+        .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
+          t => t.getField("c")).as("cv"))
+
+    /** Two Lloyd iterations over `t` from `seeds`. */
+    def train(t: DataFrame, seeds: DataFrame): DataFrame =
+      update(assign(t, update(assign(t, seeds))))
+  }
+  private val Ivf = Lloyd(Nil, "v")
+  private val Pq = Lloyd(Seq("m"), "sv")
+
+  /** Nearest-cell assignment of (vec_id, v) to the IVF centroids. */
+  private[graft] def kmeansAssign(e: DataFrame, centroids: DataFrame): DataFrame =
+    Ivf.assign(e, centroids)
 
   /** Two Lloyd iterations from the hash seeds: the learned coarse
-    * quantizer shared by [[qAnnIvf]] and [[qDedupSemantic]]. The KCells-row
-    * centroid table is cut (materialized once) so the downstream
-    * plans (which reference it from several branches — probes + index,
-    * both self-join sides) don't re-run the whole Lloyd chain per branch;
-    * a production pipeline persists exactly this table between the
-    * training and indexing phases. */
+    * quantizer shared by [[qAnnIvf]], [[qKmeans]], the semantic-dedup
+    * rungs and the IVFADC index. The KCells-row centroid table is cut
+    * (materialized once) so the downstream plans (which reference it
+    * from several branches — probes + index, both self-join sides) don't
+    * re-run the whole Lloyd chain per branch; a production pipeline
+    * persists exactly this table between the training and indexing
+    * phases. */
   private[graft] def kmeansCentroids(e: DataFrame): DataFrame =
-    kmeansUpdate(kmeansAssign(e, kmeansUpdate(kmeansAssign(e, kmeansSeeds(e)))))
-      // sf0.1 median, cuts on/off: q_kmeans 1.61/1.96 s (wins for 4 of 9 queries)
+    Ivf.train(e, hashSeeds(e, KCells).select(col("cell"), col("v").as("cv")))
+      // sf0.1 median, cuts on/off: q_kmeans 1.61/1.96 s (wins for 4 of 9 queries);
+      // dropped per caller, 5 sf0.1 pairs, the drop won only 2 (q_ann_ivf),
+      // 2 (q_ann_nprobe_curve), 3 (q_ann_recall_eval) and 1 (q_dedup_semantic)
       .transform(Lineage.cut)
 
+  /** Every coarse cell ranked per query: `pr` = 1.. by (centroid cosine
+    * DESC, cell ASC) — the one probe order of the batch IVF rungs. A
+    * probe keeps `pr <= NProbe` ([[probeCells]]); the nprobe curve keeps
+    * them all. `q` is (q_id, q_v); output adds (cell, cv, ccos, pr). The
+    * ranked set is KCells rows per query, broadcast-tiny. */
+  private def rankCells(q: DataFrame, coarse: DataFrame): DataFrame =
+    q.crossJoin(broadcast(coarse))
+      .withColumn("ccos", cosineSim(col("q_v"), col("cv")))
+      .withColumn("pr", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("ccos").desc, col("cell").asc)))
+
+  /** The [[NProbe]] nearest cells of each query. */
+  private def probeCells(q: DataFrame, coarse: DataFrame): DataFrame =
+    rankCells(q, coarse).filter(col("pr") <= NProbe)
+
+  /** IVF ANN with a LEARNED k-means coarse quantizer ([[kmeansCentroids]]:
+    * KCells cells, 2 Lloyd iterations from hash seeds, see [[Lloyd]]).
+    * Probing: nprobe=2 nearest cells by centroid cosine, exact re-rank
+    * within probed cells. At 100 TB the centroid table stays KCells rows
+    * (broadcast) and the index join shuffles on the cell id only. The
+    * query stays a pure declarative plan (the centroid subtree feeds both
+    * probes and index — identical shuffles are AQE-reusable). */
   def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = vecs(s, dir).select(col("vec_id"), col("v"))
     val c2 = kmeansCentroids(e)
-    val index = kmeansAssign(e, c2) // (vec_id, v, cell): the inverted file
-
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val probes = q.crossJoin(broadcast(c2))
-      .select(col("q_id"), col("q_v"), col("cell"),
-        cosine(col("q_v"), col("cv")).as("ccos"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
+    val probes = probeCells(queriesOf(e), c2)
       .select(col("q_id"), col("q_v"), col("cell"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    broadcast(probes).join(index, "cell").filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("v"), col("q_v")).as("cos_raw"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        round(col("cos_raw"), 6).as("cosine"))
-      .orderBy("q_id", "rank")
+    // kmeansAssign(e, c2) is the inverted file (vec_id, v, cell)
+    topKRows(scoreTopK(broadcast(probes).join(kmeansAssign(e, c2), "cell")))
   }
 
   /** Standalone k-means clustering report — the clustering verb
@@ -242,11 +281,8 @@ object Similarity {
   def qKmeans(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir).select(col("vec_id"), col("v"))
     val c2 = kmeansCentroids(e)
-    val d2 = aggregate(
-      zip_with(col("v"), col("cv"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
     val g = kmeansAssign(e, c2).join(broadcast(c2), "cell")
-      .select(col("cell"), round(d2 * QScale).cast("long").as("dq"))
+      .select(col("cell"), round(sqL2(col("v"), col("cv")) * QScale).cast("long").as("dq"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_members"), sum(col("dq")).as("inertia_q"))
     g.join(broadcast(c2), "cell")
@@ -277,7 +313,7 @@ object Similarity {
     val b = idx.select(col("cell"), col("vec_id").as("b_id"), col("v").as("b_v"))
     a.join(b, "cell").filter(col("a_id") < col("b_id"))
       .select(col("cell"), col("a_id"), col("b_id"),
-        cosine(col("a_v"), col("b_v")).as("cos_raw"))
+        cosineSim(col("a_v"), col("b_v")).as("cos_raw"))
       .filter(col("cos_raw") >= 0.4)
       .select(col("cell"), col("a_id"), col("b_id"),
         round(col("cos_raw"), 6).as("cosine"))
@@ -299,20 +335,15 @@ object Similarity {
     * vector rank window are gone: top-2 selection is one narrow codegen
     * pass, ZERO shuffles, like the argmin kernel. At 100 TB this removes
     * a corpus×KCells-row shuffle from the probe-2 index build. */
-  private def kmeansAssignTop2(e: DataFrame, centroids: DataFrame): DataFrame = {
-    val cs = centroids
-      .agg(sort_array(collect_list(struct(col("cell"), col("cv")))).as("cs"))
-    def d2(cv: Column) = aggregate(
-      zip_with(col("v"), cv, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-    e.crossJoin(broadcast(cs))
+  private def kmeansAssignTop2(e: DataFrame, centroids: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cellArrays(centroids, Nil)))
       .select(col("vec_id"), col("v"),
         slice(array_sort(transform(col("cs"), c =>
-          struct(d2(c.getField("cv")).as("d2"), c.getField("cell").as("cell")))),
+          struct(sqL2(col("v"), c.getField("cv")).as("d2"),
+            c.getField("cell").as("cell")))),
           1, 2).as("top2"))
       .select(col("vec_id"), col("v"),
         explode(transform(col("top2"), t => t.getField("cell"))).as("cell"))
-  }
 
   /** The RECALL KNOB [[qDedupSemantic]]'s scaladoc declares out of its
     * own contract, implemented: multi-assignment (nprobe=2 on the index
@@ -350,7 +381,7 @@ object Similarity {
         col("v").as("b_v")), "cell")
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        cosine(col("a_v"), col("b_v")).as("cos_raw"))
+        cosineSim(col("a_v"), col("b_v")).as("cos_raw"))
       .filter(col("cos_raw") >= 0.4)
       .select(col("a_id"), col("b_id"), round(col("cos_raw"), 6).as("cosine"))
       .distinct()
@@ -400,7 +431,7 @@ object Similarity {
       .join(es.select(col("vec_id").as("b_id"), col("v").as("b_v")),
         col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        cosine(col("a_v"), col("b_v")).as("cos"))
+        cosineSim(col("a_v"), col("b_v")).as("cos"))
       .filter(col("cos") >= 0.4)
       .select(col("a_id"), col("b_id"),
         least(floor(col("cos") * 10), lit(9.0)).cast("long").as("band"))
@@ -409,7 +440,7 @@ object Similarity {
       .join(idx.select(col("cell"), col("vec_id").as("b_id"),
         col("v").as("b_v")), "cell")
       .filter(col("a_id") < col("b_id"))
-      .filter(cosine(col("a_v"), col("b_v")) >= 0.4)
+      .filter(cosineSim(col("a_v"), col("b_v")) >= 0.4)
       .select(col("a_id"), col("b_id"), lit(1L).as("c"))
     truth.join(cand, Seq("a_id", "b_id"), "left_outer")
       .groupBy("band")
@@ -468,53 +499,55 @@ object Similarity {
     * threshold. */
   private val PqTrainMin = PqK * 10L
 
-  /** (vec_id, m, sv): each vector split into [[PqM]] contiguous
-    * [[PqSubDim]]-dim subvectors — a narrow per-row explode, no shuffle. */
-  private def pqMelt(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), col("v"),
-        explode(sequence(lit(0L), lit((PqM - 1).toLong))).as("m"))
-      .select(col("vec_id"), col("m"),
-        slice(col("v"), (col("m") * PqSubDim + 1).cast("int"), lit(PqSubDim)).as("sv"))
+  /** (keys..., m, <out>): each vector `v` split into [[PqM]] contiguous
+    * [[PqSubDim]]-dim subvectors — a narrow per-row explode, no shuffle.
+    * The corpus melts as (vec_id, m, sv); [[pqDtabKeyed]] melts its query
+    * or residual rows under their own keys. */
+  private def pqMelt(e: DataFrame, keys: Seq[String] = Seq("vec_id"),
+      out: String = "sv"): DataFrame = {
+    val kc = keys.map(col)
+    e.select(kc :+ col("v")
+        :+ explode(sequence(lit(0L), lit((PqM - 1).toLong))).as("m"): _*)
+      .select(kc :+ col("m")
+        :+ slice(col("v"), (col("m") * PqSubDim + 1).cast("int"), lit(PqSubDim)).as(out): _*)
+  }
 
-  /** Per-subspace seed codebook: the [[PqK]] corpus vectors with the
-    * smallest portable h32(vec_id) (hash order — same deterministic rule
-    * as [[kmeansSeeds]]), each split into its M subvectors. */
-  private def pqSeeds(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val s = e.select(col("vec_id"), col("v"),
-        TextPipeline.h32(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(PqK)
-      .withColumn("cell",
-        (row_number().over(Window.orderBy(col("h"), col("vec_id"))) - 1).cast("long"))
-    pqMelt(s.select(col("cell").as("vec_id"), col("v")))
+  /** Per-subspace PQ codebooks trained on (vec_id, v) — the normalized
+    * vectors or their residuals: the [[PqK]] hash seeds split into their
+    * M subvectors, then two [[Pq]] Lloyd iterations. FAISS-style
+    * train/add split: the Lloyd passes scan only the training set — the
+    * deterministic 10% sample (vec_id % 10 == 0) whenever the measured
+    * count of `e` reaches `trainMin` ([[PqTrainMin]] keeps the sample at
+    * ≥ PqK rows); under it, everything. The full corpus is then
+    * scanned once, to encode. Cuts codebook training from 3 full-corpus
+    * scans to ~0.3. */
+  private def pqCodebook(e: DataFrame, trainMin: Long): DataFrame = {
+    val train = if (e.count() >= trainMin)
+      e.filter(col("vec_id") % 10 === 0) else e
+    val seeds = pqMelt(hashSeeds(train, PqK).select(col("cell").as("vec_id"), col("v")))
       .select(col("m"), col("vec_id").as("cell"), col("sv").as("cv"))
+    Pq.train(pqMelt(train), seeds)
+      // sf0.1 median, cuts on/off: q_ann_pq 4.53/8.06 s, q_ann_index_delta 8.72/21.92 s;
+      // residual codebook: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
+      .transform(Lineage.cut)
   }
 
-  /** Per-(vector, subspace) nearest-codeword assignment: centroids grouped
-    * into one array-of-structs row PER SUBSPACE (broadcast, ≤ PqM rows),
-    * argmin via the fused `argmin_cell` kernel — dimension-agnostic, same
-    * (d2, cell) lexicographic winner and left-to-right (x−y)² fold as the
-    * full-dim IVF assignment. */
-  private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame = {
-    val cs = cents.groupBy(col("m"))
-      .agg(sort_array(collect_list(struct(col("cell"), col("cv")))).as("cs"))
-    sub.join(broadcast(cs), "m")
-      .select(col("vec_id"), col("m"), col("sv"),
-        graft.functions.VectorFunctions.argMinCell(col("sv"), col("cs")).as("cell"))
-  }
+  /** PQ-encodes (vec_id, v) against codebook `cb`: one row per vector,
+    * codes[m] = the nearest codeword of subvector m. */
+  private def encode(e: DataFrame, cb: DataFrame): DataFrame =
+    Pq.assign(pqMelt(e), cb)
+      .groupBy(col("vec_id"))
+      .agg(transform(sort_array(collect_list(struct(col("m"), col("cell")))),
+        t => t.getField("cell")).as("codes"))
 
-  /** Per-(subspace, cell, dim) Lloyd mean from exact quantized-int sums —
-    * [[kmeansUpdate]] with the extra `m` group key. */
-  private def pqUpdate(assigned: DataFrame): DataFrame =
-    assigned.select(col("m"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
-      .groupBy(col("m"), col("cell"), col("pos"))
-      .agg(sum(round(col("x") * QScale).cast("long")).as("sq"),
-        count(lit(1)).as("n"))
-      .select(col("m"), col("cell"), col("pos"),
-        (col("sq").cast("double") / (col("n").cast("double") * QScale)).as("c"))
-      .groupBy(col("m"), col("cell"))
-      .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
-        t => t.getField("c")).as("cv"))
+  /** The inverted PQ file (vec_id, codes, ivf_cell) of (vec_id, v): codes
+    * against `cb`, each row tagged with its nearest `coarse` cell (one
+    * narrow join on vec_id — at scale the encode pass and the assign pass
+    * fuse into one corpus scan). */
+  private def invertedCodes(e: DataFrame, cb: DataFrame,
+      coarse: DataFrame): DataFrame =
+    encode(e, cb).join(kmeansAssign(e, coarse)
+      .select(col("vec_id"), col("cell").as("ivf_cell")), "vec_id")
 
   /** Product-quantization ANN with asymmetric distance computation and
     * exact re-ranking (ADC; Jégou, Douze & Schmid, "Product Quantization
@@ -572,23 +605,26 @@ object Similarity {
   def qAnnPq(s: SparkSession, dir: String): DataFrame =
     qAnnPqImpl(s, dir, PqTrainMin)
 
-  /** The PQ build shared by [[qAnnPq]] and [[qAnnIvfPq]]: `raw` vectors,
-    * the `e` normalized store, the 16 B/vec `codes` table, the `cb`
-    * trained codebook (persisted by [[qAnnPersisted]]'s build step) and
-    * the per-query flattened dense distance tables `dtab`. */
-  private case class PqIndex(raw: DataFrame, e: DataFrame,
-      codes: DataFrame, cb: DataFrame, dtab: DataFrame)
+  /** The PQ build shared by [[qAnnPq]], [[qAnnIvfPq]] and the persisted
+    * index: `raw` vectors, the `e` normalized store and the `cb` trained
+    * codebook. The coarse IVF build (`coarse` centroids, `inv` inverted
+    * file) runs only for the rungs that read it. */
+  private case class PqIndex(raw: DataFrame, e: DataFrame, cb: DataFrame) {
+    // the SAME two-iteration learned k-means as [[qAnnIvf]], trained on
+    // the normalized store so cell geometry and PQ geometry agree
+    lazy val coarse: DataFrame = kmeansCentroids(e)
+    lazy val inv: DataFrame = invertedCodes(e, cb, coarse)
+  }
 
   /** Per-query flattened dense ADC distance tables from a trained
     * codebook — the PROBE-time half of the PQ pipeline, shared by the
     * in-plan builds and the persisted-index probe ([[qAnnPersisted]]) so
-    * the two spellings cannot drift. `qe` is the normalized QUERY vector
-    * relation (vec_id, v); output is one (q_id, tab) row per query.
+    * the two spellings cannot drift. `q` is the normalized query
+    * relation (q_id, q_v); output is one (q_id, tab) row per query.
     * Densification rationale (spine LEFT JOIN, not element_at probes)
     * lives in the [[qAnnPq]] scaladoc. */
-  private def pqDtab(s: SparkSession, qe: DataFrame, cb: DataFrame): DataFrame =
-    pqDtabKeyed(s, qe.select(col("vec_id").as("q_id"), col("v")), cb,
-      Seq("q_id"))
+  private def pqDtab(s: SparkSession, q: DataFrame, cb: DataFrame): DataFrame =
+    pqDtabKeyed(s, q.select(col("q_id"), col("q_v").as("v")), cb, Seq("q_id"))
 
   /** [[pqDtab]] generalized to a composite table key: `qr` holds one
     * residual/query vector `v` per distinct `keys` tuple; output is one
@@ -599,18 +635,9 @@ object Similarity {
   private def pqDtabKeyed(s: SparkSession, qr: DataFrame, cb: DataFrame,
       keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
-    val qsub = qr
-      .select(kc :+ col("v")
-        :+ explode(sequence(lit(0L), lit((PqM - 1).toLong))).as("m"): _*)
-      .select(kc :+ col("m")
-        :+ slice(col("v"), (col("m") * PqSubDim + 1).cast("int"),
-          lit(PqSubDim)).as("q_sv"): _*)
-    val d2 = aggregate(
-      zip_with(col("q_sv"), col("cv"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-    val dt = qsub.join(cb, "m")
+    val dt = pqMelt(qr, keys, "q_sv").join(cb, "m")
       .select(kc :+ col("m") :+ col("cell")
-        :+ round(d2 * QScale).cast("long").as("qd2"): _*)
+        :+ round(sqL2(col("q_sv"), col("cv")) * QScale).cast("long").as("qd2"): _*)
     val spine = s.range(0, PqM.toLong * PqK)
       .select(col("id").cast("long").as("k"))
     qr.select(kc: _*)
@@ -628,8 +655,6 @@ object Similarity {
   private def buildPqIndex(s: SparkSession, dir: String,
       trainMin: Long): PqIndex = {
     val raw = vecs(s, dir).select(col("vec_id"), col("v"))
-    val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
-      lit(0.0), (acc, x) => acc + x))
     // normalized store materialized ONCE: the HOF normalization runs
     // interpreted, and this pipeline consumes the normalized corpus from
     // several branches (training sample, encode pass, query melt) — each
@@ -637,61 +662,44 @@ object Similarity {
     // production pipeline writes normalized embeddings once and serves
     // every index build from that table; the cut is the local
     // stand-in for exactly that.
-    val e = raw.select(col("vec_id"),
-      // sf0.1 median, cuts on/off: q_ann_pq 4.53/8.06 s, q_ann_index_delta 8.72/21.92 s
-      transform(col("v"), x => x / nrm).as("v")).transform(Lineage.cut)
-    // FAISS-style train/add split: Lloyd passes scan only the training
-    // set (10% at scale — measured count decides, like the triangles
-    // gate); the full corpus is scanned once, to encode. Cuts codebook
-    // training from 3 full-corpus scans to ~0.3.
-    val train = if (e.count() >= trainMin)
-      e.filter(col("vec_id") % 10 === 0) else e
-    val tsub = pqMelt(train)
-    val sub = pqMelt(e)
-    val c2 = pqUpdate(pqAssign(tsub, pqUpdate(pqAssign(tsub, pqSeeds(train)))))
+    val e = normalized(raw)
       // sf0.1 median, cuts on/off: q_ann_pq 4.53/8.06 s, q_ann_index_delta 8.72/21.92 s
       .transform(Lineage.cut)
-
-    // compressed store: one row per vector, codes[m] = nearest codeword
-    val codes = pqAssign(sub, c2)
-      .groupBy(col("vec_id"))
-      .agg(transform(sort_array(collect_list(struct(col("m"), col("cell")))),
-        t => t.getField("cell")).as("codes"))
-
-    // per-query distance tables: flattened DENSE (slot m·PqK + cell;
-    // dropped Lloyd cells leave null slots no code ever indexes) — the
-    // adc_sum kernel then scores each corpus row with one
-    // allocation-free codegen loop. Construction shared with the
-    // persisted-index probe (see pqDtab).
-    val dtab = pqDtab(s, e.filter(col("vec_id") < 10), c2)
-    PqIndex(raw, e, codes, c2, dtab)
+    PqIndex(raw, e, pqCodebook(e, trainMin))
   }
+
+  /** The ADC shortlist: candidate code rows joined to their query's
+    * distance table (q_id, vec_id, codes, tab), self-matches dropped,
+    * each scored by the `adc_sum` kernel — approx distance = Σ_m
+    * tab[m·PqK + code_m], one allocation-free codegen loop per row — and
+    * the [[PqShortlist]] nearest per query kept by the bounded two-phase
+    * `topk_min` aggregate (graft.plans.TopKMin): the partial aggregate
+    * reduces each scan partition to ≤ PqShortlist (adc_d2, id) pairs per
+    * query BEFORE the shuffle, and the final merge combines
+    * O(partitions · PqShortlist) pairs — the per-query full-corpus
+    * row_number() window this replaced shipped EVERY corpus row's ADC
+    * score for a query into one reducer partition and sorted N rows to
+    * keep 50 (the round-8 judge's one scale-killer). Selection order is
+    * (adc_d2 ASC, neighbor_id ASC). A NULL adc_d2 — the documented
+    * fail-loud signal for a distance-table construction hole — THROWS
+    * inside the aggregate instead of ranking nulls-first as the nearest
+    * neighbor. Output (q_id, neighbor_id). */
+  private def adcShortlist(cands: DataFrame): DataFrame =
+    cands.filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        adcSum(col("codes"), col("tab"), PqK).as("adc_d2"))
+      .groupBy(col("q_id"))
+      .agg(topkMin(col("adc_d2"), col("neighbor_id"), PqShortlist).as("top"))
+      .select(col("q_id"), explode(col("top").getField("id")).as("neighbor_id"))
 
   private[graft] def qAnnPqImpl(s: SparkSession, dir: String,
       trainMin: Long): DataFrame = {
     val ix = buildPqIndex(s, dir, trainMin)
-
-    // Bounded two-phase top-k (graft.plans.TopKMin): the partial aggregate
-    // reduces each scan partition to ≤ PqShortlist (adc_d2, id) pairs per
-    // query BEFORE the shuffle, and the final merge combines
-    // O(partitions · PqShortlist) pairs — the per-query full-corpus
-    // row_number() window this replaces shipped EVERY corpus row's ADC
-    // score for a query into one reducer partition and sorted N rows to
-    // keep 50 (the round-8 judge's one scale-killer). Selection order
-    // (adc_d2 ASC, neighbor_id ASC) is identical, so results are
-    // unchanged. A NULL adc_d2 — the documented fail-loud signal for a
-    // distance-table construction hole — now THROWS inside the aggregate
-    // instead of ranking nulls-first as the nearest neighbor.
-    val shortlist = ix.codes.crossJoin(broadcast(ix.dtab))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.VectorFunctions.adcSum(
-          col("codes"), col("tab"), PqK).as("adc_d2"))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.VectorFunctions.topkMin(
-        col("adc_d2"), col("neighbor_id"), PqShortlist).as("top"))
-      .select(col("q_id"), explode(col("top").getField("id")).as("neighbor_id"))
-    pqRerank(ix.raw, shortlist)
+    // per-query distance tables: flattened DENSE (slot m·PqK + cell;
+    // dropped Lloyd cells leave null slots no code ever indexes)
+    val dtab = pqDtab(s, queriesOf(ix.e), ix.cb)
+    // the 16 B/vec codes table, every row scored against every query
+    pqRerank(ix.raw, adcShortlist(encode(ix.e, ix.cb).crossJoin(broadcast(dtab))))
   }
 
   /** Metadata-filtered exact vector search (the "filtered ANN" feature
@@ -717,36 +725,24 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         // quantized descending-cosine key for the integer top-k aggregate;
         // exact order is restored by the re-rank below
-        round(-cosine(col("v"), col("q_v")) * 1e12).cast("long").as("negq"))
+        round(-cosineSim(col("v"), col("q_v")) * 1e12).cast("long").as("negq"))
       .groupBy(col("q_id"))
-      .agg(graft.functions.VectorFunctions.topkMin(
-        col("negq"), col("neighbor_id"), PqShortlist).as("top"))
+      .agg(topkMin(col("negq"), col("neighbor_id"), PqShortlist).as("top"))
       .select(col("q_id"), explode(col("top").getField("id")).as("neighbor_id"))
     pqRerank(e.select(col("vec_id"), col("v")), shortlist)
   }
 
   /** Exact re-rank of a (q_id, neighbor_id) shortlist on the RAW vectors:
-    * fused cosine, top-[[TopK]] by (cosine DESC, neighbor ASC) — the
-    * shared final stage of [[qAnnPq]] and [[qAnnIvfPq]]. The window ranks
-    * only the ≤ PqShortlist-deep shortlist per query (broadcast-tiny),
-    * never the corpus. */
-  private def pqRerank(raw: DataFrame, shortlist: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qRaw = raw.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    broadcast(shortlist)
+    * fused cosine, top-[[TopK]] by [[rankTopK]] — the shared final stage
+    * of the PQ rungs and [[qAnnFiltered]]. The window ranks only the
+    * ≤ PqShortlist-deep shortlist per query (broadcast-tiny), never the
+    * corpus. */
+  private def pqRerank(raw: DataFrame, shortlist: DataFrame): DataFrame =
+    topKRows(rankTopK(broadcast(shortlist)
       .join(raw, col("neighbor_id") === col("vec_id"))
-      .join(broadcast(qRaw), "q_id")
+      .join(broadcast(queriesOf(raw)), "q_id")
       .select(col("q_id"), col("neighbor_id"),
-        cosine(col("v"), col("q_v")).as("cos_raw"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        round(col("cos_raw"), 6).as("cosine"))
-      .orderBy("q_id", "rank")
-  }
+        cosineSim(col("v"), col("q_v")).as("cos_raw"))))
 
   /** IVFADC — the composed IVF×PQ index every production vector store
     * actually deploys (FAISS `IVFx,PQy`; Jégou, Douze & Schmid, TPAMI
@@ -781,46 +777,25 @@ object Similarity {
     * branches, mirroring [[qAnnPqImpl]]). */
   private[graft] def qAnnIvfPqImpl(s: SparkSession, dir: String,
       trainMin: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ix = buildPqIndex(s, dir, trainMin)
+    probeIvfPq(s, ix.coarse, ix.cb, ix.inv, ix.raw)
+  }
 
-    // coarse quantizer: the SAME two-iteration learned k-means as
-    // [[qAnnIvf]], here trained on the normalized store so cell geometry
-    // and PQ geometry agree; the inverted file tags each code row with
-    // its cell (one narrow join on vec_id at build time — at scale the
-    // encode pass and the assign pass fuse into one corpus scan).
-    val coarse = kmeansCentroids(ix.e)
-    val cellOf = kmeansAssign(ix.e, coarse)
-      .select(col("vec_id"), col("cell").as("ivf_cell"))
-    val inv = ix.codes.join(cellOf, "vec_id")
-
-    // probes: NProbe nearest coarse cells by centroid cosine — the ranked
-    // set is KCells rows per query, broadcast-tiny
-    val q = ix.e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("ivf_cell").asc)
-    val probes = q.crossJoin(broadcast(coarse))
-      .select(col("q_id"), col("cell").as("ivf_cell"),
-        cosine(col("q_v"), col("cv")).as("ccos"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("ivf_cell"))
-
-    // ADC over the PROBED cells only: the (q_id, ivf_cell) pair list is
-    // broadcast, so cell pruning is a map-side semi-join — each code row
-    // is scored only for the queries probing its cell
-    val shortlist = inv.join(broadcast(probes), "ivf_cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(ix.dtab), "q_id")
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.VectorFunctions.adcSum(
-          col("codes"), col("tab"), PqK).as("adc_d2"))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.VectorFunctions.topkMin(
-        col("adc_d2"), col("neighbor_id"), PqShortlist).as("top"))
-      .select(col("q_id"), explode(col("top").getField("id")).as("neighbor_id"))
-    pqRerank(ix.raw, shortlist)
+  /** The IVFADC probe over (coarse centroids, PQ codebook, inverted codes
+    * (vec_id, codes, ivf_cell), raw vectors): normalize the query vectors
+    * (the corpus normalization is baked into the codes), rank the
+    * [[NProbe]] nearest cells per query, ADC-score ONLY the probed cells'
+    * codes — the (q_id, ivf_cell) pair list is broadcast, so cell pruning
+    * is a map-side semi-join — then shortlist and exact re-rank on `raw`.
+    * One plan for the in-plan [[qAnnIvfPq]] and every persisted
+    * generation ([[probeAnnIndex]]). */
+  private def probeIvfPq(s: SparkSession, coarse: DataFrame, cb: DataFrame,
+      inv: DataFrame, raw: DataFrame): DataFrame = {
+    val q = queriesOf(normalized(raw))
+    val probes = probeCells(q, coarse)
+      .select(col("q_id"), col("cell").as("ivf_cell"))
+    pqRerank(raw, adcShortlist(inv.join(broadcast(probes), "ivf_cell")
+      .join(broadcast(pqDtab(s, q, cb)), "q_id")))
   }
 
   /** Persisted index, one BUILD per (JVM, fixture dir). The build
@@ -834,13 +809,9 @@ object Similarity {
   private[graft] def persistedIndexDir(s: SparkSession, dir: String): String =
     Tables.store("annindex", dir) { root =>
       val ix = buildPqIndex(s, dir, PqTrainMin)
-      val coarse = kmeansCentroids(ix.e)
-      val inv = ix.codes.join(
-        kmeansAssign(ix.e, coarse)
-          .select(col("vec_id"), col("cell").as("ivf_cell")), "vec_id")
-      Tables.write(coarse, s"$root/ivf_centroids.parquet")
+      Tables.write(ix.coarse, s"$root/ivf_centroids.parquet")
       Tables.write(ix.cb, s"$root/pq_codebook.parquet")
-      Tables.write(inv, s"$root/pq_codes.parquet")
+      Tables.write(ix.inv, s"$root/pq_codes.parquet")
     }
 
   /** Probe-only IVFADC over the PERSISTED index — the production query
@@ -876,39 +847,10 @@ object Similarity {
     * needs no predicate — a pruned generation simply has fewer rows. */
   private[graft] def probeAnnIndex(s: SparkSession, dir: String,
       root: String, live: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val gen0 = persistedIndexDir(s, dir)
-    val coarse = Tables.read(s, s"$gen0/ivf_centroids.parquet")
-    val cb = Tables.read(s, s"$gen0/pq_codebook.parquet")
-    val inv = annCodes(s, root)("pq_codes")
-    val raw = vecs(s, dir).select(col("vec_id"), col("v")).filter(live)
-    // normalize the QUERY vectors only (the corpus normalization is baked
-    // into the index) — the expression is bit-identical to the build's
-    val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
-      lit(0.0), (acc, x) => acc + x))
-    val qe = raw.filter(col("vec_id") < 10)
-      .select(col("vec_id"), transform(col("v"), x => x / nrm).as("v"))
-    val dtab = pqDtab(s, qe, cb)
-    val q = qe.select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("ivf_cell").asc)
-    val probes = q.crossJoin(broadcast(coarse))
-      .select(col("q_id"), col("cell").as("ivf_cell"),
-        cosine(col("q_v"), col("cv")).as("ccos"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("ivf_cell"))
-    val shortlist = inv.join(broadcast(probes), "ivf_cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(dtab), "q_id")
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.VectorFunctions.adcSum(
-          col("codes"), col("tab"), PqK).as("adc_d2"))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.VectorFunctions.topkMin(
-        col("adc_d2"), col("neighbor_id"), PqShortlist).as("top"))
-      .select(col("q_id"), explode(col("top").getField("id")).as("neighbor_id"))
-    pqRerank(raw, shortlist)
+    probeIvfPq(s, Tables.read(s, s"$gen0/ivf_centroids.parquet"),
+      Tables.read(s, s"$gen0/pq_codebook.parquet"), annCodes(s, root)("pq_codes"),
+      vecs(s, dir).select(col("vec_id"), col("v")).filter(live))
   }
 
   /** Incremental index ADD — the third verb of the FAISS lifecycle
@@ -953,21 +895,9 @@ object Similarity {
   private def encodeRows(s: SparkSession, dir: String,
       keep: Column): DataFrame = {
     val root = persistedIndexDir(s, dir)
-    val cb = Tables.read(s, s"$root/pq_codebook.parquet")
-    val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
-    val raw = vecs(s, dir).select(col("vec_id"), col("v")).filter(keep)
-    val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
-      lit(0.0), (acc, x) => acc + x))
-    val e = raw.select(col("vec_id"),
-      transform(col("v"), x => x / nrm).as("v"))
-    val codes = pqAssign(pqMelt(e), cb)
-      .groupBy(col("vec_id"))
-      .agg(transform(sort_array(collect_list(struct(col("m"), col("cell")))),
-        t => t.getField("cell")).as("codes"))
-    val cells = kmeansAssign(e, coarse)
-      .select(col("vec_id"), col("cell").as("ivf_cell"))
-    codes.join(cells, "vec_id")
-      .select(col("vec_id"), col("codes"), col("ivf_cell"))
+    invertedCodes(normalized(vecs(s, dir).select(col("vec_id"), col("v")).filter(keep)),
+      Tables.read(s, s"$root/pq_codebook.parquet"),
+      Tables.read(s, s"$root/ivf_centroids.parquet"))
   }
 
   /** The erased GENERATION of the persisted ANN index: gen0's
@@ -1118,15 +1048,14 @@ object Similarity {
     *
     * Shares the PERSISTED coarse centroids ([[persistedIndexDir]]) —
     * residual encoding changes the PQ stage only, never the IVF
-    * geometry. Training is the same count-gated two-Lloyd-round recipe
-    * as [[buildPqIndex]], run over the residual relation; the probe
+    * geometry. Training is the same count-gated [[pqCodebook]] as the
+    * non-residual build, run over the residual relation; the probe
     * computes a distance table PER (query, probed cell) — the query's
     * residual q − c_cell differs per cell, the structural price of
     * `by_residual` (FAISS pays it as the per-list table in
     * `IndexIVFPQ::search`) — and ADC scores stay cross-cell comparable
     * because every table approximates the same ‖q − x‖². Shortlist and
-    * exact re-rank are the shared bounded `topk_min` + [[pqRerank]]
-    * stages.
+    * exact re-rank are the shared [[adcShortlist]] and [[pqRerank]].
     *
     * Scale stance (100 TB): one extra narrow zip_with per corpus row at
     * encode (residual subtraction — no new shuffle; the assign and
@@ -1147,12 +1076,9 @@ object Similarity {
       dir: String): (DataFrame, DataFrame, DataFrame) = {
     val root = persistedIndexDir(s, dir)
     val coarse = Tables.read(s, s"$root/ivf_centroids.parquet")
-    val raw = vecs(s, dir).select(col("vec_id"), col("v"))
-    val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
-      lit(0.0), (acc, x) => acc + x))
-    val e = raw.select(col("vec_id"),
+    val e = normalized(vecs(s, dir).select(col("vec_id"), col("v")))
       // sf0.1 median, cuts on/off: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
-      transform(col("v"), x => x / nrm).as("v")).transform(Lineage.cut)
+      .transform(Lineage.cut)
     // residuals against the assigned (frozen) coarse centroid — consumed
     // by the training sample and the encode pass
     val res = kmeansAssign(e, coarse)
@@ -1161,19 +1087,9 @@ object Similarity {
         zip_with(col("v"), col("cv"), (x, y) => x - y).as("v"))
       // sf0.1 median, cuts on/off: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
       .transform(Lineage.cut)
-    val train = if (res.count() >= PqTrainMin)
-      res.filter(col("vec_id") % 10 === 0) else res
-    val tsub = pqMelt(train.select(col("vec_id"), col("v")))
-    val rcb = pqUpdate(pqAssign(tsub, pqUpdate(pqAssign(tsub,
-        pqSeeds(train.select(col("vec_id"), col("v")))))))
-      // sf0.1 median, cuts on/off: q_ann_ivfpq_residual 6.21/9.98 s (all three cuts)
-      .transform(Lineage.cut)
-    val codes = pqAssign(pqMelt(res.select(col("vec_id"), col("v"))), rcb)
-      .groupBy(col("vec_id"))
-      .agg(transform(sort_array(collect_list(struct(col("m"), col("cell")))),
-        t => t.getField("cell")).as("codes"))
-      .join(res.select(col("vec_id"), col("ivf_cell")), "vec_id")
-    (coarse, rcb, codes)
+    val rv = res.select(col("vec_id"), col("v"))
+    val rcb = pqCodebook(rv, PqTrainMin)
+    (coarse, rcb, encode(rv, rcb).join(res.select(col("vec_id"), col("ivf_cell")), "vec_id"))
   }
 
   /** The residual probe half (shared by the in-plan and persisted
@@ -1183,37 +1099,16 @@ object Similarity {
     * cells' codes, bounded shortlist, exact re-rank. */
   private def probeResidual(s: SparkSession, dir: String, coarse: DataFrame,
       rcb: DataFrame, inv: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val raw = vecs(s, dir).select(col("vec_id"), col("v"))
-    val nrm = sqrt(aggregate(transform(col("v"), x => x * x),
-      lit(0.0), (acc, x) => acc + x))
-    val q = raw.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"),
-        transform(col("v"), x => x / nrm).as("q_v"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("ivf_cell").asc)
-    val probes = q.crossJoin(broadcast(coarse))
-      .select(col("q_id"), col("q_v"), col("cell").as("ivf_cell"),
-        col("cv"), cosine(col("q_v"), col("cv")).as("ccos"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= NProbe)
+    val probes = probeCells(queriesOf(normalized(raw)), coarse)
+      .withColumnRenamed("cell", "ivf_cell")
     // per-(query, probed cell) residual → one distance table EACH
     val qres = probes.select(col("q_id"), col("ivf_cell"),
       zip_with(col("q_v"), col("cv"), (x, y) => x - y).as("v"))
     val dtab = pqDtabKeyed(s, qres, rcb, Seq("q_id", "ivf_cell"))
-    val shortlist = inv
-      .join(broadcast(probes.select(col("q_id"), col("ivf_cell"))),
-        "ivf_cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(dtab), Seq("q_id", "ivf_cell"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.VectorFunctions.adcSum(
-          col("codes"), col("tab"), PqK).as("adc_d2"))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.VectorFunctions.topkMin(
-        col("adc_d2"), col("neighbor_id"), PqShortlist).as("top"))
-      .select(col("q_id"), explode(col("top").getField("id")).as("neighbor_id"))
-    pqRerank(raw, shortlist)
+    pqRerank(raw, adcShortlist(inv
+      .join(broadcast(probes.select(col("q_id"), col("ivf_cell"))), "ivf_cell")
+      .join(broadcast(dtab), Seq("q_id", "ivf_cell"))))
   }
 
   /** Writes the persisted RESIDUAL index: the shared coarse centroids
@@ -1260,9 +1155,7 @@ object Similarity {
     val index = raw.join(
       Tables.read(s, s"$root/pq_codes.parquet")
         .select(col("vec_id"), col("ivf_cell")), "vec_id")
-    val queries = raw.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    (coarse, index, queries)
+    (coarse, index, queriesOf(raw))
   }
 
   /** The BATCH face of the streaming ANN probe
@@ -1323,33 +1216,16 @@ object Similarity {
     * reads). Truth is the declared evaluation cost, shared with
     * q_ann_recall_eval (O(queries · corpus), queries bounded). */
   def qAnnNprobeCurve(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = vecs(s, dir).select(col("vec_id"), col("v"))
     val c2 = kmeansCentroids(e)
-    val index = kmeansAssign(e, c2)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val prAll = q.crossJoin(broadcast(c2))
-      .select(col("q_id"), col("q_v"), col("cell"),
-        cosine(col("q_v"), col("cv")).as("ccos"))
-      .withColumn("pr", row_number().over(wProbe))
     val spine = s.range(4)
       .select(expr("shiftleft(1L, cast(id AS int))").as("nprobe"))
-    val probes = prAll.crossJoin(broadcast(spine))
+    val probes = rankCells(queriesOf(e), c2).crossJoin(broadcast(spine))
       .filter(col("pr") <= col("nprobe"))
       .select(col("nprobe"), col("q_id"), col("q_v"), col("cell"))
-    val wRank = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("cos_raw").desc, col("neighbor_id").asc)
-    val approx = broadcast(probes).join(index, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("nprobe"), col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("v"), col("q_v")).as("cos_raw"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= TopK)
-      .select(col("nprobe"), col("q_id"), col("neighbor_id"),
-        lit(1).as("hit"))
+    val approx = scoreTopK(broadcast(probes).join(kmeansAssign(e, c2), "cell"),
+        Seq("nprobe"))
+      .select(col("nprobe"), col("q_id"), col("neighbor_id"), lit(1).as("hit"))
     val truth = qAnnBruteforce(s, dir).select(col("q_id"), col("neighbor_id"))
     truth.crossJoin(broadcast(spine))
       .join(approx, Seq("nprobe", "q_id", "neighbor_id"), "left_outer")
@@ -1419,21 +1295,12 @@ object Similarity {
     * d = 8 pass READS an 8-dim column, not a slice of 64 — the curve
     * this query produces is how that storage decision gets made. */
   def qAnnDimCurve(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = vecs(s, dir).select(col("vec_id"), col("v"))
-    val q = broadcast(e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v")))
     val spine = s.range(4)
       .select(expr("CAST(8 * shiftleft(1L, CAST(id AS int)) AS int)").as("d"))
-    val w = Window.partitionBy(col("d"), col("q_id"))
-      .orderBy(col("c").desc, col("neighbor_id").asc)
-    val approx = e.crossJoin(q).filter(col("vec_id") =!= col("q_id"))
-      .crossJoin(broadcast(spine))
-      .select(col("d"), col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine(slice(col("v"), lit(1), col("d")),
-          slice(col("q_v"), lit(1), col("d"))).as("c"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    val approx = scoreTopK(
+        e.crossJoin(broadcast(queriesOf(e))).crossJoin(broadcast(spine)), Seq("d"),
+        cosineSim(slice(col("v"), lit(1), col("d")), slice(col("q_v"), lit(1), col("d"))))
       .select(col("d"), col("q_id"), col("neighbor_id"), lit(1).as("hit"))
     qAnnBruteforce(s, dir).select(col("q_id"), col("neighbor_id"))
       .crossJoin(broadcast(spine))
@@ -1518,7 +1385,7 @@ object Similarity {
        |  GROUP BY cell""".stripMargin
 
   /** Per-(vector, subspace) assignment CTE body — the SQL twin of
-    * [[pqAssign]] (same sequential (x−y)² fold, same (d2, cell)
+    * [[Lloyd]]`.assign` for PQ (same sequential (x−y)² fold, same (d2, cell)
     * tie-break). `src` is the melted relation to assign: the training
     * sample during Lloyd passes, the full corpus for encoding. */
   private def duckPqAssign(cents: String, src: String = "sub"): String =
@@ -1530,7 +1397,7 @@ object Similarity {
        |    FROM $src s JOIN $cents c ON s.m = c.m) WHERE r = 1""".stripMargin
 
   /** Per-(subspace, cell, dim) Lloyd-update CTE body — the SQL twin of
-    * [[pqUpdate]] (exact quantized BIGINT sums). */
+    * [[Lloyd]]`.update` for PQ (exact quantized BIGINT sums). */
   private def duckPqUpdate(src: String): String =
     s"""SELECT m, cell, list(c ORDER BY pos) AS cv FROM (
        |    SELECT m, cell, pos,

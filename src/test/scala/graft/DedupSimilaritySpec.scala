@@ -1499,4 +1499,36 @@ class DedupSimilaritySpec extends SparkSpec {
         "should have caught it")
     }
   }
+
+  test("all-identical embeddings mirror: every Similarity query runs; every ANN " +
+      "rung breaks the all-way cosine tie by neighbor id; k-means conserves the corpus") {
+    // sf0.001's 500 embeddings, each replaced by vec 0's: every cosine,
+    // every Lloyd distance and every ADC score ties
+    val d = tempDir("graft_identical_emb")
+    val base = graft.io.Tables.embeddings(spark, sf)
+    base.crossJoin(base.filter(col("vec_id") === 0L).select(col("embedding").as("e0")))
+      .select(col("vec_id"), col("e0").as("embedding"), col("label"))
+      .write.parquet(s"$d/embeddings.parquet")
+    val ids = graft.io.Tables.embeddings(spark, d).select("vec_id").collect()
+      .map(_.getLong(0)).sorted
+    assert(ids.length == 500)
+    Similarity.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
+      withClue(s"$name on the identical mirror: ") {
+        q(spark, d).write.format("noop").mode("overwrite").save()
+      }
+    }
+    // (cos desc, neighbor asc) with every cosine tied: the TopK smallest
+    // ids other than the query, at ranks 1..TopK
+    Seq("q_ann_bruteforce", "q_ann_lsh", "q_ann_ivf", "q_ann_pq", "q_ann_ivfpq",
+        "q_ann_persisted").foreach { name =>
+      val got = Similarity.queries(name)(spark, d).collect()
+        .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id")))
+      val want = (0L until 10L).flatMap(qId =>
+        ids.filter(_ != qId).take(Similarity.TopK).zipWithIndex
+          .map { case (n, i) => (qId, i + 1, n) })
+      assert(got.toSeq == want, s"$name: tie order broken")
+    }
+    val members = Similarity.qKmeans(spark, d).collect().map(_.getLong(1)).sum
+    assert(members == 500L, "k-means lost or duplicated members")
+  }
 }
