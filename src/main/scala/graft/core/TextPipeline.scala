@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   * whole-stage codegen, not a UDF. A word count over [[words]] (group by
   * `word`, count) is rewritten by the optimizer rule
   * graft.plans.FuseTokenCount into one map-side operator, TokenCountsExec,
-  * that runs the same byte loop and counts as it goes.
+  * that runs the same byte loop and counts as it goes. Over a plain
+  * `spark.read.text` scan that operator reads the file splits itself,
+  * cutting lines out of its read buffer, so the word count goes from file
+  * bytes to count table in one pass with no line reader or row between.
   */
 object TextPipeline {
 

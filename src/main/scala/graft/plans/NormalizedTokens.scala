@@ -79,15 +79,18 @@ abstract class TokenSink {
   private[plans] var buf: Array[Byte] = new Array[Byte](32)
 
   /** One non-empty normalized token, held in `buf(0 until len)` and valid
-    * only until this call returns. */
-  def token(buf: Array[Byte], len: Int): Unit
+    * only until this call returns. `key` is the token's letters shifted
+    * into one long, first letter highest: letters are non-zero bytes, so
+    * for `len <= 8` the key alone names the token (`a` is 0x61, `aa`
+    * 0x6161); for longer tokens it holds only the last eight letters. */
+  def token(buf: Array[Byte], len: Int, key: Long): Unit
 }
 
 /** The array form: one `ARRAY<STRING>` per row, one allocation per token. */
 final class TokenArrayBuilder extends TokenSink {
   private val out = new java.util.ArrayList[UTF8String]()
 
-  def token(buf: Array[Byte], len: Int): Unit =
+  def token(buf: Array[Byte], len: Int, key: Long): Unit =
     out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len)))
 
   def toks(s: UTF8String): ArrayData = {
@@ -109,18 +112,20 @@ object NormalizedTokens {
   /** THE tokenizer loop (SURVEY.md §2.3), shared by the array kernel and
     * the fused word-count operator (TokenCountsExec): one pass over the
     * UTF-8 bytes in place (no copy of the line), handing each non-empty
-    * normalized token to `sink`. */
+    * normalized token and its packed key (see [[TokenSink.token]]) to
+    * `sink`. */
   def scan(s: UTF8String, sink: TokenSink): Unit = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
     var buf = sink.buf
     var bl = 0
+    var key = 0L
     var i = 0
     while (i < n) {
       val b = Platform.getByte(base, off + i)
       if (b == 0x20) {
-        if (bl > 0) { sink.token(buf, bl); bl = 0 }
+        if (bl > 0) { sink.token(buf, bl, key); bl = 0; key = 0L }
       } else {
         val c = Letter(b & 0xff)
         if (c != 0) {
@@ -130,11 +135,12 @@ object NormalizedTokens {
           }
           buf(bl) = c
           bl += 1
+          key = (key << 8) | c
         }
       }
       i += 1
     }
-    if (bl > 0) sink.token(buf, bl)
+    if (bl > 0) sink.token(buf, bl, key)
   }
 
   val info: ExpressionInfo =

@@ -22,6 +22,10 @@ import graft.io.Tables
   * the explode-then-count pair with one map-side operator that tokenizes
   * each line in place and emits one `(word, partial count)` row per
   * distinct word; the partial aggregate above it only sums those partials.
+  * Here the text comes from a parquet column, so the operator reads the
+  * scan's rows; over `spark.read.text` (the reference's own input form,
+  * `tools.BaselineScale` and perfbench `wc_text`) it reads the text splits
+  * in place instead, with no line reader and no rows in between.
   * The range-partitioned sort IS the reference's cascade external merge
   * (`maprdeuce.cpp:334-426`), spill-safe at 100 TB (UnsafeExternalSorter),
   * and the map-side combine means shuffle volume is O(distinct words per

@@ -8,11 +8,11 @@ import graft.core.TextPipeline
   * line-oriented text file with >= 16.1M lines and 7,359 distinct words
   * (`/root/reference/README.md:3`, run screenshots; best variant v1_2
   * ≈ 87 s ≈ 12 MB/s on one Windows PC, plan `maprdeuce.cpp:751-895`).
-  * Every other bench artifact in this repo runs the 264-query suite on
+  * Every other bench artifact in this repo runs the 288-query suite on
   * the parquet fixtures — this main measures the BASELINE'S OWN workload
   * at the BASELINE'S OWN scale, so `bench_vs_baseline` is a measured
   * fact instead of an sf0.1 extrapolation. BENCH.json is untouched; the
-  * numbers land in SURVEY §8.14.
+  * numbers land in the committed `BASELINE_SCALE.json`.
   *
   * Workload fidelity:
   *  - input: line-oriented UTF-8 text, >= 16.1M lines, >= 1 GiB (the
